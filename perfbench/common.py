@@ -41,7 +41,6 @@ class Workload:
     name: str
     tables: list[str]   # generated input tables
     scale: float        # input scale factor
-    warm_rounds = 1     # warm-up rounds of one operation per kind
 
     def __init__(self, spark, data_dir: str, run_dir: str, rng):
         self.spark = spark
@@ -61,6 +60,10 @@ class Workload:
 
     def cycle(self, rng) -> list[Op]:
         raise NotImplementedError
+
+    def coverage(self) -> dict:
+        """Counts of what the timed sequence exercised, by name."""
+        return {}
 
     def end_metrics(self) -> dict:
         """Workload-specific end-to-end values: name -> (value, unit)."""

@@ -253,15 +253,19 @@ class OlapMix(Workload):
                   deliver=lambda df: df.collect(),
                   check=lambda rows: spark_rows(holder["df"].columns, rows) == want)
 
-    def warmup_ops(self, rng) -> list[Op]:
-        return ([self._op(kind, pool[0]) for kind, pool in self.pools.items()]
+    def _all_ops(self) -> list[Op]:
+        return ([self._op(kind, p) for kind, pool in self.pools.items() for p in pool]
                 + self.llm.ops())
+
+    def warmup_ops(self, rng) -> list[Op]:
+        """Every operation of the cycle once, so that no timed cycle is
+        the first to plan and compile one of them."""
+        return self._all_ops()
 
     def cycle(self, rng) -> list[Op]:
         """Every (kind, constant) pair and every tier operation once, in
-        seeded order; the warm-up already ran each kind's first constant."""
-        out = [self._op(kind, p) for kind, pool in self.pools.items() for p in pool]
-        out += self.llm.ops()
+        seeded order."""
+        out = self._all_ops()
         return [out[i] for i in rng.permutation(len(out))]
 
     def layer_metrics(self, n_ops: int) -> dict:

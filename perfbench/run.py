@@ -126,23 +126,21 @@ class Runner:
         tr, op_id = self.tracer, len(self.records)
         group = self.probe.start(op_id, op.kind)
         df = result = None
-        ok, action = True, None
+        ok = True
+        deliver = tr.wrap(op.deliver, "action", "deliver") if op.deliver else None
         t0 = time.perf_counter()
         root = tr.begin_op(op_id, op.kind)
         try:
             df = op.build()
-            if op.deliver:
-                action = tr.open("deliver", "action")
-                try:
-                    result = op.deliver(df)
-                finally:
-                    tr.close(action)
+            if deliver:
+                result = deliver(df)
         except Exception:  # noqa: BLE001 - the op failed; keep running
             traceback.print_exc()
             ok = False
         finally:
             tr.end_op(root)
         wall = time.perf_counter() - t0
+        action = tr.last_span(op_id, "deliver")
         self.probe.stop()
         rec = dict(kind=op.kind, category=op.category, wall=wall, ok=ok,
                    result=result, phases={}, shape={}, rows=0, bytes=0)
@@ -302,24 +300,21 @@ def run(workload: str, seed: int, seconds: float, trace: bool, *,
     session_s = time.perf_counter() - t0
     try:
         rng = np.random.default_rng(seed)
-        wl = wl_cls(spark, data_dir, run_dir, rng)
         t0 = time.perf_counter()
+        wl = wl_cls(spark, data_dir, run_dir, rng)
         wl.setup()
         load_s = time.perf_counter() - t0
         if corrupt:
             wl.corrupt()
         warm = Runner()
         t0 = time.perf_counter()
-        for _ in range(wl.warm_rounds):
-            for op in wl.warmup_ops(rng):
-                warm.run(op)
+        for op in wl.warmup_ops(rng):
+            warm.run(op)
         warmup_s = time.perf_counter() - t0
         setup_s = session_s + load_s + warmup_s
         lines.append(f"setup_parts session_s={session_s:.3f} load_expected_s="
                      f"{load_s:.3f} warmup_s={warmup_s:.3f}")
-        lines.append("warmup_wall_by_kind " + json.dumps(
-            {r["kind"]: round(r["wall"], 3) for r in warm.records[:len(warm.records)
-                                                               // wl.warm_rounds]}))
+        lines.append("warmup_wall_by_kind " + json.dumps(_by_kind(warm.records)))
 
         jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
         tracer = None
@@ -353,6 +348,7 @@ def run(workload: str, seed: int, seconds: float, trace: bool, *,
             lines.append(f"{k} {v[0]:.6f} {v[1]}")
         lines.extend(extra_lines(recs))
         lines.append("wall_by_kind " + json.dumps(_by_kind(recs)))
+        lines.append("coverage " + json.dumps(wl.coverage()))
         probe_s = _host_probe(spark, probe_dir)
         from bench import PROBE_ENVELOPE_SEC
 
@@ -373,10 +369,11 @@ def run(workload: str, seed: int, seconds: float, trace: bool, *,
             for k, unit in defaults.items():
                 metrics.setdefault(k, (0.0, unit))
             metrics["host.probe_s"] = (probe_s, "s")
-            # operation time over operation time without span recording
+            # operation time over operation time without the tracing
+            # wrappers' own time (see Tracer.overhead_s)
             walls = sum(r["wall"] for r in recs)
             metrics["trace.overhead_ratio"] = (
-                walls / (walls - tracer.bookkeeping_s), "ratio")
+                walls / (walls - tracer.overhead_s), "ratio")
             # checks: self times add up to each root span, and each root
             # span matches the operation's wall time
             gap = max(abs(sum(r["self"].values()) - r["root"]) for r in recs)

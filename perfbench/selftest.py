@@ -1,6 +1,8 @@
 """Self-test of the benchmark: every workload at sf0.001 with one cycle
 of operations, untraced and traced, must emit every metric that
-BENCHMARK.json names, with its unit, and no failed operation; and a
+BENCHMARK.json names, with its unit, and no failed operation; mvcc_rw
+must read states older than the latest, see non-empty CDC, refresh its
+view incrementally, compact and evict from the snapshot cache; and a
 deliberately corrupted expected result must make failed_ratio > 0.
 
 Run from the root of a checkout (takes a few minutes):
@@ -25,6 +27,9 @@ _ALL = ["latency_p50_s", "latency_p90_s", "peak_rss_mb", "failed_ratio",
 PRINTED = {"olap_mix": _ALL,
            "mvcc_rw": _ALL + ["write_p50_s", "write_p90_s", "read_p50_s",
                               "read_p90_s", "space_amp"]}
+#: coverage counts that must be non-zero in a workload's timed sequence
+COVERED = {"mvcc_rw": ["compactions", "historical_differs", "cdc_nonempty",
+                       "refresh_incremental", "snapshot_evictions"]}
 SCALE = 0.001
 
 
@@ -65,6 +70,9 @@ def main() -> int:
                 expect(printed.get(m) == unit, f"{name}: prints {m} in {unit}")
             for m in PRINTED[name]:
                 expect(m in printed, f"{name}: prints {m}")
+            covered = _coverage(lines)
+            for k in COVERED.get(name, []):
+                expect(covered.get(k, 0) > 0, f"{name}: {k} = {covered.get(k)} > 0")
             expect(res["failed"] == 0 and res["correct"],
                    f"{name}: no failed operation ({res['failed']} of "
                    f"{res['attempted']})")
@@ -82,6 +90,13 @@ def main() -> int:
         R.close_work()
     print(f"\n{len(problems)} problem(s)")
     return 1 if problems else 0
+
+
+def _coverage(lines: list[str]) -> dict:
+    for line in lines:
+        if line.startswith("coverage "):
+            return json.loads(line[len("coverage "):])
+    return {}
 
 
 def _ratio(lines: list[str]) -> str:

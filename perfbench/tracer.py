@@ -38,10 +38,6 @@ LAYERS = {
     "db_spark.llm.similarity": "llm.similarity",
     "db_spark.llm.text": "llm.text",
     "db_spark.llm.corpus": "llm.corpus",
-    "db_spark.llm.pipeline": "llm.other",
-    "db_spark.llm.codecs": "llm.other",
-    "db_spark.llm.jpeg": "llm.other",
-    "db_spark.llm.multimodal": "llm.other",
     "db_spark.sketch": "sketch",
     "db_spark.analytics": "analytics",
 }
@@ -62,7 +58,6 @@ SELF_METRICS = {
     "llm.similarity": "llm.similarity.build_s",
     "llm.text": "llm.text.build_s",
     "llm.corpus": "llm.corpus.build_s",
-    "llm.other": "llm.other.build_s",
     "sketch": "sketch.build_s",
     "analytics": "analytics.build_s",
     "catalyst": "catalyst.action_s",
@@ -92,24 +87,23 @@ class Tracer:
         self._patches: list[tuple] = []
         # perf_counter() + offset = Unix time, for placing JVM timestamps
         self.offset = time.time() - time.perf_counter()
-        self.bookkeeping_s = 0.0  # time spent recording spans
+        #: time operations spent in tracing code: each wrapper from entry
+        #: to exit minus the call it wraps, plus opening and closing the
+        #: operations' root spans
+        self.overhead_s = 0.0
 
     # -- spans --------------------------------------------------------------
     def open(self, name: str, layer: str) -> int:
-        t0 = time.perf_counter()
         sid = len(self.spans)
         parent = self._stack[-1] if self._stack else None
         self.spans.append([sid, parent, name, layer, time.perf_counter(),
                            None, self._op])
         self._stack.append(sid)
-        self.bookkeeping_s += time.perf_counter() - t0
         return sid
 
     def close(self, sid: int) -> None:
-        t0 = time.perf_counter()
-        self.spans[sid][5] = t0
+        self.spans[sid][5] = time.perf_counter()
         self._stack.pop()
-        self.bookkeeping_s += time.perf_counter() - t0
 
     def add(self, parent: int, name: str, layer: str, t0: float,
             t1: float) -> None:
@@ -121,26 +115,43 @@ class Tracer:
                                p[6]])
 
     def begin_op(self, op_id: int, kind: str) -> int:
+        t0 = time.perf_counter()
         self._op = op_id
-        return self.open(kind, "bench")
+        sid = self.open(kind, "bench")
+        self.overhead_s += time.perf_counter() - t0
+        return sid
 
     def end_op(self, root: int) -> None:
+        t0 = time.perf_counter()
         self.close(root)
         self._op = None
+        self.overhead_s += time.perf_counter() - t0
+
+    def last_span(self, op_id: int, name: str) -> int | None:
+        for s in reversed(self.spans):
+            if s[6] == op_id and s[2] == name:
+                return s[0]
+        return None
 
     # -- library wrapping ---------------------------------------------------
-    def _wrap(self, fn, layer: str, name: str):
+    def wrap(self, fn, layer: str, name: str):
+        """``fn`` recording a span per call made while an operation is
+        open."""
         tracer = self
 
         @functools.wraps(fn)
         def traced(*args, **kwargs):
             if tracer._op is None:
                 return fn(*args, **kwargs)
+            t_in = time.perf_counter()
             sid = tracer.open(name, layer)
+            c0 = time.perf_counter()
             try:
                 return fn(*args, **kwargs)
             finally:
+                c1 = time.perf_counter()
                 tracer.close(sid)
+                tracer.overhead_s += time.perf_counter() - t_in - (c1 - c0)
 
         return traced
 
@@ -154,14 +165,14 @@ class Tracer:
                 continue
             name = f"{cls.__name__}.{attr}"
             if isinstance(raw, staticmethod):
-                new = staticmethod(self._wrap(raw.__func__, layer, name))
+                new = staticmethod(self.wrap(raw.__func__, layer, name))
             elif isinstance(raw, classmethod):
-                new = classmethod(self._wrap(raw.__func__, layer, name))
+                new = classmethod(self.wrap(raw.__func__, layer, name))
             elif isinstance(raw, property) and raw.fget is not None:
-                new = property(self._wrap(raw.fget, layer, name),
+                new = property(self.wrap(raw.fget, layer, name),
                                raw.fset, raw.fdel, raw.__doc__)
             elif inspect.isfunction(raw):
-                new = self._wrap(raw, layer, name)
+                new = self.wrap(raw, layer, name)
             else:
                 continue
             self._patch(cls, attr, new)
@@ -182,7 +193,7 @@ class Tracer:
                 if inspect.isclass(obj):
                     self._wrap_class(obj, layer)
                 elif inspect.isfunction(obj):
-                    new = self._wrap(obj, layer, attr)
+                    new = self.wrap(obj, layer, attr)
                     replaced[id(obj)] = new
                     self._patch(mod, attr, new)
         for modname, mod in list(sys.modules.items()):
