@@ -32,39 +32,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_table(spark, sf_dir, name)
 
 
-def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Spread LIGHTWEIGHT key rows across every core before expensive
-    per-row Python work attaches (guide §8: shuffle the proxy, never
-    the payload). Only fires when the scan's file count is below the
-    cluster's defaultParallelism — the testdata tables are 1-10
-    single-row-group files, so a per-row decode stage otherwise runs
-    on 1-10 tasks of a 32-core executor. At scale a table has more
-    splits than cores and this is a NO-OP (a repartition there would
-    REDUCE parallelism). Round-robin repartition is retry-safe
-    (sort-before-repartition is on by default) and the downstream
-    per-row decodes are partition-order-independent, so results are
-    unchanged."""
-    par = spark.sparkContext.defaultParallelism
-    files = df.inputFiles()
-    # inputFiles() is best-effort: non-file-scan plans return [] — treat
-    # that as "unknown parallelism", not "one file", and leave df alone.
-    if 0 < len(files) < par:
-        return df.repartition(par)
-    return df
-
-
-def _lspread(df: DataFrame, *cols) -> DataFrame:
-    """text.spread_scan at the query site: spread a tiny doc scan
-    across cores BEFORE a tokenizer regex + explode feeds a sketch
-    aggregate (r13, guide §2.6) — the regex otherwise runs on the scan's
-    1-2 tasks. Gated exactly like every spread: no-op at scale, no-op on
-    plans that already shuffle. Pass a high-cardinality deterministic
-    key column to skip round-robin's sort-before-repartition pass."""
-    from db_spark.llm.text import spread_scan
-
-    return spread_scan(df, *cols)
-
-
 # ---------------------------------------------------------------------------
 # Core operator queries (SURVEY §2.1)
 # ---------------------------------------------------------------------------
@@ -1419,29 +1386,26 @@ def q_zscore_outliers(spark, sf_dir):
 
 def q_copurchase_pairs(spark, sf_dir):
     """Item co-occurrence (recommender building block): top-20 part
-    pairs by number of orders containing both. The self-join is keyed
-    on l_orderkey, so pair enumeration is quadratic only in ORDER size
-    (~4 lines), never in the catalog; top-k is TakeOrderedAndProject
-    with a total ordering (count desc, then both keys) so the LIMIT
-    boundary is deterministic on any engine."""
+    pairs by number of orders containing both. Pairs are enumerated
+    within each order's basket (analytics.item_pairs), so the work is
+    quadratic only in ORDER size (~4 lines), never in the catalog;
+    top-k is TakeOrderedAndProject with a total ordering (count desc,
+    then both keys) so the LIMIT boundary is deterministic on any
+    engine."""
+    from db_spark.analytics import item_pairs
+
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     # pair generation in-array (r13, guide §2.3 aggregate-before-
     # shuffle): collect each order's basket once (one partial-agg
     # exchange of part ids) and emit the a < b pairs from the array,
     # instead of a basket-keyed self-join that shuffles the table
-    # twice and re-scans it. Identical pair multiset — the nested
-    # transform enumerates exactly the join's (a < b) matches.
+    # twice and re-scans it. collect_list keeps a part repeated within
+    # an order, so the pair multiset is the self-join's.
     basket = li.groupBy("l_orderkey").agg(
         F.collect_list("l_partkey").alias("_ps"))
-    pairs = F.flatten(F.transform(
-        "_ps",
-        lambda x: F.filter(
-            F.transform("_ps", lambda y: F.when(
-                x < y, F.struct(x.alias("part_a"), y.alias("part_b")))),
-            lambda s: s.isNotNull())))
     return (
-        basket.select(F.explode(pairs).alias("_p"))
-        .select("_p.part_a", "_p.part_b")
+        basket.select(F.explode(item_pairs("_ps")).alias("_p"))
+        .select(F.col("_p.a").alias("part_a"), F.col("_p.b").alias("part_b"))
         .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_orders"))
         .orderBy(F.desc("n_orders"), "part_a", "part_b")
@@ -1452,10 +1416,10 @@ def q_copurchase_pairs(spark, sf_dir):
 def q_assoc_rules(spark, sf_dir):
     """Market-basket association rules (db_spark/analytics.py:
     association_rules): support / confidence / lift per directed item
-    pair over orders-as-baskets, pair candidates only from the
-    basket-keyed self-join, min-support pruning before the metric
-    joins, top-50 by (lift desc, antecedent, consequent) — all three
-    metrics one rounded division from integer counts, engine-exact."""
+    pair over orders-as-baskets, pair candidates only from within each
+    basket's item set, min-support pruning before the metric joins,
+    top-50 by (lift desc, antecedent, consequent) — all three metrics
+    one rounded division from integer counts, engine-exact."""
     from db_spark import analytics as lan
 
     li = _t(spark, sf_dir, "lineitem")
@@ -1536,24 +1500,19 @@ def q_triangle_count(spark, sf_dir):
     edges(b,c) forms wedges, closed by a semi-check against edges(a,c)
     — never an all-pairs product; at scale the wedge join is the
     degree-squared term the >= 2 support threshold bounds."""
+    from db_spark.analytics import item_pairs
     from db_spark.llm.dedup import _plan_cache
 
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     # in-array pair generation (see q_copurchase_pairs) + a plan cache
     # on the edge table: the wedge/closure joins read edges THREE ways
-    # and each consumer re-ran the whole basket self-join subtree
+    # and each consumer re-ran the whole basket pair subtree
     # (r13; sf0.1 noop 2.2 -> 0.2 s, identical n_triangles).
     basket = li.groupBy("l_orderkey").agg(
         F.collect_list("l_partkey").alias("_ps"))
-    pairs = F.flatten(F.transform(
-        "_ps",
-        lambda x: F.filter(
-            F.transform("_ps", lambda y: F.when(
-                x < y, F.struct(x.alias("pa"), y.alias("pb")))),
-            lambda s: s.isNotNull())))
     edges = _plan_cache(
-        basket.select(F.explode(pairs).alias("_p"))
-        .select("_p.pa", "_p.pb")
+        basket.select(F.explode(item_pairs("_ps")).alias("_p"))
+        .select(F.col("_p.a").alias("pa"), F.col("_p.b").alias("pb"))
         .groupBy("pa", "pb")
         .agg(F.count(F.lit(1)).alias("_c"))
         .filter(F.col("_c") >= 2)
@@ -2779,7 +2738,7 @@ def q_simhash(spark, sf_dir):
     per token — a second time per row (r12 plan audit; 4.2 s ->
     ~2 s noop at sf0.1)."""
     from db_spark.llm import dedup as ldedup
-    from db_spark.llm.text import stage_expr
+    from db_spark.llm.text import spread_scan, stage_expr
 
     docs = _t(spark, sf_dir, "documents")
     # keyed spread before the fold (r13): map-only 1:1, but the per-row
@@ -2787,7 +2746,8 @@ def q_simhash(spark, sf_dir):
     # the one text shuffle it costs, and the gate makes it a no-op at
     # scale. A/B sf0.1: 1.27 -> 0.30 s, identical rows.
     return stage_expr(
-        _lspread(docs, "doc_id"), ["doc_id"], ldedup.simhash(F.col("text")), "simhash"
+        spread_scan(docs, "doc_id"), ["doc_id"], ldedup.simhash(F.col("text")),
+        "simhash"
     ).filter(F.col("simhash").isNotNull())
 
 
@@ -3876,11 +3836,9 @@ def q_video_features(spark, sf_dir):
         payload.alias("payload"),
         F.lit(None).cast(lmm.MEDIA_SCHEMA["meta"].dataType).alias("meta"),
     )
-    # deliberately NOT _spread: the y4m parse is ~µs per 100-byte
-    # payload, so the extra exchange costs what the parallelism buys
-    # back (A/B r12: 0.81-0.95 s both ways at sf0.1) — contrast
-    # q_mjpeg_features, whose Huffman+IDCT decode is expensive enough
-    # that spreading keys wins ~1.8x
+    # deliberately NOT spread (text.spread_scan): the y4m parse is ~µs
+    # per 100-byte payload, so the extra exchange costs what the
+    # parallelism buys back (A/B r12: 0.81-0.95 s both ways at sf0.1)
     feats = lmm.extract_features(media)
     f = feats["features"]
     return feats.select(
@@ -4016,7 +3974,7 @@ def q_kmv_distinct(spark, sf_dir):
     from db_spark.llm import text as ltext
 
     docs = _t(spark, sf_dir, "documents")
-    tok = _lspread(docs, "doc_id").select(
+    tok = ltext.spread_scan(docs, "doc_id").select(
         "source",
         F.explode(ltext.tokens(ascii_lower(F.col("text")))).alias("_tk"))
     sk = lsk.kmv_sketch(tok, F.col("_tk"), k=64, group_cols=["source"])
@@ -4038,7 +3996,7 @@ def q_kmv_merge(spark, sf_dir):
     from db_spark.llm import text as ltext
 
     docs = _t(spark, sf_dir, "documents")
-    tok = _lspread(docs, "doc_id").select(
+    tok = ltext.spread_scan(docs, "doc_id").select(
         "source", "doc_id",
         F.explode(ltext.tokens(ascii_lower(F.col("text")))).alias("_tk"))
     sa = lsk.kmv_sketch(tok.filter(F.col("doc_id") % 2 == 0),
@@ -4102,7 +4060,7 @@ def q_hll_distinct(spark, sf_dir):
     from db_spark.llm import text as ltext
 
     docs = _t(spark, sf_dir, "documents")
-    tok = _lspread(docs, "doc_id").select(
+    tok = ltext.spread_scan(docs, "doc_id").select(
         "source",
         F.explode(ltext.tokens(ascii_lower(F.col("text")))).alias("_tk"))
     sk = lsk.hll_sketch(tok, F.col("_tk"), p=8, group_cols=["source"])
@@ -4122,7 +4080,7 @@ def q_hll_merge(spark, sf_dir):
     from db_spark.llm import text as ltext
 
     docs = _t(spark, sf_dir, "documents")
-    tok = _lspread(docs, "doc_id").select(
+    tok = ltext.spread_scan(docs, "doc_id").select(
         "source", "doc_id",
         F.explode(ltext.tokens(ascii_lower(F.col("text")))).alias("_tk"))
     sa = lsk.hll_sketch(tok.filter(F.col("doc_id") % 2 == 0),
@@ -4149,7 +4107,7 @@ def q_hll_set_ops(spark, sf_dir):
     from db_spark.llm import text as ltext
 
     docs = _t(spark, sf_dir, "documents")
-    tok = _lspread(docs, "doc_id").select(
+    tok = ltext.spread_scan(docs, "doc_id").select(
         "source", "doc_id",
         F.explode(ltext.tokens(ascii_lower(F.col("text")))).alias("_tk"))
     half = (F.col("doc_id") - F.col("doc_id") % 20) / 20 % 2
@@ -4204,7 +4162,7 @@ def q_cm_heavy_hitters(spark, sf_dir):
     from db_spark.llm import text as ltext
 
     docs = _t(spark, sf_dir, "documents")
-    tok = _lspread(docs, "doc_id").select(
+    tok = ltext.spread_scan(docs, "doc_id").select(
         F.explode(ltext.tokens(ascii_lower(F.col("text")))).alias("_tk"))
     return lsk.cm_heavy_hitters(
         tok, F.col("_tk"), min_count=500, depth=4, width=1024)

@@ -15,7 +15,7 @@ stage is only that stage's event type.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -544,6 +544,23 @@ def time_weighted_avg(
     )
 
 
+def item_pairs(items) -> Column:
+    """Every in-basket item pair as ``array<struct<a, b>>``: one struct
+    per pair of array POSITIONS whose values satisfy ``a < b`` — the
+    exact pair multiset of a basket-keyed self-join on ``a.item <
+    b.item`` over the same rows, enumerated inside the array (work is
+    quadratic in basket size, never in the catalog, and there is no
+    join). Over ``collect_list`` an item repeated in a basket pairs
+    once per occurrence; over ``collect_set`` each distinct pair once.
+    NULL elements never pair; NULL or empty arrays yield no pairs."""
+    return F.flatten(F.transform(
+        items,
+        lambda x: F.filter(
+            F.transform(items, lambda y: F.when(
+                x < y, F.struct(x.alias("a"), y.alias("b")))),
+            lambda s: s.isNotNull())))
+
+
 def association_rules(
     baskets: DataFrame, basket_col: str, item_col: str,
     min_pair_count: int = 2, top_k: int = 50,
@@ -552,11 +569,12 @@ def association_rules(
     — the classic recommender/affinity mining pass, from a plain
     (basket, item) table.
 
-    Candidate pairs come only from the basket-keyed self-join (pair
-    enumeration is quadratic in BASKET size, never in the catalog —
-    same shape as the co-occurrence query), aggregated once per
-    unordered pair and then emitted in BOTH directions a->b / b->a so
-    confidence is per-antecedent. All three metrics derive from integer
+    Candidate pairs come only from within a basket (:func:`item_pairs`
+    over each basket's item SET — enumeration is quadratic in BASKET
+    size, never in the catalog, same shape as the co-occurrence
+    query), aggregated once per unordered pair and then emitted in
+    BOTH directions a->b / b->a so confidence is per-antecedent. All
+    three metrics derive from integer
     counts with one rounded division each, so any engine reproduces
     them bit-for-bit. ``min_pair_count`` prunes the long noise tail
     BEFORE the metric join; the final top-k is a
@@ -568,12 +586,10 @@ def association_rules(
     """
     from db_spark.llm.dedup import _plan_cache
 
-    # one basket-keyed collect_set exchange replaces the old
-    # distinct + basket-keyed self-join (r13, guide §2.3): the basket
-    # table is plan-cached and feeds all three consumers (the eager
-    # basket count, per-item counts, in-array pair generation), and
-    # pair enumeration stays quadratic only in basket size — now
-    # inside one array transform instead of a join
+    # one basket-keyed collect_set exchange (r13, guide §2.3): the
+    # basket table is plan-cached and feeds all three consumers (the
+    # eager basket count, per-item counts, in-array pair generation);
+    # the set dedups an item repeated within a basket
     basket_sets = _plan_cache(
         baskets.select(F.col(basket_col).alias("_b"),
                        F.col(item_col).alias("_i"))
@@ -581,15 +597,9 @@ def association_rules(
     n_baskets = basket_sets.count()
     item_cnt = basket_sets.select(F.explode("_is").alias("_i")).groupBy(
         "_i").agg(F.count(F.lit(1)).cast("long").alias("_ic"))
-    pair_arr = F.flatten(F.transform(
-        "_is",
-        lambda x: F.filter(
-            F.transform("_is", lambda y: F.when(
-                x < y, F.struct(x.alias("_ia"), y.alias("_ib")))),
-            lambda s: s.isNotNull())))
     pairs = (
-        basket_sets.select(F.explode(pair_arr).alias("_p"))
-        .select("_p._ia", "_p._ib")
+        basket_sets.select(F.explode(item_pairs("_is")).alias("_p"))
+        .select(F.col("_p.a").alias("_ia"), F.col("_p.b").alias("_ib"))
         .groupBy("_ia", "_ib")
         .agg(F.count(F.lit(1)).cast("long").alias("_pc"))
         .filter(F.col("_pc") >= min_pair_count)

@@ -35,23 +35,21 @@ KNUTH = 2_654_435_761
 DEFAULT_MAX_SHINGLE_DF = 1000
 DEFAULT_MAX_BUCKET_SIZE = 1000
 
-#: Persisted intermediates reused inside LAZY returned plans (the
-#: grouping tables in simhash_pairs / jaccard_similarity_join) —
-#: checkpoint-backed since r13, see _plan_cache. The builder can't
-#: release them itself — the persisted table must outlive the caller's
-#: materialization of the returned DataFrame — so they register here
-#: and a long-lived session drops the references with
-#: unpersist_plan_caches() once results are consumed (ContextCleaner
-#: then reclaims the blocks on GC). Unreclaimed entries only ever cost
-#: storage, never correctness.
+#: References to the local checkpoints _plan_cache creates (grouping
+#: tables, basket tables, k-means centroids and codebooks) reused
+#: inside LAZY returned plans. The builder can't release them itself —
+#: the persisted table must outlive the caller's materialization of
+#: the returned DataFrame — so they register here and a long-lived
+#: session drops the references with unpersist_plan_caches() once
+#: results are consumed (ContextCleaner then reclaims the blocks on
+#: GC). A registry entry is only a reference: the returned plan keeps
+#: its own, so dropping one never affects correctness.
 _PLAN_CACHES: list[DataFrame] = []
 
-#: Registry cap: each builder call registers 1-4 caches (the k-means
-#: loops register one model-sized table per iteration), so 16 keeps the
-#: last few builder plans alive. Older entries were almost certainly
-#: materialized already; evicting them bounds the registry (and its
-#: pinned storage blocks) in a long-lived session where the caller
-#: never calls unpersist_plan_caches().
+#: Registry cap: each builder call registers 1-4 caches, and the
+#: k-means loops one model-sized table per iteration. Evicting the
+#: oldest entry drops the registry's reference only (no unpersist), so
+#: the cap bounds the list, not what a live plan can read.
 _PLAN_CACHE_CAP = 16
 
 
@@ -87,30 +85,6 @@ def _plan_cache(df: DataFrame) -> DataFrame:
     while len(_PLAN_CACHES) > _PLAN_CACHE_CAP:
         _PLAN_CACHES.pop(0)
     return out
-
-
-def _model_barrier(df: DataFrame) -> DataFrame:
-    """Persist a MODEL-SIZED derived table (centroids, codebooks —
-    n_cells / m x n_codes rows, never corpus-cardinality) AND truncate
-    its logical plan to an RDD scan via ``localCheckpoint(eager=False)``
-    (r13, guide §3.3 plan size / §5 localCheckpoint-to-cut-lineage).
-
-    Where ``_plan_cache`` only dedups execution (the InMemoryRelation
-    still EMBEDS the child plan, so k-means loops still composed
-    exponentially-growing LOGICAL plans — ivfpq_recall's audited plan
-    reached 1444 Exchange refs and planning itself became a cost),
-    the checkpoint makes every downstream reference a LogicalRDD leaf:
-    plans stay round-sized no matter how many rounds or consumers.
-
-    Lazy (eager=False): no job at builder time — the checkpoint
-    computes on first materialization and persists MEMORY_AND_DISK.
-    LogicalRDD has no size statistics, so every consumer must (and
-    does) use an explicit ``F.broadcast`` hint. Cleanup is by GC
-    (ContextCleaner), the accepted lifecycle for model-sized tables;
-    eviction pressure on the _PLAN_CACHES registry no longer affects
-    the loops at all (r13 ADVICE: the cap-overflow replay risk is
-    gone, not resized)."""
-    return df.localCheckpoint(eager=False)
 
 
 def unpersist_plan_caches() -> int:

@@ -131,24 +131,6 @@ def media_stats(df: DataFrame) -> DataFrame:
     )
 
 
-def from_binary_files(spark, path: str, modality: str) -> DataFrame:
-    """Ingest a directory of media files as MEDIA_SCHEMA rows using
-    Spark's binaryFile source (path, modificationTime, length, content)."""
-    raw = spark.read.format("binaryFile").load(path)
-    return raw.select(
-        F.abs(F.xxhash64(F.col("path"))).alias("media_id"),
-        F.lit(modality).alias("modality"),
-        F.col("content").alias("payload"),
-        F.struct(
-            F.lit(None).cast("string").alias("mime"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("long").alias("duration_ms"),
-            F.lit(None).cast("int").alias("sample_rate"),
-        ).alias("meta"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Transform plumbing: resize (images) and frame sampling (video/audio).
 # The byte-level transform is stubbed like decode (codec libs absent);

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from db_spark.llm.dedup import _model_barrier, _plan_cache, h32
+from db_spark.llm.dedup import _plan_cache, h32
 
 #: semantic_dedup only routes a cell through the per-cell GEMM verify
 #: kernel when its EXPECTED size (n / n_cells) is at or under this cap
@@ -187,10 +187,10 @@ def ivf_kmeans_centroids(
     # (cent_i references cent_{i-1} in both the assignment and the
     # update join), so every downstream consumer — semantic_dedup's
     # three v-references, the ivf_topk refine path — replayed the full
-    # chain per reference (r12 cache; r13 _model_barrier so the
-    # LOGICAL plan is cut too, not just the execution — see the
-    # helper's docstring)
-    cent = _model_barrier(
+    # chain per reference (r12 cache; since r13 _plan_cache is a local
+    # checkpoint, so the LOGICAL plan is cut too, not just the
+    # execution — see its docstring)
+    cent = _plan_cache(
         src.orderBy(F.col(id_col)).limit(n_cells)
         .select(F.col(id_col).alias("cell_id"), _dbl(F.col(vec_col)).alias("_cvec"))
     )
@@ -215,7 +215,7 @@ def ivf_kmeans_centroids(
                 "cell_id",
                 F.transform(F.col("_jm"), lambda s: s.getField("_m")).alias("_new"))
         )
-        cent = _model_barrier(
+        cent = _plan_cache(
             # new_cent is <= n_cells rows but sits above an aggregate, so
             # Catalyst has no size estimate and would sort-merge; broadcast
             cent.join(F.broadcast(new_cent), "cell_id", "left")
@@ -585,9 +585,6 @@ def embedding_near_dup_pairs(
     fast = threshold > 0.0 and isinstance(
         id_type, (ByteType, ShortType, IntegerType, LongType))
     if fast:
-        from pyspark.sql import Window
-        from db_spark.llm.dedup import _plan_cache
-
         # Identical-vector grouping (r12 — the jaccard identical-SET
         # grouping discipline applied to embeddings): real corpora are
         # duplicate-saturated, and g byte-identical vectors would send
@@ -1399,7 +1396,7 @@ def _pq_kmeans(comp: DataFrame, seeds: DataFrame, n_iter: int) -> DataFrame:
     # noop: ivfpq_recall 36.2 s -> ~2 s, ivfpq_topk 6.2 s -> ~1.5 s).
     # Caching truncates each round to: one assignment pass over comp +
     # one model-sized update, the inherent Lloyd cost.
-    cent = _model_barrier(
+    cent = _plan_cache(
         comp.join(F.broadcast(seeds), "_vid")
         .select("_j", "_code", "_pos", F.col("_x").alias("_c")))
     for _ in range(n_iter):
@@ -1409,7 +1406,7 @@ def _pq_kmeans(comp: DataFrame, seeds: DataFrame, n_iter: int) -> DataFrame:
             .groupBy("_j", "_code", "_pos")
             .agg(F.expr("SUM(CAST(_x AS DECIMAL(38,0))) div COUNT(*)")
                  .cast("long").alias("_new")))
-        cent = _model_barrier(
+        cent = _plan_cache(
             # means is dim x n_codes rows (model-sized) but sits above
             # an aggregate, so Catalyst has no size estimate and would
             # sort-merge every update round (the ivf_kmeans_centroids
@@ -1956,10 +1953,9 @@ def _ivfpq_parts(
     # the full cell assignment (corpus-cardinality, 2 narrow columns)
     # each feed 2-3 consumers (ccomp + probes + seed anti-join; rcomp +
     # codes) — persist both so the corpus scan + argmax pass runs
-    # once, not per consumer (r12, guide §2.4). centroids is
-    # model-sized, so it gets the plan-truncating barrier (r13);
-    # cells is corpus-cardinality and stays a plain plan cache.
-    centroids = _model_barrier(centroids)
+    # once, not per consumer (r12, guide §2.4); both are local
+    # checkpoints, so every consumer also plans against a leaf (r13).
+    centroids = _plan_cache(centroids)
     cells = _plan_cache(assigned.select(F.col(id_col).alias("_vid"),
                                         "cell_id"))
     comp = _pq_components(corpus, m, id_col, vec_col, scale, clamp, "_vid")

@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from db_spark.functions import ascii_lower
+from db_spark.plans import _analyzed_has_node
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic. Deliberately small + ASCII so the same heuristic is
@@ -38,8 +39,8 @@ def tokens(text: Column) -> Column:
 
 def spread_scan(df: DataFrame, *cols) -> DataFrame:
     """Spread a SMALL file scan across every core before CPU-heavy
-    per-row work (tokenizer regexes, gram hashing) — the mjpeg
-    `_spread` idiom generalized (r13, guide §2.6/§8): the testdata
+    per-row work (tokenizer regexes, gram hashing) — the one spread
+    gate every call site uses (r13, guide §2.6/§8): the testdata
     tables are single-row-group files, so a regex-heavy map stage
     otherwise runs on 1-2 tasks of a 32-core executor, and AQE cannot
     help (there is no exchange to re-plan below the scan). Gated so it
@@ -68,10 +69,8 @@ def spread_scan(df: DataFrame, *cols) -> DataFrame:
         # parallelism already, and respreading would only add an
         # exchange (seen when a sketch builder is fed a post-distinct
         # key table, or a spread scan feeds a second spread call site)
-        plan = df._jdf.queryExecution().analyzed().toString()
-        if any(k in plan for k in (
-                "Repartition", "Aggregate", "Join", "Window",
-                "Deduplicate", "Sort")):
+        if _analyzed_has_node(df, ("Repartition", "Aggregate", "Join",
+                                   "Window", "Deduplicate", "Sort")):
             return df
     except Exception:  # noqa: BLE001 - plan introspection is best-effort
         pass
@@ -111,12 +110,6 @@ def stage_expr(df: DataFrame, keep: list, expr: Column, alias: str) -> DataFrame
 def token_count(text: Column) -> Column:
     """Whitespace word count."""
     return F.size(tokens(text)).cast("long")
-
-
-def bpe_token_count(text: Column) -> Column:
-    """BPE-ish token count: words + numbers + individual symbols — a
-    cheap, deterministic proxy for subword token counts."""
-    return F.size(F.regexp_extract_all(text, F.lit(_BPE_RE), 0)).cast("long")
 
 
 def punct_ratio(text: Column) -> Column:
@@ -238,22 +231,6 @@ def redact_pii(text: Column) -> Column:
     for _, pat, token in PII_PATTERNS:
         out = F.regexp_replace(out, pat, token)
     return out
-
-
-def language_id(text: Column) -> Column:
-    """Stopword-vote language ID over STOPWORDS; ties break by language
-    code order; no votes -> 'und' (undetermined)."""
-    toks = F.transform(tokens(text), lambda t: F.lower(t))
-    scores = {
-        lang: F.size(F.filter(toks, lambda t: t.isin(sw)))
-        for lang, sw in STOPWORDS.items()
-    }
-    best = F.greatest(*scores.values())
-    result = F.lit("und")
-    # iterate in reverse code order so earlier codes win ties
-    for lang in sorted(scores, reverse=True):
-        result = F.when((scores[lang] > 0) & (scores[lang] == best), F.lit(lang)).otherwise(result)
-    return result
 
 
 def chunk_documents(

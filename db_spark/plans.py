@@ -21,6 +21,23 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _analyzed_has_node(df: DataFrame, words) -> bool:
+    """True when any node of the ANALYZED logical plan (subquery plans
+    included) has a ``nodeName()`` containing one of ``words``. Walks
+    the tree node by node, so unlike a substring search of the plan
+    text it cannot match a column name or a literal (a ``Sort_key``
+    column is not a Sort)."""
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if any(w in name for w in words):
+            return True
+        for seq in (node.children(), node.innerChildren()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return False
+
+
 def plan_shape(df: DataFrame) -> dict:
     """Shape counters for a DataFrame's physical plan:
 

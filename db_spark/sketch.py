@@ -28,25 +28,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from db_spark.llm.dedup import h32
+from db_spark.llm.text import spread_scan
 
 _TWO32 = 1 << 32
-
-
-def _spread_value(df: DataFrame, value: Column,
-                  group_cols: list[str]) -> tuple[DataFrame, Column]:
-    """Project the input to just ``group_cols + [value]`` and spread the
-    tiny scan across cores (text.spread_scan — gated: no-op when the
-    plan already has >= defaultParallelism input files, or when the
-    input files are unknowable). Every sketch builder pays 1-4 salted
-    md5 hashes per input row BEFORE its first exchange, so on a
-    one-row-group file the whole hash stream runs on a single task
-    (r13, guide §2.6); the projection keeps the spread's exchange to
-    the key bytes only (§8: shuffle the proxy, not the payload).
-    Returns the spread frame and the column to hash."""
-    from db_spark.llm.text import spread_scan
-
-    base = spread_scan(df.select(*group_cols, value.alias("_sv")), "_sv")
-    return base, F.col("_sv")
 
 
 def kmv_sketch(
@@ -63,7 +47,7 @@ def kmv_sketch(
     value-identical to a single global rank while every window
     partition stays bounded."""
     groups = group_cols or []
-    # no _spread_value here: KMV hashes once per row — the spread's
+    # no spread_scan here: KMV hashes once per row — the spread's
     # exchange costs more than the single-task md5 stream it breaks up
     # (A/B at sf0.1: kmv_set_ops 0.72 -> 1.00 s WITH the spread); the
     # 4-hash-per-row builders (cm, bloom) are where it pays
@@ -220,7 +204,7 @@ def hll_sketch(
     bounded at 2^p rows per group no matter the stream size. NULLs are
     skipped (md5(NULL) is NULL)."""
     groups = group_cols or []
-    # no _spread_value: one hash per row (see kmv_sketch's note;
+    # no spread_scan: one hash per row (see kmv_sketch's note;
     # hll_rolling A/B 0.45 -> 0.73 s WITH the spread)
     m = _hll_m(p)
     tail_bits = 32 - p
@@ -384,7 +368,11 @@ def cm_sketch(
     (md5(NULL) is NULL). Deterministic: salted md5-family cell hashes,
     integer counts."""
     groups = group_cols or []
-    df, value = _spread_value(df, value, groups)
+    # spread the tiny scan across cores (r13, guide §2.6): each of the
+    # depth cells costs a salted md5 per row BEFORE the first exchange;
+    # the projection keeps the spread's exchange to the key bytes (§8)
+    df = spread_scan(df.select(*groups, value.alias("_sv")), "_sv")
+    value = F.col("_sv")
     cells = F.array(*[
         F.struct(F.lit(d).cast("int").alias("_d"),
                  _cm_cell(value, d, width).alias("_w"))
@@ -605,7 +593,9 @@ def bloom_sketch(
     prune a huge probe side before the shuffle — a portable, mergeable
     version of what AQE's runtime bloom pruning does engine-side."""
     groups = group_cols or []
-    df, value = _spread_value(df, value, groups)
+    # spread the tiny scan as cm_sketch does (k md5 hashes per row)
+    df = spread_scan(df.select(*groups, value.alias("_sv")), "_sv")
+    value = F.col("_sv")
     positions = F.array(*[_bloom_pos(value, i, bits) for i in range(k)])
     ex = (
         df.filter(value.isNotNull())

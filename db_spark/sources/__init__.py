@@ -2,8 +2,8 @@
 
 The reference's only source is its own log-file format
 (src/operators/sourcing/table_scan.rs); our engine reads Parquet (the
-log tables in db_spark.table plus external datasets), CSV/JSON/ORC via
-the standard Spark readers, and handles format quirks here.
+log tables in db_spark.table plus external datasets) and ORC, and
+handles format quirks here; CSV/JSON go through ``spark.read`` directly.
 """
 
 from __future__ import annotations
@@ -64,22 +64,6 @@ def _nanos_columns(path: str) -> list[str]:
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet(spark, os.path.join(sf_dir, name + ".parquet"))
-
-
-def read_csv(spark: SparkSession, path: str, schema=None, header: bool = True) -> DataFrame:
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)
-
-
-def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
 
 
 def write_bucketed(

@@ -400,6 +400,47 @@ def test_time_weighted_avg_tie_deterministic(spark):
     assert outs == {(2, 10, 8.0)}
 
 
+def _basket_rows(spark):
+    # basket 1 repeats item 2, basket 2 holds one item, basket 3 none
+    # (its only row is a NULL item), basket 4 is unsorted
+    rows = [(1, 1), (1, 2), (1, 2), (1, 3), (2, 5), (3, None),
+            (4, 3), (4, 1), (4, 2)]
+    return spark.createDataFrame(rows, "basket long, item long")
+
+
+def _pairs_via_array(baskets, collect):
+    arr = baskets.groupBy("basket").agg(collect("item").alias("_is"))
+    return sorted(
+        tuple(r) for r in
+        arr.select("basket", F.explode(analytics.item_pairs("_is")).alias("p"))
+        .select("basket", "p.a", "p.b").collect())
+
+
+def _pairs_via_join(baskets):
+    a = baskets.select("basket", F.col("item").alias("a"))
+    b = baskets.select(F.col("basket").alias("_bb"), F.col("item").alias("b"))
+    return sorted(
+        tuple(r) for r in
+        a.join(b, (F.col("basket") == F.col("_bb")) & (F.col("a") < F.col("b")))
+        .select("basket", "a", "b").collect())
+
+
+def test_item_pairs_list_matches_basket_self_join_multiset(spark):
+    rows = _basket_rows(spark)
+    got = _pairs_via_array(rows, F.collect_list)
+    assert got == _pairs_via_join(rows)
+    # the repeated item pairs once per occurrence
+    assert got.count((1, 1, 2)) == 2 and got.count((1, 2, 3)) == 2
+    assert not [p for p in got if p[0] in (2, 3)]
+
+
+def test_item_pairs_set_matches_distinct_self_join(spark):
+    rows = _basket_rows(spark)
+    got = _pairs_via_array(rows, F.collect_set)
+    assert got == _pairs_via_join(rows.distinct())
+    assert got.count((1, 1, 2)) == 1
+
+
 def test_association_rules_metrics(spark):
     from db_spark.analytics import association_rules
 

@@ -169,6 +169,23 @@ def test_eq_values_reference_float_semantics():
     assert eq_values(3, 3) and not eq_values("a", "b")
 
 
+def test_eps_eq_reference_float_semantics(spark):
+    """The Column form of eq_values' float rule: NaN == NaN, |a-b| <
+    eps, and NULL stays NULL like any Spark comparison."""
+    from db_spark.functions import eps_eq
+
+    nan = float("nan")
+    rows = [(nan, nan, True), (1.0, 1.0 + 5e-7, True),
+            (1.0, 1.0 + 2e-6, False), (nan, 1.0, False),
+            (1.0, nan, False), (0.0, -0.0, True), (None, 1.0, None)]
+    df = spark.createDataFrame(rows, "a double, b double, want boolean")
+    got = df.select(eps_eq(F.col("a"), F.col("b")).alias("eq"),
+                    eps_eq(F.col("a"), F.col("b"), eps=1e-5).alias("loose"),
+                    "want").collect()
+    assert [r.eq for r in got] == [w for _, _, w in rows]
+    assert got[2].loose  # 2e-6 apart is equal at eps=1e-5
+
+
 def test_pivot(people):
     got = Q(people).pivot(["active"], "age", [12, 34, 51], F.count(F.lit(1))).collect()
     by_active = {r["active"]: r for r in got}
