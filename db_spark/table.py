@@ -50,6 +50,51 @@ _META_FIELDS = [
 _META_NAMES = [f.name for f in _META_FIELDS]
 
 
+def _merge_schema(base: T.StructType, extra: T.StructType) -> T.StructType | None:
+    """Spark's ``mergeSchema`` rule for the log's flat schemas: the union
+    of column names, ``base``'s columns first and new ones appended, all
+    nullable (file-source reads are). ``None`` when a shared column
+    changes type — only Spark's own inference can say how (or whether)
+    that merges."""
+    fields = {f.name: f for f in base.fields}
+    for f in extra.fields:
+        if f.name not in fields:
+            fields[f.name] = f
+        elif fields[f.name].dataType != f.dataType:
+            return None
+    return T.StructType([T.StructField(f.name, f.dataType, True, f.metadata)
+                         for f in fields.values()])
+
+
+def _batch_range(md) -> tuple[int | None, int | None]:
+    """``_batch`` (min, max) of a parquet file from its footer's row-group
+    statistics; (None, None) for an empty file, or when a non-empty row
+    group has none."""
+    lo = hi = None
+    for i in range(md.num_row_groups):
+        rg = md.row_group(i)
+        if rg.num_rows == 0:
+            continue
+        st = next((rg.column(j).statistics for j in range(rg.num_columns)
+                   if rg.column(j).path_in_schema == "_batch"), None)
+        if st is None or not st.has_min_max:
+            return None, None
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    return lo, hi
+
+
+def _remove_segment(path: str) -> None:
+    """Delete a log file and the ``.<name>.crc`` checksum sibling Hadoop
+    writes next to every Spark-written file."""
+    os.remove(path)
+    head, name = os.path.split(path)
+    try:
+        os.remove(os.path.join(head, f".{name}.crc"))
+    except FileNotFoundError:
+        pass
+
+
 class SchemaError(Exception):
     """Batch shape mismatch vs the collection's live schema
     (reference: src/collection/mod.rs:57)."""
@@ -193,6 +238,15 @@ class Collection:
         # with the snapshot cache so statistics()/maybe_compact() after
         # the first call cost zero Spark jobs until the next write.
         self._live_count: int | None = None
+        # Log metadata kept on the driver (reference: per-log-file
+        # statistics, collection_statistics.rs:4-24). The log schema is
+        # keyed by the set of log file names it was derived from; any
+        # file this instance did not write changes the set and forces
+        # one re-inference. Footers — (num_rows, _batch min, _batch max,
+        # column names) — are keyed by file name: log files are
+        # immutable, a rewrite always lands under a fresh name.
+        self._schema_cache: tuple[frozenset[str], T.StructType] | None = None
+        self._footer_cache: dict[str, tuple] = {}
         # Writer lease (multi-process single-writer enforcement): each
         # instance has a unique token; a lock file serializes write ops
         # and a generation file records the last holder so a writer that
@@ -204,29 +258,92 @@ class Collection:
         os.makedirs(self.path, exist_ok=True)
 
     # -- schema -------------------------------------------------------------
+    def _log_files(self) -> list[str]:
+        """Names of the log's parquet files. Hidden names (``.``/``_``
+        prefix) are skipped exactly as Spark's file listing skips them:
+        in-flight marker temp files and ``.crc`` siblings never count."""
+        try:
+            names = os.listdir(self.log_path)
+        except FileNotFoundError:
+            return []
+        return sorted(n for n in names
+                      if n.endswith(".parquet") and n[0] not in "._")
+
     def _log_exists(self) -> bool:
-        return os.path.isdir(self.log_path) and any(
-            f.endswith(".parquet") for f in os.listdir(self.log_path)
-        )
+        return bool(self._log_files())
+
+    def _log_schema(self) -> T.StructType | None:
+        """The log's merged schema, None before the first write.
+
+        Log files legitimately differ in shape — commit markers carry
+        only the metadata columns, a tombstone written before the first
+        upsert has no payload columns (tombstones match any shape,
+        reference log_entry.rs:126-141), evolved batches add columns. The
+        union of the per-file schemas is inferred with ``mergeSchema``
+        (a Spark job) only when the log holds a file this instance did
+        not write; its own appends fold their schema in on the driver
+        (``_note_own_write``)."""
+        files = frozenset(self._log_files())
+        if not files:
+            return None
+        if self._schema_cache is None or self._schema_cache[0] != files:
+            inferred = (self.spark.read.option("mergeSchema", "true")
+                        .parquet(self.log_path).schema)
+            self._schema_cache = (files, inferred)
+        return self._schema_cache[1]
+
+    def _note_own_write(self, before: frozenset[str],
+                        schema: T.StructType) -> None:
+        """Fold an append of ``schema``-shaped files into the schema
+        cache without re-inferring. ``before`` is the file set listed
+        just before the write (under the writer lease, so every new name
+        is this write's). A cache that was already stale stays stale —
+        the next read re-infers."""
+        after = frozenset(self._log_files())
+        if after == before:
+            return  # nothing landed: the schema is unchanged
+        if not before:
+            base = T.StructType([])
+        elif self._schema_cache is not None and self._schema_cache[0] == before:
+            base = self._schema_cache[1]
+        else:
+            return
+        merged = _merge_schema(base, schema)
+        self._schema_cache = None if merged is None else (after, merged)
 
     def _read_log(self) -> DataFrame | None:
-        if not self._log_exists():
+        """The whole log as one DataFrame, columns resolved by name over
+        the cached merged schema (missing columns read as NULL); None
+        before the first write. Zero Spark jobs while the cache holds."""
+        schema = self._log_schema()
+        if schema is None:
             return None
-        # mergeSchema: log files can legitimately differ in shape — a
-        # tombstone written before the first upsert has no payload
-        # columns at all (tombstones match any shape, reference
-        # log_entry.rs:126-141). Merging unions the per-file schemas and
-        # reads missing columns as NULL; without it schema inference
-        # picks an arbitrary file and payload columns can vanish. Cost
-        # is a footer read per file at planning time — bounded by
-        # compaction, which normalizes every row to the full shape.
-        return self.spark.read.option("mergeSchema", "true").parquet(self.log_path)
+        return self.spark.read.schema(schema).parquet(self.log_path)
+
+    def _footers(self) -> dict[str, tuple]:
+        """``name -> (num_rows, _batch min, _batch max, column names)``
+        for every log file, from parquet footers (driver-side metadata
+        reads, zero Spark jobs; each file's footer is read once per
+        instance). min/max are None for an empty file, or when its
+        writer kept no ``_batch`` statistics."""
+        import pyarrow.parquet as pq
+
+        footers = {}
+        for name in self._log_files():
+            hit = self._footer_cache.get(name)
+            if hit is None:
+                md = pq.read_metadata(os.path.join(self.log_path, name))
+                hit = (md.num_rows, *_batch_range(md),
+                       tuple(md.schema.to_arrow_schema().names))
+            footers[name] = hit
+        self._footer_cache = footers  # drops files that left the log
+        return footers
 
     def payload_schema(self) -> T.StructType | None:
-        log = self._read_log()
-        if log is None:
+        schema = self._log_schema()
+        if schema is None:
             return self._declared_schema
-        return T.StructType([f for f in log.schema.fields if f.name not in _META_NAMES])
+        return T.StructType([f for f in schema.fields if f.name not in _META_NAMES])
 
     def _check_shape(self, incoming: T.StructType, evolve: bool = False) -> None:
         """Default: exact positional type-sequence equality (reference:
@@ -235,7 +352,7 @@ class Collection:
 
         ``evolve=True`` relaxes to NAME-based compatibility — the batch
         may add brand-new columns (earlier rows read them back as NULL
-        via the mergeSchema log read) and omit existing ones (written
+        via the merged-schema log read) and omit existing ones (written
         as absent, read back as NULL), but a column present in both
         must keep its type. This is additive-only schema evolution à la
         Delta/Iceberg: no rewrite of history, old snapshots unchanged,
@@ -369,25 +486,22 @@ class Collection:
         txid) and ``_seq`` (monotonically_increasing_id) disambiguates
         within a batch only, so it may use its full 64-bit range at any
         partition count. First write in a process seeds the counter from
-        ``max(_batch)`` already in the log (a column-pruned parquet agg),
-        so reopening a collection continues — never restarts — the order;
-        +1 per append cannot overflow int64."""
+        ``log_position()`` (parquet footers), so reopening a collection
+        continues — never restarts — the order; +1 per append cannot
+        overflow int64."""
         if self._batch_counter is None:
-            log = self._read_log()
-            if log is None:
-                self._batch_counter = -1
-            else:
-                row = log.agg(F.max("_batch").alias("m")).collect()[0]
-                self._batch_counter = -1 if row["m"] is None else int(row["m"])
+            self._batch_counter = self.log_position()
         self._batch_counter += 1
         return self._batch_counter
 
     def _append(self, df: DataFrame) -> None:
+        before = frozenset(self._log_files())
         (
             df.write.mode("append")
             .option("maxRecordsPerFile", self.max_entries)  # log rotation
             .parquet(self.log_path)
         )
+        self._note_own_write(before, df.schema)
         self._invalidate_snapshots()
 
     def _invalidate_snapshots(self) -> None:
@@ -470,22 +584,37 @@ class Collection:
 
     @_leased
     def _marker(self, txid: str, kind: str) -> None:
-        """Append a 1-row C/R marker. Each marker is its own tiny parquet
-        file — at a high transaction rate the log degrades into
+        """Append a 1-row C/R marker: the five metadata columns only
+        (reads resolve columns by name, so payload columns read as NULL),
+        written with pyarrow on the driver — no Spark job. The file lands
+        under a hidden temp name and is renamed into the log, so no
+        reader ever lists a partial file. Each marker is its own tiny
+        parquet file — at a high transaction rate the log degrades into
         small-file soup between compactions; ``coalesce_markers()`` (or
         any ``compact()``) folds them back. ``maybe_compact()`` runs the
         fold automatically past a file-count threshold."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         batch = self._next_batch()
-        payload = self.payload_schema() or T.StructType([])
-        row = [tuple([txid, batch, 0, kind, None] + [None] * len(payload.fields))]
-        schema = T.StructType(_META_FIELDS + [
-            T.StructField(f.name, f.dataType, True) for f in payload.fields
+        before = frozenset(self._log_files())
+        os.makedirs(self.log_path, exist_ok=True)
+        name = f"marker-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.log_path, f".{name}.tmp")
+        schema = pa.schema([  # mirrors _META_FIELDS
+            pa.field("_txid", pa.string(), False),
+            pa.field("_batch", pa.int64(), False),
+            pa.field("_seq", pa.int64(), False),
+            pa.field("_kind", pa.string(), False),
+            pa.field("_id", pa.string(), True),
         ])
-        # coalesce(1): a 1-row local DataFrame otherwise carries
-        # defaultParallelism partitions and the writer emits an empty
-        # schema-stub part file next to the data file — one marker
-        # should be exactly one file.
-        self._append(self.spark.createDataFrame(row, schema).coalesce(1))
+        pq.write_table(
+            pa.table({"_txid": [txid], "_batch": [batch], "_seq": [0],
+                      "_kind": [kind], "_id": [None]}, schema=schema),
+            tmp)
+        os.replace(tmp, os.path.join(self.log_path, name))
+        self._note_own_write(before, T.StructType(_META_FIELDS))
+        self._invalidate_snapshots()
 
     def commit(self, txid: str) -> None:
         """Transaction::Committed marker (reference log_entry.rs:39-45)."""
@@ -569,14 +698,16 @@ class Collection:
         return self._read_log()
 
     def log_position(self) -> int:
-        """Current log position = max(_batch), -1 when empty. A
-        column-pruned parquet agg (one tiny job); the position is the
-        total order the reference's newest-file-first walk implies."""
-        log = self._read_log()
-        if log is None:
-            return -1
-        row = log.agg(F.max("_batch").alias("m")).collect()[0]
-        return -1 if row["m"] is None else int(row["m"])
+        """Current log position = max(_batch), -1 when empty; the position
+        is the total order the reference's newest-file-first walk
+        implies. Read from the parquet footers' ``_batch`` statistics —
+        zero Spark jobs. A non-empty file without them (a writer that
+        skipped statistics) falls back to a column-pruned Spark agg."""
+        footers = self._footers().values()
+        if any(n and hi is None for n, _lo, hi, _cols in footers):
+            row = self._read_log().agg(F.max("_batch").alias("m")).collect()[0]
+            return -1 if row["m"] is None else int(row["m"])
+        return max((hi for n, _lo, hi, _cols in footers if n), default=-1)
 
     def scan_at_position(self, batch: int,
                          ids: DataFrame | None = None) -> DataFrame:
@@ -779,23 +910,19 @@ class Collection:
     def statistics(self) -> CollectionStatistics:
         """Log statistics (reference collection_statistics.rs:4-24).
 
-        ``total_entries`` comes from Parquet footer row counts — pure
-        metadata, zero Spark jobs, O(log files) tiny reads (the same
-        quantity the reference tracks incrementally per log file).
-        ``live_entries`` counts the resolved snapshot, which is served
-        from the snapshot LRU and memoized until the next log mutation —
-        the first ``statistics()`` after a write counts the (persisted)
-        snapshot once; every later call costs zero Spark jobs. The
-        maintenance path never triggers a second full log scan."""
-        if not self._log_exists():
+        ``total_entries`` sums the footer row counts of the footer cache
+        — pure metadata, zero Spark jobs, one footer read per new log
+        file (the same quantity the reference tracks incrementally per
+        log file). ``live_entries`` counts the resolved snapshot, which
+        is served from the snapshot LRU and memoized until the next log
+        mutation — the first ``statistics()`` after a write counts the
+        (persisted) snapshot once; every later call costs zero Spark
+        jobs. The maintenance path never triggers a second full log
+        scan."""
+        footers = self._footers()
+        if not footers:
             return CollectionStatistics(0, 0, self.compaction_redundancy)
-        import pyarrow.parquet as pq
-
-        total = 0
-        for root, _dirs, files in os.walk(self.log_path):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    total += pq.ParquetFile(os.path.join(root, fn)).metadata.num_rows
+        total = sum(n for n, _lo, _hi, _cols in footers.values())
         if self._live_count is None:
             self._live_count = self.table_scan().count()
         return CollectionStatistics(total, self._live_count, self.compaction_redundancy)
@@ -831,36 +958,38 @@ class Collection:
         self._invalidate_snapshots()
 
     # -- incremental (segment-pair) compaction ------------------------------
-    def _data_files(self) -> list[str]:
-        """Log parquet files in append order (by min ``_batch``), each
-        with its column-pruned entry stats: ``(path, n_entries, ids,
-        max_batch)``. Bounded work: ``maxRecordsPerFile`` caps rows per
-        file, and only the ``_id``/``_batch``/``_kind`` columns are read
-        (parquet column pruning) — never the payload."""
+    def _data_segments(self):
+        """Data segments (log files holding U/D entries) in append order,
+        yielded one at a time as ``(path, n_entries, ids, min_batch,
+        max_batch)``. The order comes from the footer cache's ``_batch``
+        minima (ties by file name), so no file is read to sort; then each
+        file's ``_id``/``_kind`` columns alone are read (parquet column
+        pruning, never the payload) as the consumer advances — a consumer
+        that keeps only the previous segment holds two id sets at most,
+        each capped at ``maxRecordsPerFile`` entries."""
         import pyarrow.parquet as pq
 
-        out = []
-        if not self._log_exists():
-            return out
-        for fn in sorted(os.listdir(self.log_path)):
-            if not fn.endswith(".parquet"):
-                continue
-            p = os.path.join(self.log_path, fn)
-            try:
-                t = pq.read_table(p, columns=["_id", "_batch", "_kind"])
-            except Exception:  # noqa: BLE001 - foreign/corrupt file: skip
-                continue
-            if t.num_rows == 0:
-                continue
-            kinds = t.column("_kind").to_pylist()
-            ids = [i for i, k in zip(t.column("_id").to_pylist(), kinds)
+        order = []
+        for name, (n, lo, hi, cols) in self._footers().items():
+            if not n or not {"_id", "_batch", "_kind"} <= set(cols):
+                continue  # empty stub or foreign file
+            p = os.path.join(self.log_path, name)
+            if lo is None:  # writer kept no statistics: read the column
+                b = pq.read_table(p, columns=["_batch"]).column(0).to_pylist()
+                lo, hi = min(b), max(b)
+            order.append((lo, name, hi, p))
+        for lo, _name, hi, p in sorted(order):
+            t = pq.read_table(p, columns=["_id", "_kind"])
+            ids = [i for i, k in zip(t.column("_id").to_pylist(),
+                                     t.column("_kind").to_pylist())
                    if k in ("U", "D")]
-            if not ids:
-                continue  # marker-only file: coalesce_markers territory
-            batches = t.column("_batch").to_pylist()
-            out.append((p, len(ids), set(ids), min(batches), max(batches)))
-        out.sort(key=lambda f: f[3])
-        return out
+            if ids:  # marker-only files are coalesce_markers territory
+                yield p, len(ids), set(ids), lo, hi
+
+    def _data_files(self) -> list[tuple[str, int, int]]:
+        """``(path, min_batch, max_batch)`` of every data segment, in
+        append order."""
+        return [(p, lo, hi) for p, _n, _ids, lo, hi in self._data_segments()]
 
     def most_redundant_pair(self) -> tuple[str, str, float] | None:
         """The adjacent (in append order) pair of data segments with the
@@ -869,14 +998,14 @@ class Collection:
         non-adjacent segments could interleave recency across the gap.
         O(files) column-pruned reads, O(max_entries) driver memory (one
         neighbor's id multiset at a time)."""
-        files = self._data_files()
-        best = None
-        for (pa_, na, ia, _mna, _mxa), (pb_, nb, ib, _mnb, _mxb) in zip(
-                files, files[1:]):
-            total = na + nb
-            redundancy = (total - len(ia | ib)) / total
-            if best is None or redundancy > best[2]:
-                best = (pa_, pb_, redundancy)
+        best = prev = None
+        for cur in self._data_segments():
+            if prev is not None:
+                total = prev[1] + cur[1]
+                redundancy = (total - len(prev[2] | cur[2])) / total
+                if best is None or redundancy > best[2]:
+                    best = (prev[0], cur[0], redundancy)
+            prev = cur
         return best
 
     @_leased
@@ -971,7 +1100,7 @@ class Collection:
         pq.write_table(
             pa.Table.from_pylist(keep, schema=merged.schema).select(cols), out)
         for p in paths:
-            os.remove(p)
+            _remove_segment(p)
         self._record_compaction(
             max(r["_batch"] for r in rows) if rows else -1)
         self._invalidate_snapshots()
@@ -998,11 +1127,11 @@ class Collection:
         the whole-prefix merge is one bounded rewrite of cold
         segments — newer hot segments are never read. Returns the
         number of segments merged (0 = nothing to do)."""
-        files = [f for f in self._data_files() if f[4] < before_pos]
+        files = [f for f in self._data_files() if f[2] < before_pos]
         if len(files) < 2:
             return 0
         self._merge_prefix_spark(
-            [f[0] for f in files], max(f[4] for f in files))
+            [f[0] for f in files], max(f[2] for f in files))
         return len(files)
 
     def _merge_prefix_spark(self, paths: list[str],
@@ -1079,7 +1208,7 @@ class Collection:
                 moved.append(dst)
         shutil.rmtree(tmp, ignore_errors=True)
         for p in paths:
-            os.remove(p)
+            _remove_segment(p)
         # max_batch comes from the merged files' parquet-footer stats —
         # no extra Spark job; rows dropped by the merge were invisible at
         # every position, so the watermark stays faithful
@@ -1271,8 +1400,8 @@ class Collection:
         between compactions, and small files are the classic scan-time
         killer (task scheduling + footer overhead per file).
 
-        Metadata-only maintenance: candidate files are found by parquet
-        footer row count (1-row files), verified marker-only by reading
+        Metadata-only maintenance: candidate files are found by the footer
+        cache's row counts (1-row files), verified marker-only by reading
         the tiny file, merged with pyarrow into a single segment, then
         the originals are removed — zero Spark jobs, O(marker files)
         tiny I/O, no data-file scan. Crash-safe ordering: the merged
@@ -1281,55 +1410,37 @@ class Collection:
         Marker ``_batch``/``_seq`` values are preserved verbatim, and
         markers never participate in recency ranking, so the visible
         snapshot is unchanged. Returns the number of files folded."""
-        if not self._log_exists():
-            return 0
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        candidates = []
-        empties = []
-        n_other = 0
-        for fn in sorted(os.listdir(self.log_path)):
-            if not fn.endswith(".parquet"):
+        candidates, stubs, covered = [], [], set()
+        for name, (n, _lo, _hi, cols) in self._footers().items():
+            p = os.path.join(self.log_path, name)
+            if n == 0:
+                # schema-stub part files Spark emits next to small appends
+                stubs.append((p, cols))
                 continue
-            p = os.path.join(self.log_path, fn)
-            try:
-                nrows = pq.ParquetFile(p).metadata.num_rows
-                if nrows == 0:
-                    # schema-stub part files Spark emits next to small
-                    # appends; zero information once any data file exists
-                    empties.append(p)
-                    continue
-                if nrows != 1:
-                    n_other += 1
-                    continue
+            covered.update(cols)
+            if n == 1 and "_kind" in cols:
                 t = pq.read_table(p)
-            except Exception:  # noqa: BLE001 - skip unreadable/foreign files
-                n_other += 1
-                continue
-            if t.column("_kind")[0].as_py() in ("C", "R"):
-                candidates.append((p, t))
-            else:
-                n_other += 1
+                if t.column("_kind")[0].as_py() in ("C", "R"):
+                    candidates.append((p, t))
+        # a stub goes only when non-empty files carry all of its columns:
+        # markers are narrow, so a stub can be the last file naming a
+        # column an (empty) evolved batch added
+        empties = [p for p, cols in stubs if set(cols) <= covered]
         if len(candidates) + len(empties) < min_files:
             return 0
-        folded = 0
         if candidates:
             merged = pa.concat_tables(
                 [t for _, t in candidates], promote_options="default")
             out = os.path.join(
                 self.log_path, f"markers-{uuid.uuid4().hex}.parquet")
             pq.write_table(merged, out)
-            for p, _ in candidates:
-                os.remove(p)
-            folded += len(candidates)
-        if empties and (n_other > 0 or candidates):
-            # keep at least one file so the log (and its schema) survives
-            for p in empties:
-                os.remove(p)
-            folded += len(empties)
+        for p in [p for p, _ in candidates] + empties:
+            _remove_segment(p)
         self._invalidate_snapshots()
-        return folded
+        return len(candidates) + len(empties)
 
     def maybe_compact(self) -> bool:
         """Compaction trigger: redundancy ratio >= threshold (reference:

@@ -365,6 +365,222 @@ def test_statistics_metadata_only(storage, spark):
     assert c.statistics().live_entries == 2
 
 
+def _spark_jobs(spark, fn):
+    """(ids of the Spark jobs ``fn()`` ran, its result)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return sc.statusTracker().getJobIdsForGroup(group), out
+
+
+def test_log_metadata_runs_zero_spark_jobs(storage, spark):
+    """Commit/rollback markers, the log position, the payload schema and
+    building a snapshot after this instance's own append are all
+    driver-side metadata work: zero Spark jobs."""
+    c = storage.get_collection("t")
+    c.set_objects(None, _df(spark, [("a", "x", 1)]))            # batch 0
+    t1 = uuid7()
+    c.set_objects(t1, _df(spark, [("b", "y", 2)]))              # batch 1
+    assert _spark_jobs(spark, lambda: c.commit(t1))[0] == []    # batch 2
+    t2 = uuid7()
+    c.set_objects(t2, _df(spark, [("c", "z", 3)]))              # batch 3
+    assert _spark_jobs(spark, lambda: c.rollback(t2))[0] == []  # batch 4
+    jobs, pos = _spark_jobs(spark, c.log_position)
+    assert (jobs, pos) == ([], 4)
+    jobs, payload = _spark_jobs(spark, c.payload_schema)
+    assert jobs == [] and payload.names == ["name", "qty"]
+    c.set_objects(uuid7(), _df(spark, [("d", "w", 4)]))  # pending
+    jobs, snap = _spark_jobs(spark, lambda: c.table_scan(t1))
+    assert jobs == []
+    assert {(r["_id"], r["name"], r["qty"]) for r in snap.collect()} == {
+        ("a", "x", 1), ("b", "y", 2)}
+
+
+def _schema_matches_inference(spark, c):
+    """The instance's log schema equals a fresh mergeSchema inference,
+    field by field in name and type."""
+    got = c._read_log().schema
+    fresh = spark.read.option("mergeSchema", "true").parquet(c.log_path).schema
+    return ([(f.name, f.dataType) for f in got.fields]
+            == [(f.name, f.dataType) for f in fresh.fields])
+
+
+def test_schema_cache_follows_other_writers_and_maintenance(spark, tmp_path):
+    """A second instance sees a column the first added with evolve=True,
+    and the cached schema stays equal to a fresh inference across
+    compact(), vacuum() and coalesce_markers()."""
+    root = str(tmp_path / "sc")
+    a = Storage(spark, root, StorageConfig(max_entries=64)).get_collection("t")
+    b = Storage(spark, root, StorageConfig(max_entries=64)).get_collection("t")
+    a.set_objects(None, _df(spark, [("a", "x", 1), ("b", "y", 2)]))
+    assert b.payload_schema().names == ["name", "qty"]  # b's cache is warm
+    wide = spark.createDataFrame(
+        [("c", "z", 3, "n")], "_id string, name string, qty int, note string")
+    tx = uuid7()
+    a.set_objects(tx, wide, evolve=True)
+    a.commit(tx)
+    assert a.payload_schema().names == ["name", "qty", "note"]
+    assert b.payload_schema().names == ["name", "qty", "note"]
+    b._invalidate_snapshots()
+    assert {(r["_id"], r["note"]) for r in b.table_scan().collect()} == {
+        ("a", None), ("b", None), ("c", "n")}
+    assert _schema_matches_inference(spark, a)
+
+    for i in range(3):
+        t = uuid7()
+        a.set_objects(t, _df(spark, [(f"r{i}", "v", i)]), evolve=True)
+        a.commit(t)
+    before = _snap(a)
+    assert a.coalesce_markers(min_files=2) > 0
+    assert _schema_matches_inference(spark, a) and _snap(a) == before
+    assert a.vacuum(a.log_position() + 1) >= 2
+    assert _schema_matches_inference(spark, a) and _snap(a) == before
+    a.compact()
+    assert _schema_matches_inference(spark, a) and _snap(a) == before
+    # own appends after maintenance keep the cache in step
+    a.set_objects(None, spark.createDataFrame(
+        [("e", "q", 5, "m")], "_id string, name string, qty int, note string"))
+    t = uuid7()
+    a.delete_objects(t, ["a"])
+    a.commit(t)
+    assert _schema_matches_inference(spark, a)
+    b._invalidate_snapshots()
+    assert {r["_id"] for r in b.table_scan().collect()} == {
+        "b", "c", "e", "r0", "r1", "r2"}
+
+
+def test_marker_fold_keeps_column_of_empty_evolved_batch(storage, spark):
+    """Markers carry only the metadata columns, so the empty stub file
+    of an empty evolved batch can be the only file naming its new
+    column; folding markers must not drop that stub."""
+    c = storage.get_collection("t")
+    c.set_objects(None, _df(spark, [("a", "x", 1)]))
+    tx = uuid7()
+    c.set_objects(tx, spark.createDataFrame(
+        [], "_id string, name string, qty int, note string"), evolve=True)
+    c.commit(tx)
+    assert c.payload_schema().names == ["name", "qty", "note"]
+    c.coalesce_markers(min_files=1)
+    assert _schema_matches_inference(spark, c)
+    assert c.payload_schema().names == ["name", "qty", "note"]
+
+
+def test_full_width_and_narrow_markers_read_alike(spark, tmp_path):
+    """A log holding commit markers in the full-width layout (payload
+    columns NULL) next to narrow metadata-only ones resolves both."""
+    import os as _os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "mix")
+    c = Storage(spark, root).get_collection("t")
+    t1 = uuid7()
+    c.set_objects(t1, _df(spark, [("a", "x", 1)]))  # batch 0
+    pq.write_table(pa.table({
+        "_txid": [t1], "_batch": [1], "_seq": [0], "_kind": ["C"],
+        "_id": pa.array([None], pa.string()),
+        "name": pa.array([None], pa.string()),
+        "qty": pa.array([None], pa.int32())}),
+        _os.path.join(c.log_path, "full-width-marker.parquet"))
+    c = Storage(spark, root).get_collection("t")  # reopen: seeds from 1
+    t2 = uuid7()
+    c.set_objects(t2, _df(spark, [("b", "y", 2)]))
+    c.commit(t2)
+    assert c.log_position() == 3
+    assert _schema_matches_inference(spark, c)
+    assert _snap(c) == {("a", "x", 1), ("b", "y", 2)}
+    assert {r["_id"] for r in c.table_scan(t1).collect()} == {"a"}
+    assert c.coalesce_markers(min_files=2) >= 2
+    c._invalidate_snapshots()
+    assert _snap(c) == {("a", "x", 1), ("b", "y", 2)}
+
+
+def test_leftover_marker_temp_file_is_ignored(storage, spark):
+    """A marker write cut off between its write and its rename leaves a
+    hidden temp file in the log; no read or maintenance path sees it."""
+    import os as _os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    c = storage.get_collection("t")
+    c.set_objects(None, _df(spark, [("a", "x", 1)]))
+    tx = uuid7()
+    c.set_objects(tx, _df(spark, [("b", "y", 2)]))
+    c.commit(tx)
+    pos = c.log_position()
+    leftover = _os.path.join(c.log_path, f".marker-{'0' * 32}.parquet.tmp")
+    pq.write_table(pa.table({
+        "_txid": [NIL_TXID], "_batch": [pos + 10], "_seq": [0],
+        "_kind": ["U"], "_id": ["ghost"], "name": ["g"], "qty": [9]}),
+        leftover)
+    c._invalidate_snapshots()
+    assert _snap(c) == {("a", "x", 1), ("b", "y", 2)}
+    assert c.statistics().total_entries == 3
+    assert c.log_position() == pos
+    c.coalesce_markers(min_files=1)
+    assert _os.path.isfile(leftover)
+    assert _snap(c) == {("a", "x", 1), ("b", "y", 2)}
+
+
+def test_log_position_without_footer_statistics(storage, spark):
+    """A log file whose writer kept no column statistics still counts:
+    log_position falls back to a Spark aggregate, and segment order
+    reads the ``_batch`` column."""
+    import os as _os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    c = storage.get_collection("t")
+    c.set_objects(None, _df(spark, [("a", "x", 1)]).coalesce(1))
+    pq.write_table(pa.table({
+        "_txid": [NIL_TXID], "_batch": [7], "_seq": [0], "_kind": ["U"],
+        "_id": ["a"], "name": ["x2"], "qty": [pa.scalar(2, pa.int32())]}),
+        _os.path.join(c.log_path, "foreign.parquet"), write_statistics=False)
+    assert c.log_position() == 7
+    assert [lo for _p, lo, _hi in c._data_files()] == [0, 7]
+    c._invalidate_snapshots()
+    assert _snap(c) == {("a", "x2", 2)}
+
+
+def test_no_crc_outlives_its_segment(spark, tmp_path):
+    """Deleting a Spark-written segment also deletes Hadoop's
+    ``.<name>.crc`` sibling: coalesce_markers, compact_segments and
+    vacuum leave no orphaned checksum files."""
+    import os as _os
+
+    st = Storage(spark, str(tmp_path / "crc"), StorageConfig(max_entries=64))
+    c = st.get_collection("t")
+
+    def orphans():
+        names = set(_os.listdir(c.log_path))
+        return sorted(n for n in names
+                      if n.endswith(".crc") and n[1:-4] not in names)
+
+    for i in range(4):
+        tx = uuid7()
+        c.set_objects(tx, _df(spark, [(f"r{i}", "v1", i), ("k", "v1", i)]))
+        c.commit(tx)
+    assert c.coalesce_markers(min_files=2) > 0
+    assert orphans() == []
+    files = [f[0] for f in c._data_files()]
+    c.compact_segments(files[0], files[1])
+    assert orphans() == []
+    c.set_objects(None, _df(spark, [("k", "v2", 9)]))
+    assert c.vacuum(c.log_position() + 1) >= 2
+    assert orphans() == []
+    assert _snap(c) == {("r0", "v1", 0), ("r1", "v1", 1), ("r2", "v1", 2),
+                        ("r3", "v1", 3), ("k", "v2", 9)}
+
+
 def test_marker_coalesce_bounds_files(storage, spark):
     """Many tiny commit-marker files fold into one segment; the visible
     snapshot and txid visibility are unchanged."""
