@@ -6481,48 +6481,36 @@ def _driver_checked_rounds() -> dict[str, int]:
 # force them back into the 50-query window as if never checked. Clear
 # an entry once the next CORRECTNESS file carries its fresh row.
 _FORCE_RECHECK: frozenset[str] = frozenset({
-    # r13: every operator rewritten by the r12 optimization commits
-    # whose latest driver row predates the rewrite (the r12 verdict's
-    # directive #1). Local oracle sweeps pass at sf0.01 and sf0.1, but
-    # the driver is ground truth — force fresh rows for all of them.
-    # Plus the r13 rewrites themselves (same rule, one round earlier):
-    # array-form percentiles, the classifier/late-supplier/mjpeg
-    # restructures, the decontaminate kernel's broadcast lifecycle,
-    # and the ivfpq/pq representatives of the checkpoint-barrier
-    # conversion. 32 forced + 18 stalest slots still drain all but 4
-    # of the remaining r8-row backlog this round.
-    "exact_percentiles",
-    "winsorize",
-    "classifier_score",
-    "late_only_supplier",
-    "embedding_decontaminate",
-    "ivfpq_recall",
-    "ivfpq_topk",
-    "pq_sampled",
-    "bigram_surprisal",
-    "bm25_topk",
-    "collocations",
-    "curate_corpus",
-    "dedup_clusters",
-    "dedup_corpus",
-    "ivf_kmeans_topk",
-    "jaccard_grouped",
-    "jaccard_join",
-    "kcenter",
-    "lsh_probe",
-    "minhash_lsh_pairs",
-    "mjpeg_features",
-    "ngram_jaccard",
-    "semantic_dedup",
-    "simhash",
-    "simhash_grouped",
-    "simhash_near_dup",
-    "span_dedup",
-    "span_dup",
-    "winnow_cut",
-    "winnow_fingerprints",
-    "winnow_overlap",
-    "winnow_spans",
+    # The MVCC read and compaction paths and the matview state plumbing
+    # were folded into one resolution core (visibility, newest-wins and
+    # the segment merge in db_spark/table.py); plans are unchanged, but
+    # the driver is ground truth — fresh rows for every key on that code.
+    "mvcc_vacuum",
+    "mvcc_evolve",
+    "mvcc_snapshot",
+    "mvcc_history",
+    "mvcc_cdc",
+    "mvcc_delete_where",
+    "mvcc_multi_tx",
+    "matview_incremental",
+    "matview_join",
+    # Rewritten after the r13 sweep (one spread gate, one basket-pair
+    # enumerator, sketch call sites that gained a spread); their last
+    # driver rows (r9-r11) predate the rewrite.
+    "copurchase_pairs",
+    "triangle_count",
+    "assoc_rules",
+    "stats_agg",
+    "bloom_prefilter",
+    "cm_join_size",
+    "cm_heavy_hitters",
+    "kmv_distinct",
+    "kmv_merge",
+    "kmv_set_ops",
+    "hll_distinct",
+    "hll_merge",
+    "hll_rolling",
+    "hll_set_ops",
 })
 
 

@@ -15,7 +15,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from db_spark.ops import Q
-from db_spark.table import NIL_TXID, Collection, uuid7
+from db_spark.table import Collection, uuid7
 
 
 @dataclass
@@ -181,24 +181,5 @@ class Transaction:
         """Read-your-own-writes within the transaction: snapshot at this
         txid plus this transaction's own uncommitted entries."""
         c = self._touch(collection)
-        log = c._read_log()
-        if log is None:
-            return c.table_scan(self.txid)
-        from pyspark.sql import functions as F, Window
-
-        visible = log.filter(
-            F.col("_kind").isin("U", "D") & (F.col("_txid") <= F.lit(self.txid))
-        )
-        committed = log.filter(F.col("_kind") == "C").select("_txid").distinct()
-        own_or_committed = visible.join(
-            F.broadcast(committed), on="_txid", how="left_semi"
-        ).unionByName(
-            visible.filter(F.col("_txid").isin(self.txid, NIL_TXID))
-        )
-        w = Window.partitionBy("_id").orderBy(
-            F.col("_batch").desc(), F.col("_seq").desc())
-        return (
-            own_or_committed.withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & (F.col("_kind") == "U"))
-            .drop("_rn", "_txid", "_batch", "_seq", "_kind")
-        )
+        snap = c._resolve(self.txid, own_txid=self.txid)
+        return c.table_scan(self.txid) if snap is None else snap

@@ -120,12 +120,15 @@ class IncrementalAggView:
     def _state_dir(self, epoch: int) -> str:
         return os.path.join(self.path, f"state-{epoch}")
 
-    def _write_state(self, state: DataFrame, pos: int, epoch: int) -> None:
-        out = self._state_dir(epoch)
-        state.write.mode("overwrite").parquet(out)
+    def _write_state(self, state: DataFrame, meta: dict) -> None:
+        """Write ``state`` as epoch ``meta["epoch"]``, then point the
+        meta file (``meta``: the epoch plus the log position(s) it
+        reflects) at it."""
+        epoch = meta["epoch"]
+        state.write.mode("overwrite").parquet(self._state_dir(epoch))
         tmp = self._meta_path + ".tmp"
         with open(tmp, "w") as fh:
-            json.dump({"pos": pos, "epoch": epoch}, fh)
+            json.dump(meta, fh)
         os.replace(tmp, self._meta_path)  # atomic pointer swap
         # Retain epoch-1 so DataFrames read before this refresh still
         # evaluate (lazy plans hold the old path); reap epoch-2 and any
@@ -174,25 +177,23 @@ class IncrementalAggView:
         refreshes before compaction to keep every refresh delta-sized."""
         now_pos = self.collection.log_position()
         meta = self._meta()
-        if meta is None:
+        if meta is not None and meta["pos"] == now_pos:
+            return now_pos  # nothing appended; state already current
+        # Build on the first call. Rebuild when the log prefix at the
+        # stored position no longer replays: scan_at_position(last) would
+        # be empty, the old-image correction would subtract nothing, and
+        # merging the full new image onto the stored state would
+        # double-count.
+        rebuild = (meta is None
+                   or self.collection.compaction_watermark() > meta["pos"])
+        if rebuild:
             state = self._contrib(
                 self.collection.scan_at_position(now_pos), 1)
             state = state.filter(F.col("_cnt") > 0)
-            self._write_state(state, now_pos, 0)
+            epoch = 0 if meta is None else meta["epoch"] + 1
+            self._write_state(state, {"pos": now_pos, "epoch": epoch})
             return now_pos
         last = meta["pos"]
-        if now_pos == last:
-            return last  # nothing appended; state already current
-        if self.collection.compaction_watermark() > last:
-            # Log prefix at `last` no longer replays: scan_at_position
-            # (last) would be empty, the old-image correction would
-            # subtract nothing, and merging the full new image onto the
-            # stored state would double-count. Rebuild instead.
-            state = self._contrib(
-                self.collection.scan_at_position(now_pos), 1)
-            state = state.filter(F.col("_cnt") > 0)
-            self._write_state(state, now_pos, meta["epoch"] + 1)
-            return now_pos
         changed = _changed_ids(self.collection, last, now_pos)
         # id filter pushed BELOW the snapshot-resolution window: the
         # _id-keyed exchange is O(delta log entries), not O(table)
@@ -209,7 +210,7 @@ class IncrementalAggView:
                  F.sum("_cnt").cast("long").alias("_cnt"))
             .filter(F.col("_cnt") > 0)
         )
-        self._write_state(state, now_pos, meta["epoch"] + 1)
+        self._write_state(state, {"pos": now_pos, "epoch": meta["epoch"] + 1})
         return now_pos
 
     def read(self) -> DataFrame:
@@ -274,6 +275,8 @@ class IncrementalJoinAggView:
     _meta_path = IncrementalAggView._meta_path
     _meta = IncrementalAggView._meta
     _state_dir = IncrementalAggView._state_dir
+    _write_state = IncrementalAggView._write_state
+    read = IncrementalAggView.read
 
     @property
     def collection(self):  # read() / state plumbing borrow this spark
@@ -322,7 +325,8 @@ class IncrementalJoinAggView:
                                   self.b.scan_at_position(now_b))
             state = state.filter(F.col("_cnt") != 0)
             epoch = 0 if meta is None else meta["epoch"] + 1
-            self._write_state_join(state, now_a, now_b, epoch)
+            self._write_state(
+                state, {"pos": now_a, "pos_b": now_b, "epoch": epoch})
             return now_a, now_b
         last_a, last_b = meta["pos"], meta["pos_b"]
         if (now_a, now_b) == (last_a, last_b):
@@ -341,34 +345,6 @@ class IncrementalJoinAggView:
                  F.sum("_cnt").cast("long").alias("_cnt"))
             .filter(F.col("_cnt") != 0)
         )
-        self._write_state_join(state, now_a, now_b, meta["epoch"] + 1)
+        self._write_state(
+            state, {"pos": now_a, "pos_b": now_b, "epoch": meta["epoch"] + 1})
         return now_a, now_b
-
-    def _write_state_join(self, state: DataFrame, pos_a: int, pos_b: int,
-                          epoch: int) -> None:
-        out = self._state_dir(epoch)
-        state.write.mode("overwrite").parquet(out)
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"pos": pos_a, "pos_b": pos_b, "epoch": epoch}, fh)
-        os.replace(tmp, self._meta_path)
-        for d in os.listdir(self.path):
-            if (d.startswith("state-") and d[6:].isdigit()
-                    and int(d[6:]) <= epoch - 2):
-                shutil.rmtree(os.path.join(self.path, d))
-
-    def read(self) -> DataFrame:
-        """The maintained aggregate: (group, n_rows, sum_value,
-        avg_value) over the join."""
-        meta = self._meta()
-        if meta is None:
-            raise RuntimeError("view has no state yet — call refresh()")
-        m = float(10 ** self.scale)
-        st = self.a.spark.read.parquet(self._state_dir(meta["epoch"]))
-        return st.select(
-            F.col("_g").alias(self.group_col),
-            F.col("_cnt").alias("n_rows"),
-            (F.col("_ssum").cast("double") / m).alias("sum_value"),
-            F.round(F.col("_ssum").cast("double") / m
-                    / F.col("_cnt").cast("double"), 6).alias("avg_value"),
-        )

@@ -536,7 +536,7 @@ def stream_changes(collection, include_uncommitted: bool = False):
     compaction preserves."""
     from pyspark.sql import functions as F  # noqa: F811
 
-    log = collection._read_log()
+    log = collection.log_entries()
     if log is None:
         raise ValueError(
             f"collection {collection.name!r} has no log yet — write to "

@@ -10,12 +10,13 @@ tombstones, for transactions with ``txid <= scan_txid`` (UUIDv7
 time-ordering; reference: src/operators/sourcing/table_scan.rs:64-123).
 
 Spark-first realization: the log is a Parquet dataset with metadata
-columns ``(_txid, _seq, _kind, _id)`` + the payload columns. Snapshot
-resolution is declarative — a broadcast semi-join against the (tiny)
-commit-marker set and a window ``row_number() = 1`` per ``_id`` — so
-Catalyst/AQE plan it, and the same query works on a 1000-executor
-cluster. Compaction rewrites the log keeping only live rows (reference:
-src/storage/log_file/log_compaction.rs:9-64).
+columns ``(_txid, _batch, _seq, _kind, _id)`` + the payload columns.
+Snapshot resolution is declarative — a broadcast semi-join against the
+(tiny) commit-marker set (``_visible``) and a window ``row_number() = 1``
+per ``_id`` (``_newest``) — so Catalyst/AQE plan it, and the same query
+works on a 1000-executor cluster. Every reader and both compaction
+paths go through those two helpers. Compaction rewrites the log keeping
+only live rows (reference: src/storage/log_file/log_compaction.rs:9-64).
 
 UUIDv7 ordering note (SURVEY §7): canonical UUID strings are fixed-width
 hex with dashes at fixed positions, so lexicographic string order equals
@@ -93,6 +94,44 @@ def _remove_segment(path: str) -> None:
         os.remove(os.path.join(head, f".{name}.crc"))
     except FileNotFoundError:
         pass
+
+
+def _committed(rows: DataFrame) -> DataFrame:
+    """Distinct txids with a commit marker among log ``rows`` — tiny
+    relative to data, so every consumer broadcasts it."""
+    return rows.filter(F.col("_kind") == "C").select("_txid").distinct()
+
+
+def _visible(entries: DataFrame, committed: DataFrame,
+             own_txid: str | None = None) -> DataFrame:
+    """The visible U/D ``entries``: those of a ``committed`` txid
+    (broadcast semi-join), the pre-committed nil txid (reference
+    table_scan.rs:50-51) and ``own_txid``, a transaction reading its own
+    uncommitted writes."""
+    own = (F.col("_txid") == NIL_TXID if own_txid is None
+           else F.col("_txid").isin(own_txid, NIL_TXID))
+    return entries.join(
+        F.broadcast(committed), on="_txid", how="left_semi",
+    ).unionByName(entries.filter(own))
+
+
+def _newest(entries: DataFrame, live: bool = True) -> DataFrame:
+    """Newest entry per ``_id``. Recency among visible entries is
+    physical log position (``_batch`` append order, ``_seq`` within a
+    batch), matching the reference's newest-file back-to-front walk
+    (table_scan.rs:66-101) — a later nil-txid write or tombstone
+    supersedes an earlier committed version; txid only gates
+    visibility, it does not rank versions. ``live`` resolves a snapshot:
+    tombstone winners drop out (``_kind = 'U'``) with the metadata
+    columns. Otherwise every winner keeps every column (a merge's
+    output)."""
+    w = Window.partitionBy("_id").orderBy(
+        F.col("_batch").desc(), F.col("_seq").desc())
+    ranked = entries.withColumn("_rn", F.row_number().over(w))
+    if live:
+        return (ranked.filter((F.col("_rn") == 1) & (F.col("_kind") == "U"))
+                .drop("_rn", *_META_NAMES[:-1]))
+    return ranked.filter(F.col("_rn") == 1).drop("_rn")
 
 
 class SchemaError(Exception):
@@ -635,7 +674,7 @@ class Collection:
            is tiny relative to data and broadcast-joined.
         2. keep U/D entries with ``_txid <= scan_txid`` and committed;
         3. newest version per ``_id`` wins: ``row_number() OVER
-           (PARTITION BY _id ORDER BY _txid DESC, _seq DESC) = 1``;
+           (PARTITION BY _id ORDER BY _batch DESC, _seq DESC) = 1``;
         4. tombstones drop out (``_kind = 'U'``).
 
         Repeated scans at the same txid (or repeated latest-scans with no
@@ -648,48 +687,40 @@ class Collection:
         if hit is not None:
             self._snapshot_cache.move_to_end(cache_key)
             return hit
-        scan_txid = txid or uuid7()
-        log = self._read_log()
-        if log is None:
-            # Never-written collection: an empty frame must still carry
-            # the snapshot's full (_id + payload) schema so downstream
-            # filters/projections on payload columns resolve instead of
-            # throwing. Payload comes from the declared schema when one
-            # exists; otherwise it is genuinely unknown and only _id is
-            # returned.
-            payload = self._declared_schema or T.StructType([])
-            shape = T.StructType(
-                [_META_FIELDS[-1]]
-                + [T.StructField(f.name, f.dataType, True) for f in payload.fields]
-            )
-            return self.spark.createDataFrame([], shape)
-        committed = (
-            log.filter(F.col("_kind") == "C").select("_txid").distinct()
-        )
-        entries = log.filter(F.col("_kind").isin("U", "D") & (F.col("_txid") <= F.lit(scan_txid)))
-        visible = entries.join(
-            F.broadcast(committed),
-            on="_txid",
-            how="left_semi",
-        ).unionByName(entries.filter(F.col("_txid") == NIL_TXID))
-        # Recency among *visible* entries is physical log position
-        # (`_batch` append order, `_seq` within a batch), matching the
-        # reference's newest-file back-to-front walk (table_scan.rs:66-101)
-        # — a later pre-committed (nil-txid) write or tombstone supersedes
-        # an earlier committed version; txid only gates visibility, it
-        # does not rank versions.
-        w = Window.partitionBy("_id").orderBy(
-            F.col("_batch").desc(), F.col("_seq").desc())
-        latest = (
-            visible.withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & (F.col("_kind") == "U"))
-            .drop("_rn", "_txid", "_batch", "_seq", "_kind")
-        ).cache()
+        latest = self._resolve(txid or uuid7())
+        if latest is None:
+            return self._empty_frame()
+        latest = latest.cache()
         self._snapshot_cache[cache_key] = latest
         while len(self._snapshot_cache) > self._snapshot_cache_capacity:
             _, evicted = self._snapshot_cache.popitem(last=False)
             evicted.unpersist()
         return latest
+
+    def _resolve(self, scan_txid: str,
+                 own_txid: str | None = None) -> DataFrame | None:
+        """The uncached snapshot at ``scan_txid`` (``table_scan``'s
+        plan), with ``own_txid``'s uncommitted entries visible too
+        (``Transaction.scan``); None before the first write."""
+        log = self._read_log()
+        if log is None:
+            return None
+        entries = log.filter(F.col("_kind").isin("U", "D")
+                             & (F.col("_txid") <= F.lit(scan_txid)))
+        return _newest(_visible(entries, _committed(log), own_txid))
+
+    def _empty_frame(self, extra: tuple[T.StructField, ...] = ()) -> DataFrame:
+        """What a read of a never-written collection returns: an empty
+        frame that still carries the snapshot's ``_id`` + payload schema
+        (then ``extra``), so downstream filters/projections on payload
+        columns resolve instead of throwing. Payload comes from the
+        declared schema when one exists; otherwise it is genuinely
+        unknown and only ``_id`` is returned."""
+        payload = self._declared_schema or T.StructType([])
+        return self.spark.createDataFrame([], T.StructType(
+            [_META_FIELDS[-1]]
+            + [T.StructField(f.name, f.dataType, True) for f in payload.fields]
+            + list(extra)))
 
     def log_entries(self) -> DataFrame | None:
         """Raw log (meta + payload columns) for observability and
@@ -740,25 +771,13 @@ class Collection:
                 f"incremental consumers from a current snapshot)")
         log = self._read_log()
         if log is None:
-            return self.table_scan()  # empty-shape path
+            return self._empty_frame()
         prefix = log.filter(F.col("_batch") <= F.lit(batch))
-        committed = (
-            prefix.filter(F.col("_kind") == "C").select("_txid").distinct()
-        )
         entries = prefix.filter(F.col("_kind").isin("U", "D"))
         if ids is not None:
             entries = entries.join(
                 F.broadcast(ids.select("_id")), "_id", "left_semi")
-        visible = entries.join(
-            F.broadcast(committed), on="_txid", how="left_semi",
-        ).unionByName(entries.filter(F.col("_txid") == NIL_TXID))
-        w = Window.partitionBy("_id").orderBy(
-            F.col("_batch").desc(), F.col("_seq").desc())
-        return (
-            visible.withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & (F.col("_kind") == "U"))
-            .drop("_rn", "_txid", "_batch", "_seq", "_kind")
-        )
+        return _newest(_visible(entries, _committed(prefix)))
 
     def scan_at(self, when) -> DataFrame:
         """Time travel: snapshot as of a wall-clock instant (datetime or
@@ -813,25 +832,14 @@ class Collection:
         shuffle count independent of version counts."""
         log = self._read_log()
         if log is None:
-            payload = self._declared_schema or T.StructType([])
-            shape = T.StructType(
-                [_META_FIELDS[-1]]
-                + [T.StructField(f.name, f.dataType, True)
-                   for f in payload.fields]
-                + [T.StructField("_kind", T.StringType(), True),
-                   T.StructField("_version", T.IntegerType(), True),
-                   T.StructField("_from_pos", T.LongType(), True),
-                   T.StructField("_to_pos", T.LongType(), True),
-                   T.StructField("is_current", T.BooleanType(), True)]
-            )
-            return self.spark.createDataFrame([], shape)
-        committed = (
-            log.filter(F.col("_kind") == "C").select("_txid").distinct()
-        )
-        entries = log.filter(F.col("_kind").isin("U", "D"))
-        visible = entries.join(
-            F.broadcast(committed), on="_txid", how="left_semi",
-        ).unionByName(entries.filter(F.col("_txid") == NIL_TXID))
+            return self._empty_frame((
+                T.StructField("_kind", T.StringType(), True),
+                T.StructField("_version", T.IntegerType(), True),
+                T.StructField("_from_pos", T.LongType(), True),
+                T.StructField("_to_pos", T.LongType(), True),
+                T.StructField("is_current", T.BooleanType(), True)))
+        visible = _visible(log.filter(F.col("_kind").isin("U", "D")),
+                           _committed(log))
         w = Window.partitionBy("_id").orderBy("_batch", "_seq")
         payload_cols = [c for c in visible.columns
                         if c not in ("_txid", "_batch", "_seq", "_kind", "_id")]
@@ -935,21 +943,32 @@ class Collection:
         nil-txid (pre-committed) entries — same visible snapshot."""
         if not self._log_exists():
             return  # never written: nothing to rewrite
-        snapshot = self.table_scan()
+        self._rewrite_log(self.table_scan())
+
+    def _rewrite_log(self, snapshot: DataFrame, arrange=None) -> None:
+        """Replace the whole log with ``snapshot``'s rows as nil-txid U
+        entries at one fresh ``_batch`` — the same visible snapshot, with
+        no history below it (the compaction watermark moves to that
+        batch). ``arrange`` lays the stamped rows out before the write
+        (a sort, a range partition); columns it adds are not written.
+        The new log is written beside the old one and swapped in by
+        rename."""
+        import shutil
+
         batch = self._next_batch()
-        compacted = (
+        payload = [c for c in snapshot.columns if c != "_id"]
+        rows = (
             snapshot.withColumn("_txid", F.lit(NIL_TXID))
             .withColumn("_batch", F.lit(batch).cast("long"))
             .withColumn("_seq", F.monotonically_increasing_id())
             .withColumn("_kind", F.lit("U"))
-            .select(*_META_NAMES, *[c for c in snapshot.columns if c != "_id"])
         )
-        tmp = self.log_path + ".compacting"
-        compacted.write.mode("overwrite").option(
+        if arrange is not None:
+            rows = arrange(rows)
+        tmp = self.log_path + ".rewriting"
+        rows.select(*_META_NAMES, *payload).write.mode("overwrite").option(
             "maxRecordsPerFile", self.max_entries
         ).parquet(tmp)
-        import shutil
-
         old = self.log_path + ".old"
         os.rename(self.log_path, old)
         os.rename(tmp, self.log_path)
@@ -1009,110 +1028,45 @@ class Collection:
         return best
 
     @_leased
-    def compact_segments(self, file_a: str, file_b: str) -> str:
-        """Merge TWO log segments into one (reference merges segment
-        pairs, newest-entry-wins per id: src/storage/log_file/
+    def compact_segments(self, file_a: str, file_b: str) -> list[str]:
+        """Merge TWO log segments (reference merges segment pairs,
+        newest-entry-wins per id: src/storage/log_file/
         log_compaction.rs:9-64) — the incremental alternative to
         ``compact()``'s whole-log rewrite: O(two bounded files) I/O per
-        call instead of O(table).
-
-        Per row id, only the newest *decidably-visible* entry in the pair
-        survives (kept at its ORIGINAL ``_batch``/``_seq`` so recency
-        against every other segment is unchanged, rewritten to the nil
-        txid so it stays visible in every snapshot, exactly like
-        ``compact()``'s output). Entries of pending (unresolved)
-        transactions are kept verbatim — they may yet commit; entries of
-        rolled-back transactions are dropped; C/R markers are kept (they
-        gate entries in OTHER segments). Tombstone winners are kept (they
-        may suppress ids in other segments). Crash-safe: the merged file
-        is written before the originals are removed — a crash in between
-        leaves duplicate identical-payload entries, which recency
-        resolution tolerates.
+        call instead of O(table). The merge is ``vacuum``'s
+        (``_merge_segments``) with the pair's max ``_batch`` (parquet
+        footers) as the cutoff: superseded versions and rolled-back
+        entries go, pending-transaction entries, markers and tombstone
+        winners stay.
 
         Like ``compact()``, txid history inside the pair collapses and
         log positions below the pair's max batch stop replaying (the
         compaction watermark advances; position-based incremental
-        consumers rebuild). Returns the merged file path."""
-        paths = []
+        consumers rebuild). Returns the merged file paths — a Spark
+        write can land more than one file."""
+        import pyarrow.parquet as pq
+
+        footers = self._footers()
+        paths, cutoff = [], -1
         for f in (file_a, file_b):
             p = f if os.path.isabs(f) else os.path.join(self.log_path, f)
             if not os.path.isfile(p):
                 raise FileNotFoundError(p)
+            hi = footers.get(os.path.basename(p), (0, None, None, ()))[2]
+            if hi is None:  # no footer statistics: read the column
+                hi = max(pq.read_table(p, columns=["_batch"]).column(0)
+                         .to_pylist(), default=-1)
             paths.append(p)
-        return self._merge_segment_files(paths)
-
-    def _merge_segment_files(self, paths: list[str]) -> str:
-        """Driver-side (pyarrow) segment-merge core for
-        ``compact_segments``: exactly TWO bounded files, so the row loop
-        is O(2 * max_entries) driver memory by construction. Newest
-        decidably-visible entry per id survives at its ORIGINAL
-        ``_batch``/``_seq``; pending-txn entries verbatim; rolled-back
-        entries dropped; markers and tombstone winners kept. The n-ary
-        counterpart for ``vacuum`` (unbounded prefix) is the
-        DISTRIBUTED ``_merge_prefix_spark`` — same semantics, Spark
-        execution."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        # Global visibility sets — markers are tiny by construction; the
-        # scan is column-pruned to (_txid, _kind, _batch). A txid counts
-        # as decided-committed ONLY if its earliest C marker sits at or
-        # below the merged pair's max batch — scan_at_position honors
-        # only markers within the <=p prefix, so nil-rewriting an entry
-        # whose C marker lies above the cutoff would surface it at
-        # positions in [watermark, marker_batch) where it was
-        # pending-invisible before the merge. Those entries stay pending
-        # verbatim; their marker above the cutoff keeps gating them.
-        log = self._read_log()
-        mk = (log.filter(F.col("_kind").isin("C", "R"))
-              .groupBy("_txid", "_kind")
-              .agg(F.min("_batch").alias("_mb")).collect())
-        committed_all = {r["_txid"] for r in mk if r["_kind"] == "C"}
-        rolled = {r["_txid"] for r in mk if r["_kind"] == "R"} - committed_all
-        merged = pa.concat_tables(
-            [pq.read_table(p) for p in paths], promote_options="default")
-        pair_max = max(
-            (r["_batch"] for r in merged.select(["_batch"]).to_pylist()),
-            default=-1)
-        committed = {r["_txid"] for r in mk
-                     if r["_kind"] == "C" and r["_mb"] <= pair_max}
-        cols = merged.column_names
-        rows = merged.to_pylist()
-        rows.sort(key=lambda r: (r["_batch"], r["_seq"]), reverse=True)
-        keep, seen = [], set()
-        for r in rows:  # newest first: first writer per id wins
-            kind = r["_kind"]
-            if kind in ("C", "R"):
-                keep.append(r)
-                continue
-            txid = r["_txid"]
-            if txid in rolled:
-                continue  # dead forever
-            if txid == NIL_TXID or txid in committed:
-                if r["_id"] in seen:
-                    continue  # superseded within the merge set
-                seen.add(r["_id"])
-                r = dict(r, _txid=NIL_TXID)
-                keep.append(r)
-            else:
-                keep.append(r)  # pending txn: undecidable, keep verbatim
-        out = os.path.join(self.log_path, f"merged-{uuid.uuid4().hex}.parquet")
-        pq.write_table(
-            pa.Table.from_pylist(keep, schema=merged.schema).select(cols), out)
-        for p in paths:
-            _remove_segment(p)
-        self._record_compaction(
-            max(r["_batch"] for r in rows) if rows else -1)
-        self._invalidate_snapshots()
-        return out
+            cutoff = max(cutoff, hi)
+        return self._merge_segments(paths, cutoff)
 
     @_leased
     def vacuum(self, before_pos: int) -> int:
         """Bounded time travel: collapse all history strictly below a
         retention position. Every data segment whose entries are ALL
         below ``before_pos`` (``max _batch < before_pos``) is merged —
-        in one pass — into a single resolved base segment via the same
-        newest-visible-wins core as :meth:`compact_segments`, keeping
+        in one pass — into a resolved base via the same
+        newest-visible-wins merge as :meth:`compact_segments`, keeping
         original ``_batch``/``_seq`` values. Segments at or above the
         cutoff (and any segment straddling it) are untouched, so
         ``table_scan()`` and ``scan_at_position(p)`` for every ``p``
@@ -1130,18 +1084,15 @@ class Collection:
         files = [f for f in self._data_files() if f[2] < before_pos]
         if len(files) < 2:
             return 0
-        self._merge_prefix_spark(
+        self._merge_segments(
             [f[0] for f in files], max(f[2] for f in files))
         return len(files)
 
-    def _merge_prefix_spark(self, paths: list[str],
-                            max_batch: int) -> None:
-        """Distributed n-ary segment merge for ``vacuum``: the prefix can
-        be arbitrarily large (it IS the cold bulk of a 100 TB table), so
-        unlike the two-bounded-file pyarrow core this resolves entirely
-        in Spark — one window over ``_id`` partitions of the prefix,
-        never a driver-side row list. Semantics identical to
-        ``_merge_segment_files``:
+    def _merge_segments(self, paths: list[str], max_batch: int) -> list[str]:
+        """The segment merge behind ``compact_segments`` (a pair) and
+        ``vacuum`` (an unbounded cold prefix — the bulk of a 100 TB
+        table), resolved entirely in Spark: one window over ``_id``
+        partitions of the merged files, never a driver-side row list.
 
         - markers (C/R) kept verbatim (they gate other segments);
         - rolled-back entries dropped;
@@ -1163,40 +1114,30 @@ class Collection:
         Crash-safe ordering: merged part files land in the log dir
         under fresh names BEFORE the originals are removed — a crash in
         between leaves duplicate identical-payload entries, which
-        recency resolution tolerates."""
+        recency resolution tolerates. Returns the merged file paths."""
         import shutil
 
         # visibility sets from the WHOLE log's markers (tiny, broadcast);
         # committed is additionally gated on marker position (see above)
         log = self._read_log()
-        committed_all = (log.filter(F.col("_kind") == "C")
-                         .select("_txid").distinct())
-        committed = (log.filter((F.col("_kind") == "C")
-                                & (F.col("_batch") <= F.lit(int(max_batch))))
-                     .select("_txid").distinct())
+        committed = _committed(
+            log.filter(F.col("_batch") <= F.lit(int(max_batch))))
         rolled = (log.filter(F.col("_kind") == "R").select("_txid").distinct()
-                  .join(committed_all, "_txid", "left_anti"))
+                  .join(_committed(log), "_txid", "left_anti"))
 
-        prefix = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        markers = prefix.filter(F.col("_kind").isin("C", "R"))
-        data = (prefix.filter(F.col("_kind").isin("U", "D"))
+        segments = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        markers = segments.filter(F.col("_kind").isin("C", "R"))
+        data = (segments.filter(F.col("_kind").isin("U", "D"))
                 .join(F.broadcast(rolled), "_txid", "left_anti"))
-        decided = data.filter(F.col("_txid") == NIL_TXID).unionByName(
-            data.join(F.broadcast(committed), "_txid", "left_semi"))
+        winners = (_newest(_visible(data, committed), live=False)
+                   .withColumn("_txid", F.lit(NIL_TXID)))
         pending = (data.filter(F.col("_txid") != NIL_TXID)
                    .join(F.broadcast(committed), "_txid", "left_anti"))
-        w = Window.partitionBy("_id").orderBy(
-            F.col("_batch").desc(), F.col("_seq").desc())
-        winners = (
-            decided.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn")
-            .withColumn("_txid", F.lit(NIL_TXID))
-        )
-        out_cols = prefix.columns
+        out_cols = segments.columns
         merged = (markers.select(*out_cols)
                   .unionByName(winners.select(*out_cols))
                   .unionByName(pending.select(*out_cols)))
-        tmp = self.log_path + ".vacuuming"
+        tmp = self.log_path + ".merging"
         merged.write.mode("overwrite").option(
             "maxRecordsPerFile", self.max_entries).parquet(tmp)
         stamp = uuid.uuid4().hex
@@ -1214,6 +1155,7 @@ class Collection:
         # every position, so the watermark stays faithful
         self._record_compaction(int(max_batch))
         self._invalidate_snapshots()
+        return moved
 
     # -- indexes (reference: src/collection/indexes/ — declared structs with
     # no-op update(); README.md:78-81 Table/Index Seek roadmap). Spark
@@ -1226,29 +1168,10 @@ class Collection:
         on those columns prune row groups at scan time (index seek)."""
         if not self._log_exists():
             return  # never written: nothing to rewrite
-        snapshot = self.table_scan().sortWithinPartitions(*sort_by)
-        batch = self._next_batch()
-        compacted = (
-            snapshot.withColumn("_txid", F.lit(NIL_TXID))
-            .withColumn("_batch", F.lit(batch).cast("long"))
-            .withColumn("_seq", F.monotonically_increasing_id())
-            .withColumn("_kind", F.lit("U"))
-            .select(*_META_NAMES, *[c for c in snapshot.columns if c != "_id"])
-        )
-        tmp = self.log_path + ".optimizing"
-        compacted.repartition(*[F.col(c) for c in sort_by]).sortWithinPartitions(
-            *sort_by
-        ).write.mode("overwrite").option(
-            "maxRecordsPerFile", self.max_entries
-        ).parquet(tmp)
-        import shutil
-
-        old = self.log_path + ".old"
-        os.rename(self.log_path, old)
-        os.rename(tmp, self.log_path)
-        shutil.rmtree(old)
-        self._record_compaction(batch)
-        self._invalidate_snapshots()
+        self._rewrite_log(
+            self.table_scan().sortWithinPartitions(*sort_by),
+            lambda rows: rows.repartition(*[F.col(c) for c in sort_by])
+            .sortWithinPartitions(*sort_by))
 
     @_leased
     def optimize_zorder(self, cols: list[str], bits: int = 10) -> None:
@@ -1303,32 +1226,10 @@ class Collection:
             for b in range(bits):
                 bit = F.shiftright(scaled, b).bitwiseAND(F.lit(1).cast("long"))
                 z = z.bitwiseOR(F.shiftleft(bit, b * n + i))
-        ordered = snap.withColumn("_z", z)
-        batch = self._next_batch()
-        compacted = (
-            ordered.withColumn("_txid", F.lit(NIL_TXID))
-            .withColumn("_batch", F.lit(batch).cast("long"))
-            .withColumn("_seq", F.monotonically_increasing_id())
-            .withColumn("_kind", F.lit("U"))
-        )
-        tmp = self.log_path + ".zordering"
-        (
-            compacted.repartitionByRange(F.col("_z"))
-            .sortWithinPartitions("_z")
-            .drop("_z")
-            .select(*_META_NAMES, *[c for c in snap.columns if c != "_id"])
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", self.max_entries)
-            .parquet(tmp)
-        )
-        import shutil
-
-        old = self.log_path + ".old"
-        os.rename(self.log_path, old)
-        os.rename(tmp, self.log_path)
-        shutil.rmtree(old)
-        self._record_compaction(batch)
-        self._invalidate_snapshots()
+        self._rewrite_log(
+            snap,
+            lambda rows: rows.withColumn("_z", z)
+            .repartitionByRange(F.col("_z")).sortWithinPartitions("_z"))
 
     def inverted_index(self, text_col: str,
                        max_df: int | None = 10_000) -> DataFrame:

@@ -100,3 +100,12 @@ def test_no_registry_output_schema_carries_decimal_eager_builders(spark):
         "DECIMAL output columns are a proven driver hash-fail class "
         f"(r7-r10 json_agg bisection); offending queries: {offenders}"
     )
+
+
+def test_forced_rechecks_lead_the_driver_window():
+    """Every ``_FORCE_RECHECK`` key is a registry key, and ``queries()``
+    puts exactly the forced set first — inside the driver's 50-query
+    correctness window. Session-free: only the ordering is checked."""
+    forced = E._FORCE_RECHECK
+    assert forced <= set(E._REGISTRY_KEYS)
+    assert set(list(E.queries())[:len(forced)]) == forced

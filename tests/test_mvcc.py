@@ -751,15 +751,16 @@ def test_compact_segments_preserves_snapshot(spark, tmp_path):
     assert len(files) >= 2
     merged = c.compact_segments(files[0], files[1])
     import os as _os
-    assert _os.path.isfile(merged)
+    assert merged and all(_os.path.isfile(p) for p in merged)
     assert _snap(c) == before
     # the pending transaction still commits correctly after the merge
     c.commit(t_pend)
     assert _snap(c) == {("a", "v3-pending", 3), ("c", "v1", 1)}
-    # rolled-back payload is physically gone from the merged file
+    # rolled-back payload is physically gone from every merged file
     import pyarrow.parquet as pq
-    names = pq.read_table(merged, columns=["name"]).column("name").to_pylist()
-    assert "rolled" not in names
+    for p in merged:
+        names = pq.read_table(p, columns=["name"]).column("name").to_pylist()
+        assert "rolled" not in names
 
 
 def test_compact_segments_drops_superseded_and_advances_watermark(spark, tmp_path):
@@ -1117,11 +1118,11 @@ def test_storage_maintain_orchestrates(spark, tmp_path):
 
 
 def test_vacuum_visibility_cases_distributed(spark, tmp_path):
-    """The Spark-side prefix merge must resolve the same visibility
-    matrix as the pair-merge core: superseded committed versions
-    collapse, rolled-back payloads vanish physically, pending
-    transactions survive verbatim and still commit afterwards, and an
-    evolved (wider) segment merges via mergeSchema."""
+    """vacuum's prefix merge resolves the same visibility matrix as a
+    segment-pair merge: superseded committed versions collapse,
+    rolled-back payloads vanish physically, pending transactions
+    survive verbatim and still commit afterwards, and an evolved
+    (wider) segment merges via mergeSchema."""
     st = Storage(spark, str(tmp_path / "vacviz"), StorageConfig(max_entries=64))
     c = st.get_collection("t")
     c.set_objects(None, _df(spark, [("a", "v1", 1), ("b", "v1", 1)]).coalesce(1))
@@ -1161,7 +1162,8 @@ def test_merge_keeps_entries_pending_when_marker_above_cutoff(spark, tmp_path):
     marker sits ABOVE it must NOT be nil-rewritten: scan_at_position only
     honors markers within the <=p prefix, so rewriting would surface the
     rows at positions in [watermark, marker_batch) where they were
-    pending-invisible before the merge. Covers both merge cores."""
+    pending-invisible before the merge. Covers the vacuum path of the
+    segment merge."""
     st = Storage(spark, str(tmp_path / "strad"), StorageConfig(max_entries=64))
     c = st.get_collection("t")
     c.set_objects(None, _df(spark, [("a", "v1", 1)]).coalesce(1))   # batch 0
@@ -1306,8 +1308,8 @@ def test_full_lifecycle_at_log_scale(spark, tmp_path):
 
 
 def test_pair_merge_keeps_entries_pending_when_marker_above_pair(spark, tmp_path):
-    """Same straddling-marker scenario through compact_segments (the
-    pyarrow pair-merge core): the pair's max batch is the cutoff."""
+    """Same straddling-marker scenario through compact_segments: the
+    pair's max batch is the cutoff."""
     st = Storage(spark, str(tmp_path / "strad2"), StorageConfig(max_entries=64))
     c = st.get_collection("t")
     c.set_objects(None, _df(spark, [("a", "v1", 1)]).coalesce(1))   # batch 0

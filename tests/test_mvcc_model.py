@@ -9,7 +9,7 @@ import tempfile
 
 from hypothesis import HealthCheck, given, settings, strategies as st_
 
-from db_spark.engine import Storage, StorageConfig
+from db_spark.engine import Storage, StorageConfig, Transaction
 from db_spark.table import uuid7
 
 IDS = st_.sampled_from(["a", "b", "c"])
@@ -50,3 +50,15 @@ def test_snapshot_matches_dict_model(spark, ops):
     pos_got = {r["_id"]: r["v"]
                for r in c.scan_at_position(c.log_position()).collect()}
     assert pos_got == model
+    # the current versions of history() are the model
+    hist = {r["_id"]: r["v"] for r in c.history().collect() if r["is_current"]}
+    assert hist == model
+    # an open transaction reads its own upsert on top of the model
+    tx = Transaction(st)
+    tx.set("m", spark.createDataFrame([("a", 100)], "_id string, v int"))
+    assert {r["_id"]: r["v"] for r in tx.scan("m").collect()} \
+        == {**model, "a": 100}
+    c.rollback(tx.txid)
+    # collapsing the whole log keeps the snapshot
+    c.vacuum(c.log_position() + 1)
+    assert {r["_id"]: r["v"] for r in c.table_scan().collect()} == model
