@@ -99,15 +99,12 @@ class Storage:
 
     def maintain(self, retain_positions: int | None = None) -> dict:
         """One-call storage maintenance — the scheduled-job entrypoint.
-        Per collection: (1) redundancy-triggered compaction via
-        ``maybe_compact`` (incremental segment-pair merge first,
-        whole-log rewrite only when scattered redundancy demands it,
-        commit-marker coalescing otherwise), then (2) optional history
-        retention — ``vacuum`` everything below
-        ``log_position() - retain_positions``, bounding time travel to
-        the last N log positions. Each step is bounded I/O per
-        collection; nothing here scans payloads beyond what the chosen
-        compaction path rewrites. Returns
+        Per collection: (1) ``maybe_compact`` — the whole-log segment
+        merge when the redundancy threshold is met, commit-marker
+        coalescing otherwise — then (2) optional history retention —
+        ``vacuum`` everything below ``log_position() - retain_positions``,
+        bounding time travel to the last N log positions. Nothing here
+        scans payloads beyond what the merges rewrite. Returns
         ``{collection: {"compacted": bool, "vacuumed_segments": int}}``.
         """
         report = {}

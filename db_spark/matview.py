@@ -8,14 +8,14 @@ shape (delta processing per Blakeley et al. 1986, "Efficiently updating
 materialized views"). Deltas are tracked by LOG POSITION (immutable
 prefix, `Collection.scan_at_position`) rather than txid so nil-txid
 (pre-committed) writes — the streaming-ingestion pattern — are tracked
-too. Compaction (`compact()` / `optimize()` / `optimize_zorder()`)
-rewrites live rows at a fresh `_batch` and deletes the old log files —
-the prefix the last refresh was based on no longer replays, so a delta
-there is undefined (the old-image scan would come back empty and the
-new-image pass would double-count onto the stored state). The
-collection persists a `compaction_watermark()`; `refresh()` compares
-its stored position against it and falls back to a from-scratch state
-rebuild whenever the baseline predates the watermark.
+too. Compaction (`compact()` / `optimize()` / `optimize_zorder()` /
+`vacuum()`) merges log files, keeping only the newest visible entry per
+id — positions below the merge position no longer replay, so a delta
+from a baseline there is undefined (the old-image scan would miss the
+superseded versions it needs). The collection persists a
+`compaction_watermark()`; `refresh()` compares its stored position
+against it and falls back to a from-scratch state rebuild whenever the
+baseline predates the watermark.
 
 Scale accounting (the reason this exists at 100 TB):
 
@@ -168,9 +168,9 @@ class IncrementalAggView:
         the interval, or (b) a commit marker for its transaction landed
         in the interval — the changed-id set is the union of both.
 
-        Exception: compaction destroys the log prefix (live rows are
-        rewritten at a fresh position and their original files deleted),
-        so when the stored position predates the collection's
+        Exception: compaction destroys the log prefix below the position
+        it merged at (superseded versions are dropped, their files
+        deleted), so when the stored position predates the collection's
         ``compaction_watermark()`` the old-image baseline is gone — the
         delta is undefined and the state is rebuilt from scratch. This
         costs one full aggregate, same as the initial build; schedule

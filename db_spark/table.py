@@ -14,9 +14,11 @@ columns ``(_txid, _batch, _seq, _kind, _id)`` + the payload columns.
 Snapshot resolution is declarative — a broadcast semi-join against the
 (tiny) commit-marker set (``_visible``) and a window ``row_number() = 1``
 per ``_id`` (``_newest``) — so Catalyst/AQE plan it, and the same query
-works on a 1000-executor cluster. Every reader and both compaction
-paths go through those two helpers. Compaction rewrites the log keeping
-only live rows (reference: src/storage/log_file/log_compaction.rs:9-64).
+works on a 1000-executor cluster. Every reader and the one log rewrite,
+the segment merge (``_merge_segments``: compact, optimize, vacuum), go
+through those two helpers; the merge keeps the newest visible entry per
+id at its original log position (reference:
+src/storage/log_file/log_compaction.rs:9-64).
 
 UUIDv7 ordering note (SURVEY §7): canonical UUID strings are fixed-width
 hex with dashes at fixed positions, so lexicographic string order equals
@@ -733,12 +735,20 @@ class Collection:
         is the total order the reference's newest-file-first walk
         implies. Read from the parquet footers' ``_batch`` statistics —
         zero Spark jobs. A non-empty file without them (a writer that
-        skipped statistics) falls back to a column-pruned Spark agg."""
+        skipped statistics) falls back to a column-pruned Spark agg.
+
+        Never below the compaction watermark: a merge drops markers and
+        tombstones, which can leave the newest surviving entry below the
+        position the log had reached, and that position stays the log's
+        (its snapshot still replays; the next append continues after
+        it)."""
         footers = self._footers().values()
         if any(n and hi is None for n, _lo, hi, _cols in footers):
             row = self._read_log().agg(F.max("_batch").alias("m")).collect()[0]
-            return -1 if row["m"] is None else int(row["m"])
-        return max((hi for n, _lo, hi, _cols in footers if n), default=-1)
+            top = -1 if row["m"] is None else int(row["m"])
+        else:
+            top = max((hi for n, _lo, hi, _cols in footers if n), default=-1)
+        return max(top, self.compaction_watermark())
 
     def scan_at_position(self, batch: int,
                          ids: DataFrame | None = None) -> DataFrame:
@@ -894,10 +904,10 @@ class Collection:
 
     def compaction_watermark(self) -> int:
         """Lowest log position ``p`` such that ``scan_at_position(q)`` is
-        still faithful for every ``q >= p``. Compaction rewrites live rows
-        at a fresh ``_batch`` and deletes the files they came from, so the
-        log prefix below the rewrite batch no longer replays — position
-        snapshots taken there are empty or partial. Incremental consumers
+        still faithful for every ``q >= p``. A segment merge drops the
+        superseded versions of the files it merged, so positions below
+        the merged range's max ``_batch`` no longer replay — position
+        snapshots taken there are partial. Incremental consumers
         (matview refresh) compare their stored position against this
         watermark and fall back to a full rebuild when their baseline
         predates it. ``-1`` = never compacted, every position is valid."""
@@ -937,55 +947,33 @@ class Collection:
 
     @_leased
     def compact(self) -> None:
-        """Merge the log keeping only the newest committed version per id,
-        dropping tombstones and markers (reference:
-        src/storage/log_file/log_compaction.rs:9-64). Rewrites the log as
-        nil-txid (pre-committed) entries — same visible snapshot."""
-        if not self._log_exists():
-            return  # never written: nothing to rewrite
-        self._rewrite_log(self.table_scan())
+        """Merge the whole log keeping only the newest visible version per
+        id (reference: src/storage/log_file/log_compaction.rs:9-64): the
+        segment merge over every log file, at ``log_position()``. Commit
+        markers, rollback markers, rolled-back entries and tombstones go;
+        committed winners stay at their original ``_batch``/``_seq`` as
+        nil-txid entries, and pending-transaction entries stay verbatim,
+        so a transaction that commits afterwards still resolves against
+        them by log position. Same visible snapshot; positions below the
+        current one stop replaying."""
+        self._merge_log()
 
-    def _rewrite_log(self, snapshot: DataFrame, arrange=None) -> None:
-        """Replace the whole log with ``snapshot``'s rows as nil-txid U
-        entries at one fresh ``_batch`` — the same visible snapshot, with
-        no history below it (the compaction watermark moves to that
-        batch). ``arrange`` lays the stamped rows out before the write
-        (a sort, a range partition); columns it adds are not written.
-        The new log is written beside the old one and swapped in by
-        rename."""
-        import shutil
+    def _merge_log(self, arrange=None) -> None:
+        """``_merge_segments`` over every log file at ``log_position()``
+        — ``compact``, and ``optimize``/``optimize_zorder`` with their
+        ``arrange``; a no-op before the first write."""
+        names = self._log_files()
+        if names:
+            self._merge_segments(
+                [os.path.join(self.log_path, n) for n in names],
+                self.log_position(), arrange)
 
-        batch = self._next_batch()
-        payload = [c for c in snapshot.columns if c != "_id"]
-        rows = (
-            snapshot.withColumn("_txid", F.lit(NIL_TXID))
-            .withColumn("_batch", F.lit(batch).cast("long"))
-            .withColumn("_seq", F.monotonically_increasing_id())
-            .withColumn("_kind", F.lit("U"))
-        )
-        if arrange is not None:
-            rows = arrange(rows)
-        tmp = self.log_path + ".rewriting"
-        rows.select(*_META_NAMES, *payload).write.mode("overwrite").option(
-            "maxRecordsPerFile", self.max_entries
-        ).parquet(tmp)
-        old = self.log_path + ".old"
-        os.rename(self.log_path, old)
-        os.rename(tmp, self.log_path)
-        shutil.rmtree(old)
-        self._record_compaction(batch)
-        self._invalidate_snapshots()
-
-    # -- incremental (segment-pair) compaction ------------------------------
-    def _data_segments(self):
-        """Data segments (log files holding U/D entries) in append order,
-        yielded one at a time as ``(path, n_entries, ids, min_batch,
-        max_batch)``. The order comes from the footer cache's ``_batch``
-        minima (ties by file name), so no file is read to sort; then each
-        file's ``_id``/``_kind`` columns alone are read (parquet column
-        pruning, never the payload) as the consumer advances — a consumer
-        that keeps only the previous segment holds two id sets at most,
-        each capped at ``maxRecordsPerFile`` entries."""
+    def _data_files(self) -> list[tuple[str, int, int]]:
+        """``(path, min_batch, max_batch)`` of every data segment (a log
+        file holding U/D entries), in append order. The order comes from
+        the footer cache's ``_batch`` minima (ties by file name); each
+        file's ``_kind`` column alone is read to tell data from
+        marker-only files (parquet column pruning, never the payload)."""
         import pyarrow.parquet as pq
 
         order = []
@@ -996,69 +984,10 @@ class Collection:
             if lo is None:  # writer kept no statistics: read the column
                 b = pq.read_table(p, columns=["_batch"]).column(0).to_pylist()
                 lo, hi = min(b), max(b)
-            order.append((lo, name, hi, p))
-        for lo, _name, hi, p in sorted(order):
-            t = pq.read_table(p, columns=["_id", "_kind"])
-            ids = [i for i, k in zip(t.column("_id").to_pylist(),
-                                     t.column("_kind").to_pylist())
-                   if k in ("U", "D")]
-            if ids:  # marker-only files are coalesce_markers territory
-                yield p, len(ids), set(ids), lo, hi
-
-    def _data_files(self) -> list[tuple[str, int, int]]:
-        """``(path, min_batch, max_batch)`` of every data segment, in
-        append order."""
-        return [(p, lo, hi) for p, _n, _ids, lo, hi in self._data_segments()]
-
-    def most_redundant_pair(self) -> tuple[str, str, float] | None:
-        """The adjacent (in append order) pair of data segments with the
-        highest redundancy = duplicate-id fraction — the pair whose merge
-        reclaims the most relative space. Adjacency matters: merging
-        non-adjacent segments could interleave recency across the gap.
-        O(files) column-pruned reads, O(max_entries) driver memory (one
-        neighbor's id multiset at a time)."""
-        best = prev = None
-        for cur in self._data_segments():
-            if prev is not None:
-                total = prev[1] + cur[1]
-                redundancy = (total - len(prev[2] | cur[2])) / total
-                if best is None or redundancy > best[2]:
-                    best = (prev[0], cur[0], redundancy)
-            prev = cur
-        return best
-
-    @_leased
-    def compact_segments(self, file_a: str, file_b: str) -> list[str]:
-        """Merge TWO log segments (reference merges segment pairs,
-        newest-entry-wins per id: src/storage/log_file/
-        log_compaction.rs:9-64) — the incremental alternative to
-        ``compact()``'s whole-log rewrite: O(two bounded files) I/O per
-        call instead of O(table). The merge is ``vacuum``'s
-        (``_merge_segments``) with the pair's max ``_batch`` (parquet
-        footers) as the cutoff: superseded versions and rolled-back
-        entries go, pending-transaction entries, markers and tombstone
-        winners stay.
-
-        Like ``compact()``, txid history inside the pair collapses and
-        log positions below the pair's max batch stop replaying (the
-        compaction watermark advances; position-based incremental
-        consumers rebuild). Returns the merged file paths — a Spark
-        write can land more than one file."""
-        import pyarrow.parquet as pq
-
-        footers = self._footers()
-        paths, cutoff = [], -1
-        for f in (file_a, file_b):
-            p = f if os.path.isabs(f) else os.path.join(self.log_path, f)
-            if not os.path.isfile(p):
-                raise FileNotFoundError(p)
-            hi = footers.get(os.path.basename(p), (0, None, None, ()))[2]
-            if hi is None:  # no footer statistics: read the column
-                hi = max(pq.read_table(p, columns=["_batch"]).column(0)
-                         .to_pylist(), default=-1)
-            paths.append(p)
-            cutoff = max(cutoff, hi)
-        return self._merge_segments(paths, cutoff)
+            kinds = pq.read_table(p, columns=["_kind"]).column(0).unique()
+            if {"U", "D"} & set(kinds.to_pylist()):
+                order.append((lo, name, hi, p))
+        return [(p, lo, hi) for lo, _name, hi, p in sorted(order)]
 
     @_leased
     def vacuum(self, before_pos: int) -> int:
@@ -1066,7 +995,7 @@ class Collection:
         retention position. Every data segment whose entries are ALL
         below ``before_pos`` (``max _batch < before_pos``) is merged —
         in one pass — into a resolved base via the same
-        newest-visible-wins merge as :meth:`compact_segments`, keeping
+        newest-visible-wins segment merge as :meth:`compact`, keeping
         original ``_batch``/``_seq`` values. Segments at or above the
         cutoff (and any segment straddling it) are untouched, so
         ``table_scan()`` and ``scan_at_position(p)`` for every ``p``
@@ -1088,17 +1017,27 @@ class Collection:
             [f[0] for f in files], max(f[2] for f in files))
         return len(files)
 
-    def _merge_segments(self, paths: list[str], max_batch: int) -> list[str]:
-        """The segment merge behind ``compact_segments`` (a pair) and
-        ``vacuum`` (an unbounded cold prefix — the bulk of a 100 TB
-        table), resolved entirely in Spark: one window over ``_id``
-        partitions of the merged files, never a driver-side row list.
+    def _merge_segments(self, paths: list[str], max_batch: int,
+                        arrange=None) -> list[str]:
+        """The one log rewrite: ``vacuum`` merges a cold prefix, and
+        ``compact``/``optimize``/``optimize_zorder`` the whole log.
+        Resolved entirely in Spark: one window over ``_id`` partitions of
+        the merged files, never a driver-side row list.
 
         - markers (C/R) kept verbatim (they gate other segments);
         - rolled-back entries dropped;
         - committed / nil entries: newest per id wins at its ORIGINAL
           ``_batch``/``_seq``, rewritten to the nil txid;
         - pending-transaction entries kept verbatim (may yet commit).
+
+        When ``paths`` are every file of the log, no other segment is
+        left to gate: markers go (every txid they name is decided —
+        committed entries are nil now, rolled-back ones gone), and so do
+        tombstone winners, except where a kept pending entry of the same
+        id could still commit under them.
+
+        ``arrange`` lays the merged rows out before the write (a sort, a
+        range partition); columns it adds are not written.
 
         A txid counts as decided-committed ONLY if its (earliest) C
         marker sits at or below the merged range's ``max_batch`` —
@@ -1125,8 +1064,9 @@ class Collection:
         rolled = (log.filter(F.col("_kind") == "R").select("_txid").distinct()
                   .join(_committed(log), "_txid", "left_anti"))
 
-        segments = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        markers = segments.filter(F.col("_kind").isin("C", "R"))
+        before = frozenset(self._log_files())
+        whole = {os.path.basename(p) for p in paths} >= before
+        segments = self.spark.read.schema(log.schema).parquet(*paths)
         data = (segments.filter(F.col("_kind").isin("U", "D"))
                 .join(F.broadcast(rolled), "_txid", "left_anti"))
         winners = (_newest(_visible(data, committed), live=False)
@@ -1134,9 +1074,19 @@ class Collection:
         pending = (data.filter(F.col("_txid") != NIL_TXID)
                    .join(F.broadcast(committed), "_txid", "left_anti"))
         out_cols = segments.columns
-        merged = (markers.select(*out_cols)
-                  .unionByName(winners.select(*out_cols))
-                  .unionByName(pending.select(*out_cols)))
+        if whole:
+            pending_ids = (pending.select("_id").distinct()
+                           .withColumn("_pending", F.lit(True)))
+            merged = (winners.join(pending_ids, "_id", "left")
+                      .filter((F.col("_kind") == "U")
+                              | F.col("_pending").isNotNull())
+                      .select(*out_cols))
+        else:
+            merged = (segments.filter(F.col("_kind").isin("C", "R"))
+                      .unionByName(winners.select(*out_cols)))
+        merged = merged.unionByName(pending.select(*out_cols))
+        if arrange is not None:
+            merged = arrange(merged).select(*out_cols)
         tmp = self.log_path + ".merging"
         merged.write.mode("overwrite").option(
             "maxRecordsPerFile", self.max_entries).parquet(tmp)
@@ -1150,9 +1100,11 @@ class Collection:
         shutil.rmtree(tmp, ignore_errors=True)
         for p in paths:
             _remove_segment(p)
-        # max_batch comes from the merged files' parquet-footer stats —
-        # no extra Spark job; rows dropped by the merge were invisible at
-        # every position, so the watermark stays faithful
+        # every column of the log schema is written, so the schema does
+        # not change: fold the new files in without re-inferring
+        self._note_own_write(before, merged.schema)
+        # rows dropped by the merge were invisible at every position at
+        # or above max_batch, so the watermark stays faithful
         self._record_compaction(int(max_batch))
         self._invalidate_snapshots()
         return moved
@@ -1165,11 +1117,9 @@ class Collection:
     def optimize(self, sort_by: list[str]) -> None:
         """'Sorted index': compact the log with rows sorted by ``sort_by``
         so every parquet row group carries tight min/max stats — filters
-        on those columns prune row groups at scan time (index seek)."""
-        if not self._log_exists():
-            return  # never written: nothing to rewrite
-        self._rewrite_log(
-            self.table_scan().sortWithinPartitions(*sort_by),
+        on those columns prune row groups at scan time (index seek). The
+        same segment merge as ``compact``, sorted before the write."""
+        self._merge_log(
             lambda rows: rows.repartition(*[F.col(c) for c in sort_by])
             .sortWithinPartitions(*sort_by))
 
@@ -1226,8 +1176,7 @@ class Collection:
             for b in range(bits):
                 bit = F.shiftright(scaled, b).bitwiseAND(F.lit(1).cast("long"))
                 z = z.bitwiseOR(F.shiftleft(bit, b * n + i))
-        self._rewrite_log(
-            snap,
+        self._merge_log(
             lambda rows: rows.withColumn("_z", z)
             .repartitionByRange(F.col("_z")).sortWithinPartitions("_z"))
 
@@ -1345,22 +1294,12 @@ class Collection:
 
     def maybe_compact(self) -> bool:
         """Compaction trigger: redundancy ratio >= threshold (reference:
-        collection_statistics.rs:11-14, default 0.5 storage_config.rs:33).
-
-        Incremental-first: when some adjacent segment PAIR clears the
-        redundancy threshold, merge just that pair (O(two bounded files)
-        I/O — the 100 TB-safe path; at that scale a whole-log rewrite per
-        trigger is the bottleneck). Only when no single pair is redundant
-        but the log as a whole is — duplicates scattered across distant
-        segments, which pairwise merges can't see — does it fall back to
-        the full ``compact()``; explicit ``compact()`` calls remain
-        available for forced whole-log normalization. Otherwise it
-        opportunistically folds accumulated 1-row commit-marker files
-        (``coalesce_markers``)."""
-        pair = self.most_redundant_pair()
-        if pair is not None and pair[2] >= self.compaction_redundancy:
-            self.compact_segments(pair[0], pair[1])
-            return True
+        collection_statistics.rs:11-14, default 0.5 storage_config.rs:33)
+        runs the whole-log ``compact()``. Otherwise it folds accumulated
+        1-row commit-marker files once there are 64 of them
+        (``coalesce_markers``). Deciding costs one ``statistics()``:
+        footer row counts plus the live count, memoized until the next
+        write. Returns whether it compacted."""
         if self.statistics().should_compact:
             self.compact()
             return True

@@ -553,8 +553,8 @@ def test_log_position_without_footer_statistics(storage, spark):
 
 def test_no_crc_outlives_its_segment(spark, tmp_path):
     """Deleting a Spark-written segment also deletes Hadoop's
-    ``.<name>.crc`` sibling: coalesce_markers, compact_segments and
-    vacuum leave no orphaned checksum files."""
+    ``.<name>.crc`` sibling: coalesce_markers, compact and vacuum leave
+    no orphaned checksum files."""
     import os as _os
 
     st = Storage(spark, str(tmp_path / "crc"), StorageConfig(max_entries=64))
@@ -571,8 +571,7 @@ def test_no_crc_outlives_its_segment(spark, tmp_path):
         c.commit(tx)
     assert c.coalesce_markers(min_files=2) > 0
     assert orphans() == []
-    files = [f[0] for f in c._data_files()]
-    c.compact_segments(files[0], files[1])
+    c.compact()
     assert orphans() == []
     c.set_objects(None, _df(spark, [("k", "v2", 9)]))
     assert c.vacuum(c.log_position() + 1) >= 2
@@ -702,22 +701,36 @@ def test_zorder_non_numeric_columns_fall_back(spark, tmp_path):
 
 
 def test_compaction_watermark_recorded(spark, tmp_path):
-    """compact/optimize/optimize_zorder destroy the log prefix; each must
-    advance the persisted watermark incremental consumers check."""
-    st = Storage(spark, str(tmp_path / "wm"), StorageConfig(max_entries=64))
-    c = st.get_collection("t")
+    """compact/optimize/optimize_zorder destroy the log prefix below the
+    position they merge at; each must advance the persisted watermark
+    incremental consumers check. The merge position itself still
+    replays, and stays the log position when the merge drops the
+    entries that reached it (a tombstone and its commit marker), so a
+    reopened collection appends after it."""
+    root = str(tmp_path / "wm")
+    c = Storage(spark, root, StorageConfig(max_entries=64)).get_collection("t")
     assert c.compaction_watermark() == -1
     c.set_objects(None, spark.createDataFrame(
         [("a", 1), ("b", 2)], "_id string, qty int"))
     assert c.compaction_watermark() == -1  # appends don't destroy prefix
+    t = uuid7()
+    c.delete_objects(t, ["b"])
+    c.commit(t)
     pos = c.log_position()
+    before = _snap_qty(c)
     c.compact()
     wm = c.compaction_watermark()
-    assert wm > pos
-    c.set_objects(None, spark.createDataFrame(
+    assert wm == pos == c.log_position()
+    assert {(r["_id"], r["qty"])
+            for r in c.scan_at_position(pos).collect()} == before
+    with pytest.raises(ValueError, match="watermark"):
+        c.scan_at_position(pos - 1)
+    c2 = Storage(spark, root, StorageConfig(max_entries=64)).get_collection("t")
+    c2.set_objects(None, spark.createDataFrame(
         [("c", 3)], "_id string, qty int"))
-    c.optimize(["qty"])
-    wm2 = c.compaction_watermark()
+    assert c2.log_position() == pos + 1
+    c2.optimize(["qty"])
+    wm2 = c2.compaction_watermark()
     assert wm2 > wm  # monotone across maintenance calls
 
 
@@ -725,16 +738,20 @@ def _snap(c):
     return {(r["_id"], r["name"], r["qty"]) for r in c.table_scan().collect()}
 
 
+def _snap_qty(c):
+    return {(r["_id"], r["qty"]) for r in c.table_scan().collect()}
+
+
 def test_compact_segments_preserves_snapshot(spark, tmp_path):
-    """Segment-pair merge (reference log_compaction.rs:9-64): merging two
-    log files keeps the visible snapshot identical while dropping
-    superseded versions — including across the pending/rolled-back/
-    committed visibility cases the whole-log path resolves."""
+    """The segment merge over the whole log (``compact()``, reference
+    log_compaction.rs:9-64) keeps the visible snapshot identical while
+    dropping superseded versions — across the pending/rolled-back/
+    committed visibility cases."""
     st = Storage(spark, str(tmp_path / "sp"), StorageConfig(max_entries=64))
     c = st.get_collection("t")
     # segment 1: two committed-by-default rows
     c.set_objects(None, _df(spark, [("a", "v1", 1), ("b", "v1", 1)]))
-    # segment 2: supersede a, add c, tombstone b, plus a pending and a
+    # then: supersede a, add c, tombstone b, plus a pending and a
     # rolled-back write that must NOT be collapsed into the merge
     c.set_objects(None, _df(spark, [("a", "v2", 2), ("c", "v1", 1)]))
     t_del = uuid7()
@@ -747,18 +764,14 @@ def test_compact_segments_preserves_snapshot(spark, tmp_path):
     c.rollback(t_roll)
     before = _snap(c)
     assert before == {("a", "v2", 2), ("c", "v1", 1)}
-    files = [f[0] for f in c._data_files()]
-    assert len(files) >= 2
-    merged = c.compact_segments(files[0], files[1])
-    import os as _os
-    assert merged and all(_os.path.isfile(p) for p in merged)
+    c.compact()
     assert _snap(c) == before
     # the pending transaction still commits correctly after the merge
     c.commit(t_pend)
     assert _snap(c) == {("a", "v3-pending", 3), ("c", "v1", 1)}
-    # rolled-back payload is physically gone from every merged file
+    # rolled-back payload is physically gone from the log
     import pyarrow.parquet as pq
-    for p in merged:
+    for p, _lo, _hi in c._data_files():
         names = pq.read_table(p, columns=["name"]).column("name").to_pylist()
         assert "rolled" not in names
 
@@ -770,37 +783,82 @@ def test_compact_segments_drops_superseded_and_advances_watermark(spark, tmp_pat
     c.set_objects(None, _df(spark, [(str(i), "v1", i) for i in range(20)]).coalesce(1))
     c.set_objects(None, _df(spark, [(str(i), "v2", i) for i in range(20)]).coalesce(1))
     pos = c.log_position()
-    files = [f[0] for f in c._data_files()]
     before = _snap(c)
-    c.compact_segments(files[0], files[1])
+    c.compact()
     assert _snap(c) == before
     stats = c.statistics()
     assert stats.total_entries == 20  # 40 -> 20: duplicates physically gone
     assert c.compaction_watermark() == pos  # positions below stop replaying
+    # winners keep their original _batch (the v2 append's)
+    assert {r["_batch"] for r in c.log_entries().collect()} == {pos}
     # recency against LATER segments is preserved (original _batch kept)
     c.set_objects(None, _df(spark, [("0", "v3", 99)]))
     assert ("0", "v3", 99) in _snap(c)
 
 
-def test_maybe_compact_picks_most_redundant_pair(spark, tmp_path):
-    """maybe_compact prefers the bounded segment-pair merge; the merged
-    pair is the adjacent one with the highest duplicate-id fraction."""
-    st = Storage(spark, str(tmp_path / "sp3"), StorageConfig(max_entries=64))
+@pytest.mark.parametrize("rewrite", ["compact", "optimize", "optimize_zorder"])
+def test_rewrite_keeps_pending_entries_in_log_order(spark, tmp_path, rewrite):
+    """Every whole-log rewrite keeps pending-transaction entries, and
+    committed winners keep their log position, so a transaction that
+    commits after the rewrite resolves by position: its entry older
+    than the winner loses, its entry newer than the winner wins, and a
+    tombstone newer than a pending entry still suppresses it. Once
+    every transaction is decided, a compact leaves no marker and no
+    tombstone."""
+    st = Storage(spark, str(tmp_path / "pend"), StorageConfig(max_entries=64))
     c = st.get_collection("t")
-    c.set_objects(None, _df(spark, [(f"x{i}", "v1", i) for i in range(10)]).coalesce(1))
-    c.set_objects(None, _df(spark, [(f"y{i}", "v1", i) for i in range(10)]).coalesce(1))
-    # fully redundant vs segment 2
-    c.set_objects(None, _df(spark, [(f"y{i}", "v2", i) for i in range(10)]).coalesce(1))
-    pa_, pb_, red = c.most_redundant_pair()
-    files = [f[0] for f in c._data_files()]
-    assert (pa_, pb_) == (files[1], files[2]) and red == 0.5
-    before = _snap(c)
-    n_before = len(files)
-    assert c.maybe_compact()
-    assert _snap(c) == before
-    assert len(c._data_files()) == n_before - 1  # exactly one pair merged
-    # segment 1 (x-rows) untouched — incremental, not whole-log
-    assert c.statistics().total_entries == 30 - 10
+
+    def rows(*r):
+        return spark.createDataFrame(list(r), "_id string, v int")
+
+    c.set_objects(None, rows(("a", 1), ("b", 1), ("c", 1)))
+    t_old = uuid7()
+    c.set_objects(t_old, rows(("a", 10), ("b", 10)))  # pending, older
+    c.set_objects(None, rows(("a", 2)))               # winner of a
+    c.delete_objects(None, ["b"])                     # winner of b
+    t_new = uuid7()
+    c.set_objects(t_new, rows(("a", 20)))             # pending, newer
+    t_c = uuid7()
+    c.set_objects(t_c, rows(("c", 3)))
+    c.commit(t_c)
+
+    def snap():
+        return {r["_id"]: r["v"] for r in c.table_scan().collect()}
+
+    assert snap() == {"a": 2, "c": 3}
+    {"compact": c.compact,
+     "optimize": lambda: c.optimize(["v"]),
+     "optimize_zorder": lambda: c.optimize_zorder(["v"])}[rewrite]()
+    assert snap() == {"a": 2, "c": 3}
+    c.commit(t_old)
+    assert snap() == {"a": 2, "c": 3}
+    c.commit(t_new)
+    assert snap() == {"a": 20, "c": 3}
+    c.compact()
+    assert snap() == {"a": 20, "c": 3}
+    stats = c.statistics()
+    assert stats.total_entries == stats.live_entries == 2
+
+
+def test_merge_reads_no_schema_inference_job(storage, spark):
+    """vacuum() and compact() read their input over the cached log
+    schema and fold the files they write into it: the next snapshot
+    builds with zero Spark jobs (no mergeSchema inference)."""
+    c = storage.get_collection("t")
+    for i in range(3):
+        t = uuid7()
+        c.set_objects(t, _df(spark, [(f"r{i}", "v", i), ("k", "v", i)]))
+        c.commit(t)
+    want = {("r0", "v", 0), ("r1", "v", 1), ("r2", "v", 2), ("k", "v", 2)}
+    assert c.vacuum(c.log_position() + 1) >= 2
+    jobs, snap = _spark_jobs(spark, c.table_scan)
+    assert jobs == []
+    assert {(r["_id"], r["name"], r["qty"]) for r in snap.collect()} == want
+    c.compact()
+    jobs, snap = _spark_jobs(spark, c.table_scan)
+    assert jobs == []
+    assert {(r["_id"], r["name"], r["qty"]) for r in snap.collect()} == want
+    assert _schema_matches_inference(spark, c)
 
 
 def test_inverted_index_max_df_guard(storage, spark):
@@ -1305,25 +1363,3 @@ def test_full_lifecycle_at_log_scale(spark, tmp_path):
     with pytest.raises(ValueError):
         c.scan_at_position(p_v2)
     base.unpersist()
-
-
-def test_pair_merge_keeps_entries_pending_when_marker_above_pair(spark, tmp_path):
-    """Same straddling-marker scenario through compact_segments: the
-    pair's max batch is the cutoff."""
-    st = Storage(spark, str(tmp_path / "strad2"), StorageConfig(max_entries=64))
-    c = st.get_collection("t")
-    c.set_objects(None, _df(spark, [("a", "v1", 1)]).coalesce(1))   # batch 0
-    t = uuid7()
-    c.set_objects(t, _df(spark, [("x", "vtx", 9)]).coalesce(1))     # batch 1
-    p_data = c.log_position()
-    c.commit(t)
-    p_marker = c.log_position()
-    files = c._data_files()
-    assert len(files) == 2
-    c.compact_segments(files[0][0], files[1][0])
-    # watermark = pair max = p_data; that position must still hide x
-    assert {(r["_id"], r["name"], r["qty"])
-            for r in c.scan_at_position(p_data).collect()} == {("a", "v1", 1)}
-    assert {(r["_id"], r["name"], r["qty"])
-            for r in c.scan_at_position(p_marker).collect()} \
-        == {("a", "v1", 1), ("x", "vtx", 9)}

@@ -62,3 +62,10 @@ def test_snapshot_matches_dict_model(spark, ops):
     # collapsing the whole log keeps the snapshot
     c.vacuum(c.log_position() + 1)
     assert {r["_id"]: r["v"] for r in c.table_scan().collect()} == model
+    # a transaction open across a compaction still commits its write
+    tx = Transaction(st)
+    tx.set("m", spark.createDataFrame([("b", 200)], "_id string, v int"))
+    c.compact()
+    c.commit(tx.txid)
+    assert {r["_id"]: r["v"] for r in c.table_scan().collect()} \
+        == {**model, "b": 200}

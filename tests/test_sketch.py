@@ -280,10 +280,10 @@ def test_matview_over_streaming_ingestion(spark, tmp_path):
 
 @pytest.mark.parametrize("maintenance", ["compact", "optimize", "zorder", "vacuum"])
 def test_matview_refresh_after_compaction_rebuilds(spark, mv_setup, maintenance):
-    """ADVICE r3 (high): compaction rewrites every live row at a fresh
-    _batch and deletes the old log files, so the view's stored baseline
-    position no longer replays — a naive delta would double-count the
-    whole snapshot onto the stored state. refresh() must detect the
+    """ADVICE r3 (high): compaction merges the log files and drops
+    superseded versions, so the view's stored baseline position no
+    longer replays — a naive delta would miscount onto the stored
+    state. refresh() must detect the
     compaction watermark and rebuild, staying bit-identical to the
     direct aggregate; later refreshes resume the delta path."""
     from db_spark.table import uuid7
