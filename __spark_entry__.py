@@ -6511,6 +6511,36 @@ _FORCE_RECHECK: frozenset[str] = frozenset({
     "hll_merge",
     "hll_rolling",
     "hll_set_ops",
+    # The similarity tier's search stages were folded into one helper
+    # each (rank tail, cosine, IVF probes/scoring/model, ADC search,
+    # index meta; db_spark/llm/similarity.py). Normalized plans and
+    # rows are unchanged at sf0.01, but each key on that code still
+    # needs a fresh correctness row.
+    "centroid_outliers",
+    "cosine_topk",
+    "mmr_rerank",
+    "ivf_topk",
+    "ivf_recall",
+    "ivf_rbo",
+    "ivf_index_topk",
+    "hybrid_rrf",
+    "kcenter",
+    "kcenter_batched",
+    "ivf_kmeans_topk",
+    "embedding_near_dup",
+    "dbscan",
+    "semantic_dedup",
+    "embedding_decontaminate",
+    "pca_project",
+    "pca_topk",
+    "pq_topk",
+    "pq_index_topk",
+    "ivfpq_index_topk",
+    "l2_topk",
+    "ivfpq_recall",
+    "pq_sampled",
+    "pq_subspace_var",
+    "ivfpq_topk",
 })
 
 

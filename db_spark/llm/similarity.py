@@ -12,8 +12,12 @@ sequential fold order, making results bit-reproducible.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ByteType, DoubleType, IntegerType, LongType, ShortType, StructField,
+    StructType)
 
 from db_spark.llm.dedup import _plan_cache, h32
 
@@ -66,6 +70,55 @@ def cosine(a: Column, b: Column) -> Column:
     return _cos_guarded(dot(a, b), norm(a) * norm(b))
 
 
+def _round_cos(dot_expr: Column, denom: Column) -> Column:
+    """The module's reported cosine: guarded, rounded to 6 decimals —
+    the engine-exact parity every ranking and threshold here compares."""
+    return F.round(_cos_guarded(dot_expr, denom), 6)
+
+
+def _staged(
+    df: DataFrame, keep: list, vec_col: str, v: str, n: str,
+) -> DataFrame:
+    """``keep`` plus the double-cast vector as ``v`` and its L2 norm as
+    ``n``. Casts and norms are staged per SIDE of a pair join: a row's
+    norm is the same for every partner, so computing it inside cosine()
+    per pair would cost one extra array fold per partner; arithmetic is
+    unchanged — dot / (norm_a * norm_b) on the same doubles — so
+    results are bit-identical."""
+    df = df.select(*keep, _dbl(F.col(vec_col)).alias(v))
+    return df.select(*keep, v, _norm_d(F.col(v)).alias(n))
+
+
+def _staged_cos(a: str, b: str, na: str, nb: str) -> Column:
+    """Round-6 cosine of two staged vector columns given their norms."""
+    return _round_cos(_dot_d(F.col(a), F.col(b)), F.col(na) * F.col(nb))
+
+
+def _top_k(df: DataFrame, part, order: list, k: "int | None",
+           *out) -> DataFrame:
+    """The rank tail every search and assignment here ends in:
+    ``row_number`` over ``part`` ordered by ``order`` (which ends in an
+    id, so the rank is a total order), keeping ranks ``<= k`` — or only
+    the winner when ``k`` is None — then selecting ``out``, which may
+    read the rank as ``_rk``."""
+    w = Window.partitionBy(part).orderBy(*order)
+    ranked = df.withColumn("_rk", F.row_number().over(w))
+    keep = F.col("_rk") == 1 if k is None else F.col("_rk") <= k
+    return ranked.filter(keep).select(*out)
+
+
+def _rank() -> Column:
+    return F.col("_rk").cast("long").alias("rank")
+
+
+def _sim_topk(scored: DataFrame, k: int, id_col: str,
+              query_id_col: str) -> DataFrame:
+    """Cosine top-k output: (query, id, sim, rank), ranked by (sim desc,
+    id asc) for cross-engine determinism."""
+    return _top_k(scored, query_id_col, [F.col("sim").desc(), F.col(id_col)],
+                  k, query_id_col, id_col, "sim", _rank())
+
+
 def brute_force_topk(
     corpus: DataFrame, queries: DataFrame, k: int = 10,
     id_col: str = "vec_id", vec_col: str = "embedding",
@@ -76,29 +129,12 @@ def brute_force_topk(
     work fully partition-parallel, no shuffle until the final top-k
     (which AQE keeps tiny). Ranking key is (rounded sim desc, id asc)
     for cross-engine determinism."""
-    # casts and norms staged per SIDE: a corpus row's norm is the same
-    # for every query, so computing it inside cosine() per pair costs
-    # |Q| extra array folds per corpus row (same for the query side);
-    # arithmetic is unchanged — dot / (norm_a * norm_b) on the same
-    # doubles — so results are bit-identical
-    c = corpus.select(F.col(id_col), _dbl(F.col(vec_col)).alias("_cv"))
-    c = c.select(id_col, "_cv", _norm_d(F.col("_cv")).alias("_cn"))
-    q = queries.select(
-        F.col(query_id_col), _dbl(F.col(vec_col)).alias("_qv"))
-    q = q.select(query_id_col, "_qv", _norm_d(F.col("_qv")).alias("_qn"))
+    c = _staged(corpus, [id_col], vec_col, "_cv", "_cn")
+    q = _staged(queries, [query_id_col], vec_col, "_qv", "_qn")
     scored = c.crossJoin(F.broadcast(q)).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(_cos_guarded(
-            _dot_d(F.col("_cv"), F.col("_qv")),
-            F.col("_cn") * F.col("_qn")), 6).alias("sim"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select(query_id_col, id_col, "sim", F.col("_rk").cast("long").alias("rank"))
-    )
+        F.col(query_id_col), F.col(id_col),
+        _staged_cos("_cv", "_qv", "_cn", "_qn").alias("sim"))
+    return _sim_topk(scored, k, id_col, query_id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -126,22 +162,53 @@ def _assign_to(corpus: DataFrame, centroids: DataFrame,
     cosine() per pair they would each be recomputed n_cells (resp.
     |corpus|) times; arithmetic order is unchanged, so assignments are
     bit-identical."""
-    c = corpus.select(
-        F.col(id_col), F.col(vec_col), _dbl(F.col(vec_col)).alias("_cv"))
-    c = c.select(id_col, vec_col, "_cv", _norm_d(F.col("_cv")).alias("_cn"))
-    cent = centroids.select("cell_id", _dbl(F.col("_cvec")).alias("_ce"))
-    cent = cent.select("cell_id", "_ce", _norm_d(F.col("_ce")).alias("_cen"))
+    c = _staged(corpus, [id_col, vec_col], vec_col, "_cv", "_cn")
+    cent = _staged(centroids, ["cell_id"], "_cvec", "_ce", "_cen")
     scored = c.crossJoin(F.broadcast(cent)).select(
         F.col(id_col), F.col(vec_col), F.col("cell_id"),
-        F.round(_cos_guarded(
-            _dot_d(F.col("_cv"), F.col("_ce")),
-            F.col("_cn") * F.col("_cen")), 6).alias("_csim"),
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("_csim").desc(), F.col("cell_id"))
+        _staged_cos("_cv", "_ce", "_cn", "_cen").alias("_csim"))
+    return _top_k(scored, id_col, [F.col("_csim").desc(), F.col("cell_id")],
+                  None, id_col, vec_col, "cell_id")
+
+
+def _id_hash_sample(
+    corpus: DataFrame, id_col: str, salt: str, n: int,
+    out: "str | None" = None,
+) -> DataFrame:
+    """The ``n`` ids ranked lowest by the salted hash ``h32(salt || id)``,
+    ties -> lowest id (as ``out`` when given): a training sample that is
+    the same on any engine and partitioning, so the oracle can replay
+    it."""
+    idc = F.col(id_col) if out is None else F.col(id_col).alias(out)
     return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .select(id_col, vec_col, "cell_id")
+        corpus.select(idc)
+        .orderBy(h32(F.concat(F.lit(salt), F.col(id_col).cast("string"))),
+                 F.col(id_col))
+        .limit(int(n)))
+
+
+def _mean_vectors(
+    df: DataFrame, key: Column, g: str, vec_col: str, scale: int, out: str,
+) -> DataFrame:
+    """Per-group element-wise mean vector, (g, out array<double>), for
+    the group column ``key`` named ``g``. Components accumulate in
+    *scaled BIGINT* (each rounded to 1/``scale``), so the sum — and
+    everything that compares against the mean — is identical under any
+    partition order; plain double summation would make it run-dependent.
+    One (group, component) hash aggregate and one per-group collect."""
+    comp = df.select(key, F.posexplode(_dbl(F.col(vec_col))).alias("_j", "_x"))
+    means = (
+        comp.groupBy(g, "_j")
+        .agg(F.sum(F.round(F.col("_x") * scale).cast("long")).alias("_s"),
+             F.count(F.lit(1)).alias("_n"))
+        .withColumn("_m", F.col("_s").cast("double")
+                    / (F.lit(float(scale)) * F.col("_n")))
+    )
+    return (
+        means.groupBy(g)
+        .agg(F.array_sort(F.collect_list(F.struct("_j", "_m"))).alias("_jm"))
+        .select(g, F.transform(F.col("_jm"),
+                               lambda s: s.getField("_m")).alias(out))
     )
 
 
@@ -175,12 +242,7 @@ def ivf_kmeans_centroids(
     on the manually-subsetted corpus, bit for bit."""
     src = corpus
     if train_sample_n is not None:
-        pick = (
-            corpus.select(F.col(id_col))
-            .orderBy(h32(F.concat(F.lit("ivfs:"),
-                                  F.col(id_col).cast("string"))),
-                     F.col(id_col))
-            .limit(int(train_sample_n)))
+        pick = _id_hash_sample(corpus, id_col, "ivfs:", train_sample_n)
         src = corpus.join(F.broadcast(pick), id_col, "left_semi")
     # per-round centroid tables are persisted AND plan-truncated
     # (n_cells rows): the Lloyd chain otherwise grows exponentially
@@ -196,25 +258,8 @@ def ivf_kmeans_centroids(
     )
     for _ in range(n_iter):
         assigned = _assign_to(src, cent, id_col, vec_col)
-        comp = assigned.select(
-            "cell_id", F.posexplode(_dbl(F.col(vec_col))).alias("_j", "_x"))
-        means = (
-            comp.groupBy("cell_id", "_j")
-            .agg(
-                F.sum(F.round(F.col("_x") * scale).cast("long")).alias("_s"),
-                F.count(F.lit(1)).alias("_n"),
-            )
-            .withColumn(
-                "_m",
-                F.col("_s").cast("double") / (F.lit(float(scale)) * F.col("_n")))
-        )
-        new_cent = (
-            means.groupBy("cell_id")
-            .agg(F.array_sort(F.collect_list(F.struct("_j", "_m"))).alias("_jm"))
-            .select(
-                "cell_id",
-                F.transform(F.col("_jm"), lambda s: s.getField("_m")).alias("_new"))
-        )
+        new_cent = _mean_vectors(
+            assigned, F.col("cell_id"), "cell_id", vec_col, scale, "_new")
         cent = _plan_cache(
             # new_cent is <= n_cells rows but sits above an aggregate, so
             # Catalyst has no size estimate and would sort-merge; broadcast
@@ -222,6 +267,58 @@ def ivf_kmeans_centroids(
             .select("cell_id", F.coalesce(F.col("_new"), F.col("_cvec")).alias("_cvec"))
         )
     return cent
+
+
+def _ivf_model(
+    corpus: DataFrame, n_cells: int, refine_iters: int,
+    id_col: str, vec_col: str,
+) -> "tuple[DataFrame, DataFrame]":
+    """(centroids, assigned corpus) of an IVF index: the seed centroids
+    of ``ivf_assign``, or ``refine_iters`` deterministic Lloyd rounds
+    over them (``ivf_kmeans_centroids``) and one assignment."""
+    if refine_iters > 0:
+        centroids = ivf_kmeans_centroids(
+            corpus, n_cells, refine_iters, id_col, vec_col)
+        return centroids, _assign_to(corpus, centroids, id_col, vec_col)
+    return ivf_assign(corpus, n_cells, id_col, vec_col)
+
+
+def _ivf_probes(
+    queries: DataFrame, centroids: DataFrame, n_probe: int,
+    vec_col: str, query_id_col: str, carry_vec: bool,
+) -> DataFrame:
+    """Per query the ``n_probe`` cells whose centroid is nearest by
+    round-6 cosine, ties -> lowest cell. ``carry_vec`` keeps the query
+    vector for IVF scoring: (query_id_col, _qvec, cell_id); without it
+    the IVF-PQ form (_qid, cell_id), whose ADC tables start from the
+    query's components."""
+    qid = query_id_col if carry_vec else "_qid"
+    cols = [qid, "_qvec", "cell_id"] if carry_vec else [qid, "cell_id"]
+    q = queries.select(
+        F.col(query_id_col) if carry_vec else F.col(query_id_col).alias(qid),
+        F.col(vec_col).alias("_qvec"))
+    qv, cv = F.col("_qvec"), F.col("_cvec")
+    q_cells = q.crossJoin(F.broadcast(centroids)).select(
+        *cols, _round_cos(dot(qv, cv), norm(qv) * norm(cv)).alias("_csim"))
+    return _top_k(q_cells, qid, [F.col("_csim").desc(), F.col("cell_id")],
+                  n_probe, *cols)
+
+
+def _ivf_score(
+    cells: DataFrame, probes: DataFrame, k: int,
+    id_col: str, vec_col: str, query_id_col: str,
+) -> DataFrame:
+    """The IVF search shared by the one-shot and persisted paths: each
+    query's exact round-6 cosine against the vectors of its probed
+    cells, top ``k`` per query. ``cells`` is the assigned corpus
+    (cell_id, id, vector) — in flight for ``ivf_topk``, the pruned
+    parquet scan for ``ivf_index_topk``."""
+    asg = _staged(cells, ["cell_id", id_col], vec_col, "_cv", "_cn")
+    pq = _staged(probes, [query_id_col, "cell_id"], "_qvec", "_qv", "_qn")
+    scored = asg.join(F.broadcast(pq), "cell_id").select(
+        F.col(query_id_col), F.col(id_col),
+        _staged_cos("_cv", "_qv", "_cn", "_qn").alias("sim"))
+    return _sim_topk(scored, k, id_col, query_id_col)
 
 
 def ivf_topk(
@@ -236,52 +333,38 @@ def ivf_topk(
     cell_id so probes prune at the file level (``ivf_index_topk``).
     ``refine_iters`` > 0 runs that many deterministic Lloyd iterations
     over the seed centroids (``ivf_kmeans_centroids``) before assigning."""
-    if refine_iters > 0:
-        centroids = ivf_kmeans_centroids(
-            corpus, n_cells, refine_iters, id_col, vec_col)
-        assigned = _assign_to(corpus, centroids, id_col, vec_col)
-    else:
-        centroids, assigned = ivf_assign(corpus, n_cells, id_col, vec_col)
-    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"))
-    q_cells = (
-        q.crossJoin(F.broadcast(centroids))
-        .select(
-            query_id_col, "_qvec", "cell_id",
-            F.round(cosine(F.col("_qvec"), F.col("_cvec")), 6).alias("_csim"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("_csim").desc(), F.col("cell_id"))
-    probes = (
-        q_cells.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= n_probe)
-        .select(query_id_col, "_qvec", "cell_id")
-    )
-    # corpus-side casts/norms staged once per row (see brute_force_topk)
-    asg = assigned.select(
-        "cell_id", F.col(id_col), _dbl(F.col(vec_col)).alias("_cv"))
-    asg = asg.select("cell_id", id_col, "_cv",
-                     _norm_d(F.col("_cv")).alias("_cn"))
-    pq = probes.select(
-        query_id_col, "cell_id", _dbl(F.col("_qvec")).alias("_qv"))
-    pq = pq.select(query_id_col, "cell_id", "_qv",
-                   _norm_d(F.col("_qv")).alias("_qn"))
-    scored = asg.join(F.broadcast(pq), "cell_id").select(
-        F.col(query_id_col), F.col(id_col),
-        F.round(_cos_guarded(
-            _dot_d(F.col("_cv"), F.col("_qv")),
-            F.col("_cn") * F.col("_qn")), 6).alias("sim"),
-    )
-    wk = Window.partitionBy(query_id_col).orderBy(F.col("sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("_rk", F.row_number().over(wk))
-        .filter(F.col("_rk") <= k)
-        .select(query_id_col, id_col, "sim", F.col("_rk").cast("long").alias("rank"))
-    )
+    centroids, assigned = _ivf_model(
+        corpus, n_cells, refine_iters, id_col, vec_col)
+    probes = _ivf_probes(queries, centroids, n_probe, vec_col,
+                         query_id_col, carry_vec=True)
+    return _ivf_score(assigned, probes, k, id_col, vec_col, query_id_col)
 
 
 # ---------------------------------------------------------------------------
 # Persisted IVF index — cell-pruned probing (the 100 TB path)
 # ---------------------------------------------------------------------------
+
+def _write_centroids(centroids: DataFrame, path: str) -> None:
+    centroids.withColumnRenamed("_cvec", "centroid").write.mode(
+        "overwrite").parquet(path + "/centroids")
+
+
+def _read_centroids(spark, path: str) -> DataFrame:
+    return spark.read.parquet(path + "/centroids").withColumnRenamed(
+        "centroid", "_cvec")
+
+
+def _read_probed(spark, path: str, probes: DataFrame) -> DataFrame:
+    """The cell-partitioned table at ``path``, read for the probed cells
+    only: the union of probed cell ids (tiny: |Q|·n_probe ints, the one
+    legitimate driver-side scalar fetch of a persisted search) becomes
+    a literal IN filter on the partition column, so the parquet scan
+    plans PartitionFilters and reads only those cell directories."""
+    probed_cells = sorted(
+        r["cell_id"] for r in probes.select("cell_id").distinct().collect())
+    return spark.read.parquet(path).filter(
+        F.col("cell_id").isin(probed_cells))  # -> PartitionFilters
+
 
 def ivf_index_build(
     corpus: DataFrame, path: str, n_cells: int = 16, refine_iters: int = 0,
@@ -297,16 +380,11 @@ def ivf_index_build(
 
     Cell directories also give bucketed-join locality for free: a probe
     joins on ``cell_id`` against files already grouped by it."""
-    if refine_iters > 0:
-        centroids = ivf_kmeans_centroids(
-            corpus, n_cells, refine_iters, id_col, vec_col)
-        assigned = _assign_to(corpus, centroids, id_col, vec_col)
-    else:
-        centroids, assigned = ivf_assign(corpus, n_cells, id_col, vec_col)
+    centroids, assigned = _ivf_model(
+        corpus, n_cells, refine_iters, id_col, vec_col)
     assigned.write.mode("overwrite").partitionBy("cell_id").parquet(
         path + "/corpus")
-    centroids.withColumnRenamed("_cvec", "centroid").write.mode(
-        "overwrite").parquet(path + "/centroids")
+    _write_centroids(centroids, path)
 
 
 def ivf_index_topk(
@@ -314,55 +392,16 @@ def ivf_index_topk(
     id_col: str = "vec_id", vec_col: str = "embedding",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Approximate top-k against a persisted IVF index. Per query the
-    ``n_probe`` nearest centroids are selected; the union of probed cell
-    ids (tiny: |Q|·n_probe ints, the one legitimate driver-side scalar
-    fetch here) becomes a literal IN filter on the partition column, so
-    the parquet scan plans PartitionFilters and reads only those cell
-    directories. Scoring then joins probes to their cells and ranks —
-    same arithmetic as ``ivf_topk``, bit-identical results when built
-    with the same centroids."""
-    centroids = spark.read.parquet(path + "/centroids").withColumnRenamed(
-        "centroid", "_cvec")
-    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"))
-    q_cells = q.crossJoin(F.broadcast(centroids)).select(
-        query_id_col, "_qvec", "cell_id",
-        F.round(cosine(F.col("_qvec"), F.col("_cvec")), 6).alias("_csim"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("_csim").desc(), F.col("cell_id"))
-    probes = (
-        q_cells.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= n_probe)
-        .select(query_id_col, "_qvec", "cell_id")
-    )
-    probed_cells = sorted(
-        r["cell_id"] for r in probes.select("cell_id").distinct().collect())
-    asg = (
-        spark.read.parquet(path + "/corpus")
-        .filter(F.col("cell_id").isin(probed_cells))  # -> PartitionFilters
-        .select("cell_id", F.col(id_col), _dbl(F.col(vec_col)).alias("_cv"))
-    )
-    asg = asg.select("cell_id", id_col, "_cv",
-                     _norm_d(F.col("_cv")).alias("_cn"))
-    pq = probes.select(
-        query_id_col, "cell_id", _dbl(F.col("_qvec")).alias("_qv"))
-    pq = pq.select(query_id_col, "cell_id", "_qv",
-                   _norm_d(F.col("_qv")).alias("_qn"))
-    scored = asg.join(F.broadcast(pq), "cell_id").select(
-        F.col(query_id_col), F.col(id_col),
-        F.round(_cos_guarded(
-            _dot_d(F.col("_cv"), F.col("_qv")),
-            F.col("_cn") * F.col("_qn")), 6).alias("sim"),
-    )
-    wk = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("_rk", F.row_number().over(wk))
-        .filter(F.col("_rk") <= k)
-        .select(query_id_col, id_col, "sim",
-                F.col("_rk").cast("long").alias("rank"))
-    )
+    """Approximate top-k against a persisted IVF index: ``ivf_topk``'s
+    search fed from parquet. Probes come from the stored centroids, and
+    the probed cell set prunes the corpus scan to those cells'
+    directories (``_read_probed``); the one IVF scorer then ranks the
+    probed cells' vectors — results are bit-identical to ``ivf_topk``
+    with the same build parameters."""
+    probes = _ivf_probes(queries, _read_centroids(spark, path), n_probe,
+                         vec_col, query_id_col, carry_vec=True)
+    return _ivf_score(_read_probed(spark, path + "/corpus", probes), probes,
+                      k, id_col, vec_col, query_id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -549,6 +588,41 @@ def _srp_verify_kernel(id_col: str, threshold: float):
     return verify
 
 
+def _verify_pairs(grouped, id_col: str, id_type, threshold: float):
+    """``_srp_verify_kernel`` over each group of ``grouped``: candidate
+    pairs (id_a, id_b, _dot, _den) with ids of ``id_type``."""
+    schema = StructType([
+        StructField("id_a", id_type), StructField("id_b", id_type),
+        StructField("_dot", DoubleType()), StructField("_den", DoubleType())])
+    return grouped.applyInPandas(
+        _srp_verify_kernel(id_col, float(threshold)), schema)
+
+
+def _kernel_ok(df: DataFrame, id_col: str, threshold: float) -> bool:
+    """The gate every GEMM verify kernel here shares: a positive
+    threshold, under which NULL, zero and length-mismatched vectors are
+    excluded identically by the kernel and the expression fold, and
+    integral ids (the kernels' int64 output schema). Elsewhere the
+    expression path keeps the original per-pair fold."""
+    return threshold > 0.0 and isinstance(
+        df.schema[id_col].dataType,
+        (ByteType, ShortType, IntegerType, LongType))
+
+
+def _seg_keys(sig: Column, seg_n: int, seg_bits: int) -> Column:
+    """One (seg_id, seg_key) row per pigeonhole segment of an SRP
+    signature: vectors within ``seg_n - 1`` differing bits share at
+    least one segment key."""
+    return F.explode(F.array(*[
+        F.struct(
+            F.lit(s).alias("seg_id"),
+            F.shiftright(sig, s * seg_bits)
+            .bitwiseAND(F.lit((1 << seg_bits) - 1)).alias("seg_key"),
+        )
+        for s in range(seg_n)
+    ])).alias("seg")
+
+
 def embedding_near_dup_pairs(
     corpus: DataFrame, dim: int, threshold: float = 0.95,
     id_col: str = "vec_id", vec_col: str = "embedding",
@@ -575,16 +649,9 @@ def embedding_near_dup_pairs(
     past ~1e6 vectors use n_bits=64 (4 segments x 16 bits = 65536
     buckets/segment) so per-bucket candidate groups stay bounded — the
     verify cost is sum of squared bucket sizes."""
-    from pyspark.sql.types import (
-        ByteType, DoubleType, IntegerType, LongType, ShortType,
-        StructField, StructType)
-
     seg_n = max_hamming + 1
     seg_bits = max(1, n_bits // seg_n)
-    id_type = corpus.schema[id_col].dataType
-    fast = threshold > 0.0 and isinstance(
-        id_type, (ByteType, ShortType, IntegerType, LongType))
-    if fast:
+    if _kernel_ok(corpus, id_col, threshold):
         # Identical-vector grouping (r12 — the jaccard identical-SET
         # grouping discipline applied to embeddings): real corpora are
         # duplicate-saturated, and g byte-identical vectors would send
@@ -618,27 +685,14 @@ def embedding_near_dup_pairs(
             srp_signature(F.col("_vd"), dim, n_bits).alias("_sig"),
         )
         segs = sig.select(
-            id_col, "_vd",
-            F.explode(F.array(*[
-                F.struct(
-                    F.lit(s).alias("seg_id"),
-                    F.shiftright(F.col("_sig"), s * seg_bits)
-                    .bitwiseAND(F.lit((1 << seg_bits) - 1)).alias("seg_key"),
-                )
-                for s in range(seg_n)
-            ])).alias("seg"),
+            id_col, "_vd", _seg_keys(F.col("_sig"), seg_n, seg_bits),
         ).select(id_col, "_vd", "seg.seg_id", "seg.seg_key")
-        out_schema = StructType([
-            StructField("id_a", id_type), StructField("id_b", id_type),
-            StructField("_dot", DoubleType()),
-            StructField("_den", DoubleType())])
-        raw = segs.groupBy("seg_id", "seg_key").applyInPandas(
-            _srp_verify_kernel(id_col, float(threshold)), out_schema)
+        raw = _verify_pairs(segs.groupBy("seg_id", "seg_key"), id_col,
+                            corpus.schema[id_col].dataType, threshold)
         rep_pairs = (
             raw.select(
                 "id_a", "id_b",
-                F.round(_cos_guarded(F.col("_dot"), F.col("_den")), 6)
-                .alias("cos_sim"))
+                _round_cos(F.col("_dot"), F.col("_den")).alias("cos_sim"))
             .filter(F.col("cos_sim") >= threshold)
             .distinct()
         )
@@ -650,9 +704,9 @@ def embedding_near_dup_pairs(
             rep_pairs.join(xa, "id_a").join(xb, "id_b")
             .select(F.least("_xa", "_xb").alias("id_a"),
                     F.greatest("_xa", "_xb").alias("id_b"), "cos_sim"))
-        selfcos = F.round(_cos_guarded(
+        selfcos = _round_cos(
             _dot_d(F.col("_vd"), F.col("_vd")),
-            _norm_d(F.col("_vd")) * _norm_d(F.col("_vd"))), 6)
+            _norm_d(F.col("_vd")) * _norm_d(F.col("_vd")))
         w1 = mem.select(F.col("_rep").alias("_g"),
                         F.col(id_col).alias("id_a"), "_vd")
         w2 = mem.select(F.col("_rep").alias("_g"),
@@ -674,14 +728,7 @@ def embedding_near_dup_pairs(
         id_col, "_vd", _norm_d(F.col("_vd")).alias("_nd"), "_sig")
     segs = sig.select(
         id_col, "_vd", "_nd", "_sig",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(s).alias("seg_id"),
-                F.shiftright(F.col("_sig"), s * seg_bits)
-                .bitwiseAND(F.lit((1 << seg_bits) - 1)).alias("seg_key"),
-            )
-            for s in range(seg_n)
-        ])).alias("seg"),
+        _seg_keys(F.col("_sig"), seg_n, seg_bits),
     ).select(id_col, "_vd", "_nd", "seg.seg_id", "seg.seg_key")
     a = segs.select(
         F.col(id_col).alias("id_a"), F.col("_vd").alias("_va"),
@@ -692,11 +739,8 @@ def embedding_near_dup_pairs(
     return (
         a.join(b, ["seg_id", "seg_key"])
         .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b",
-            F.round(_cos_guarded(
-                _dot_d(F.col("_va"), F.col("_vb")),
-                F.col("_na") * F.col("_nb")), 6).alias("cos_sim"))
+        .select("id_a", "id_b",
+                _staged_cos("_va", "_vb", "_na", "_nb").alias("cos_sim"))
         # threshold BEFORE the dedup exchange (a pair's cos_sim is
         # fixed, so this is value-identical with a smaller shuffle)
         .filter(F.col("cos_sim") >= threshold)
@@ -726,23 +770,8 @@ def centroid_outliers(
     window over distance-ranked rows. No pairwise anything — O(n · dim)
     end to end. Returns (group, id, rank, dist) with dist rounded 6.
     """
-    comp = df.select(
-        F.col(group_col).alias("_g"),
-        F.posexplode(_dbl(F.col(vec_col))).alias("_j", "_x"))
-    means = (
-        comp.groupBy("_g", "_j")
-        .agg(F.sum(F.round(F.col("_x") * scale).cast("long")).alias("_s"),
-             F.count(F.lit(1)).alias("_n"))
-        .withColumn("_m", F.col("_s").cast("double")
-                    / (F.lit(float(scale)) * F.col("_n")))
-    )
-    cent = (
-        means.groupBy("_g")
-        .agg(F.array_sort(F.collect_list(F.struct("_j", "_m"))).alias("_jm"))
-        .select("_g",
-                F.transform(F.col("_jm"),
-                            lambda s: s.getField("_m")).alias("_cvec"))
-    )
+    cent = _mean_vectors(
+        df, F.col(group_col).alias("_g"), "_g", vec_col, scale, "_cvec")
     v = _dbl(F.col(vec_col))
     dist = F.lit(1.0) - _cos_guarded(
         _dot_d(v, F.col("_cvec")),
@@ -752,14 +781,9 @@ def centroid_outliers(
         .select(F.col("_g"), F.col(id_col).alias("_id"),
                 F.round(dist * 1e6).cast("long").alias("_d6"))
     )
-    w = Window.partitionBy("_g").orderBy(F.desc("_d6"), F.asc("_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("_g").alias(group_col), F.col("_id").alias(id_col),
-                F.col("rank").cast("long").alias("rank"),
-                (F.col("_d6").cast("double") / 1e6).alias("dist"))
-    )
+    return _top_k(scored, "_g", [F.desc("_d6"), F.asc("_id")], k,
+                  F.col("_g").alias(group_col), F.col("_id").alias(id_col),
+                  _rank(), (F.col("_d6").cast("double") / 1e6).alias("dist"))
 
 
 def ivf_index_append(
@@ -781,9 +805,8 @@ def ivf_index_append(
     the standard offline-retrain / online-append split. Returns the
     number of appended vectors (a metadata count of the delta, not a
     corpus scan)."""
-    centroids = spark.read.parquet(path + "/centroids").withColumnRenamed(
-        "centroid", "_cvec")
-    assigned = _assign_to(new_vectors, centroids, id_col, vec_col)
+    assigned = _assign_to(new_vectors, _read_centroids(spark, path),
+                          id_col, vec_col)
     assigned.write.mode("append").partitionBy("cell_id").parquet(
         path + "/corpus")
     return new_vectors.count()
@@ -843,9 +866,7 @@ def mmr_rerank(
                 F.col("_n").alias("_sn"))
             pair = remaining.join(
                 sel, remaining[query_id_col] == sel["_sq"])
-            div = F.round(_cos_guarded(
-                _dot_d(F.col("_v"), F.col("_sv")),
-                F.col("_n") * F.col("_sn")), 6)
+            div = _staged_cos("_v", "_sv", "_n", "_sn")
             scored = (
                 pair.groupBy(query_id_col, id_col)
                 .agg(F.max(div).alias("_maxdiv"),
@@ -950,10 +971,7 @@ def k_center_greedy(
     picks = [(1, int(cur), None)]
     for r in range(2, k + 1):
         cvec = st.filter(F.col("_id") == cur).select("_v").collect()[0][0]
-        lit_c = F.array(*[F.lit(float(x)) for x in cvec])
-        d_new = 1 - F.round(_cos_guarded(
-            _dot_d(F.col("_v"), lit_c),
-            _norm_d(F.col("_v")) * _norm_d(lit_c)), 6)
+        d_new = _kc_dist_expr(cvec)
         st = (
             st.filter(F.col("_id") != cur)
             .withColumn("_mind",
@@ -969,13 +987,17 @@ def k_center_greedy(
         picks, "sel_rank int, " + id_col + " long, min_dist double")
 
 
+def _kc_dist(v: Column, c: Column) -> Column:
+    """k-center cosine distance: 1 - the round-6 cosine. The one
+    expression behind the min-dist fold and the batched pair matrix,
+    so the driver-side greedy compares bit-identical values."""
+    return 1 - _round_cos(_dot_d(v, c), _norm_d(v) * _norm_d(c))
+
+
 def _kc_dist_expr(vec: list) -> Column:
-    """Cosine distance of the corpus vector column against one literal
-    center — the exact expression the m=1 fold uses."""
-    lit_c = F.array(*[F.lit(float(x)) for x in vec])
-    return 1 - F.round(_cos_guarded(
-        _dot_d(F.col("_v"), lit_c),
-        _norm_d(F.col("_v")) * _norm_d(lit_c)), 6)
+    """Distance of the corpus vector column ``_v`` to one literal
+    center."""
+    return _kc_dist(F.col("_v"), F.array(*[F.lit(float(x)) for x in vec]))
 
 
 def _k_center_batched(
@@ -1050,11 +1072,8 @@ def _k_center_batched(
             pdf = spark.createDataFrame(
                 rows, "ia long, va array<double>, ib long, vb array<double>")
             mat = pdf.select(
-                "ia", "ib",
-                (1 - F.round(_cos_guarded(
-                    _dot_d(F.col("va"), F.col("vb")),
-                    _norm_d(F.col("va")) * _norm_d(F.col("vb"))), 6))
-                .alias("d")).collect()
+                "ia", "ib", _kc_dist(F.col("va"), F.col("vb")).alias("d")
+            ).collect()
             for r in mat:
                 pair[(r["ia"], r["ib"])] = pair[(r["ib"], r["ia"])] = r["d"]
         accepted: list[int] = []
@@ -1239,13 +1258,16 @@ def semantic_dedup(
         corpus, n_cells=n_cells, n_iter=refine_iters,
         id_col=id_col, vec_col=vec_col)
     assigned = _assign_to(corpus, cent, id_col, vec_col)
-    from pyspark.sql.types import (
-        ByteType, DoubleType, IntegerType, LongType, ShortType,
-        StructField, StructType)
 
-    id_type = corpus.schema[id_col].dataType
-    fast = threshold > 0.0 and isinstance(
-        id_type, (ByteType, ShortType, IntegerType, LongType))
+    def kept(base: DataFrame, removed: DataFrame) -> DataFrame:
+        # removed: the ids a same-cell lower-id vector duplicates
+        removed = removed.distinct().withColumn("_kept", F.lit(False))
+        return (
+            base.join(removed, id_col, "left")
+            .select(F.col(id_col), F.col("cell_id"),
+                    F.coalesce(F.col("_kept"), F.lit(True)).alias("kept")))
+
+    fast = _kernel_ok(corpus, id_col, threshold)
     if fast:
         # Bounded-cell gate (r13 ADVICE): the GEMM kernel materializes
         # ONE WHOLE CELL per Python task (applyInPandas group), so it
@@ -1276,33 +1298,19 @@ def semantic_dedup(
         # both paths) and integral ids (the kernel's int64 schema).
         seg = assigned.select(
             "cell_id", F.col(id_col), _dbl(F.col(vec_col)).alias("_vd"))
-        out_schema = StructType([
-            StructField("id_a", LongType()),
-            StructField("id_b", LongType()),
-            StructField("_dot", DoubleType()),
-            StructField("_den", DoubleType())])
-        raw = seg.groupBy("cell_id").applyInPandas(
-            _srp_verify_kernel(id_col, float(threshold)), out_schema)
+        raw = _verify_pairs(seg.groupBy("cell_id"), id_col, LongType(),
+                            threshold)
         removed = (
             raw.select(
                 "id_b",
-                F.round(_cos_guarded(F.col("_dot"), F.col("_den")), 6)
-                .alias("_cs"))
+                _round_cos(F.col("_dot"), F.col("_den")).alias("_cs"))
             .filter(F.col("_cs") >= F.lit(threshold))
-            .select(F.col("id_b").alias(id_col)).distinct()
-            .withColumn("_kept", F.lit(False)))
-        return (
-            assigned.select(F.col(id_col), "cell_id")
-            .join(removed, id_col, "left")
-            .select(F.col(id_col), F.col("cell_id"),
-                    F.coalesce(F.col("_kept"), F.lit(True)).alias("kept"))
-        )
+            .select(F.col("id_b").alias(id_col)))
+        return kept(assigned.select(F.col(id_col), "cell_id"), removed)
     # expression path: non-integral id types or non-positive thresholds
     # (where the kernel's NULL/zero-vector shortcuts would not be
     # output-equivalent) keep the original per-pair fold
-    v = assigned.select(
-        F.col(id_col), F.col("cell_id"), _dbl(F.col(vec_col)).alias("_v"))
-    v = v.select(id_col, "cell_id", "_v", _norm_d(F.col("_v")).alias("_nn"))
+    v = _staged(assigned, [id_col, "cell_id"], vec_col, "_v", "_nn")
     # Deliberately NOT plan-cached despite three consumers (a-side,
     # b-side, final keep-join): the 66-exchange explain is misleading —
     # Spark dedups the identical Lloyd-chain subplans at runtime via
@@ -1320,17 +1328,40 @@ def semantic_dedup(
     removed = (
         a.join(b, "cell_id")
         .filter(F.col("_ida") < F.col("_idb"))
-        .filter(F.round(_cos_guarded(
-            _dot_d(F.col("_va"), F.col("_vb")),
-            F.col("_na") * F.col("_nb")), 6) >= F.lit(threshold))
-        .select(F.col("_idb").alias(id_col)).distinct()
-        .withColumn("_kept", F.lit(False))
+        .filter(_staged_cos("_va", "_vb", "_na", "_nb") >= F.lit(threshold))
+        .select(F.col("_idb").alias(id_col))
     )
-    return (
-        v.join(removed, id_col, "left")
-        .select(F.col(id_col), F.col("cell_id"),
-                F.coalesce(F.col("_kept"), F.lit(True)).alias("kept"))
-    )
+    return kept(v, removed)
+
+
+def _clamp(x: Column, clamp: float) -> Column:
+    """``x`` CASE-clamped to ±``clamp`` (a CASE, not least/greatest,
+    which swallow NULLs): totality on adversarial magnitudes before the
+    scaled-integer cast of the PQ and PCA paths."""
+    return (F.when(x > clamp, F.lit(clamp))
+            .when(x < -clamp, F.lit(-clamp)).otherwise(x))
+
+
+def _sq_l2(a: str, b: str) -> Column:
+    """Exact squared L2 of scaled-integer components: a DECIMAL(38,0)
+    fold of (a - b)^2 — differences reach 2e12, so squares need 128
+    bits. Bit-identical on any engine and partitioning."""
+    d = F.col(a) - F.col(b)
+    return F.sum(d.cast("decimal(38,0)") * d).cast("decimal(38,0)")
+
+
+#: stored codebook column -> the k-means loop's column
+_CODEBOOK = {"subspace": "_j", "code": "_code", "pos": "_pos", "c": "_c"}
+
+
+def _codebook(cb: DataFrame) -> DataFrame:
+    """A stored codebook (subspace, code, pos, c) in k-means columns."""
+    return cb.select(*[F.col(s).alias(c) for s, c in _CODEBOOK.items()])
+
+
+def _stored_codebook(cent: DataFrame) -> DataFrame:
+    """The k-means codebook (_j, _code, _pos, _c) in stored columns."""
+    return cent.select(*[F.col(c).alias(s) for s, c in _CODEBOOK.items()])
 
 
 def _pq_components(
@@ -1353,9 +1384,7 @@ def _pq_components(
     if int(m) < 1:
         raise ValueError(f"pq: m must be >= 1, got {m}")
     arr = F.col(vec_col).cast("array<double>")
-    x = F.col("_raw")
-    cx = (F.when(x > clamp, F.lit(clamp))
-           .when(x < -clamp, F.lit(-clamp)).otherwise(x))
+    cx = _clamp(F.col("_raw"), clamp)
     d_sub = F.expr(f"_dim div {int(m)}")
     dim_ok = F.when(
         (F.col("_dim") % int(m) == 0) & (F.col("_dim") >= int(m)),
@@ -1423,16 +1452,12 @@ def _pq_assign(comp: DataFrame, cent: DataFrame, out_id: str) -> DataFrame:
     squared L2 (DECIMAL(38,0) fold of (x-c)^2 — diffs reach 2e12, so
     squares need 128-bit; ties -> lowest code). Returns (out_id, _j,
     _code, _dist DECIMAL) — bit-identical on any engine/partitioning."""
-    d = F.col("_x") - F.col("_c")
     scored = (
         comp.join(F.broadcast(cent), ["_j", "_pos"])
         .groupBy(out_id, "_j", "_code")
-        .agg(F.sum(d.cast("decimal(38,0)") * d)
-             .cast("decimal(38,0)").alias("_dist")))
-    w = Window.partitionBy(out_id, "_j").orderBy("_dist", "_code")
-    return (scored.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1)
-            .select(out_id, "_j", "_code", "_dist"))
+        .agg(_sq_l2("_x", "_c").alias("_dist")))
+    return _top_k(scored, [out_id, "_j"], ["_dist", "_code"], None,
+                  out_id, "_j", "_code", "_dist")
 
 
 def pq_train(
@@ -1476,12 +1501,7 @@ def pq_train(
     """
     src = corpus
     if train_sample_n is not None:
-        pick = (
-            corpus.select(F.col(id_col))
-            .orderBy(h32(F.concat(F.lit("pqs:"),
-                                  F.col(id_col).cast("string"))),
-                     F.col(id_col))
-            .limit(int(train_sample_n)))
+        pick = _id_hash_sample(corpus, id_col, "pqs:", train_sample_n)
         src = corpus.join(F.broadcast(pick), id_col, "left_semi")
     comp = _plan_cache(
         _pq_components(src, m, id_col, vec_col, scale, clamp, "_vid"))
@@ -1490,11 +1510,7 @@ def pq_train(
         .limit(n_codes)
         .select("_vid", (F.row_number().over(
             Window.orderBy("_vid")) - 1).cast("int").alias("_code")))
-    cent = _pq_kmeans(comp, seeds, n_iter)
-    return cent.select(F.col("_j").alias("subspace"),
-                       F.col("_code").alias("code"),
-                       F.col("_pos").alias("pos"),
-                       F.col("_c").alias("c"))
+    return _stored_codebook(_pq_kmeans(comp, seeds, n_iter))
 
 
 def pq_encode(
@@ -1507,14 +1523,85 @@ def pq_encode(
     scans instead of the raw vectors (m codes per vector vs dim
     floats). Same exact-integer assignment as training."""
     comp = _pq_components(corpus, m, id_col, vec_col, scale, clamp, "_vid")
-    cent = codebooks.select(
-        F.col("subspace").alias("_j"), F.col("code").alias("_code"),
-        F.col("pos").alias("_pos"), F.col("c").alias("_c"))
     return (
-        _pq_assign(comp, cent, "_vid")
+        _pq_assign(comp, _codebook(codebooks), "_vid")
         .select(F.col("_vid").alias(id_col),
                 F.col("_j").cast("long").alias("subspace"),
                 F.col("_code").cast("long").alias("code")))
+
+
+def _dist_topk(
+    scored: DataFrame, dist: str, vid: str, k: int, id_col: str,
+    query_id_col: str, scale: int, name: str = "adc_dist",
+) -> DataFrame:
+    """The PQ family's output: per query (``_qid``) the ``k`` smallest
+    exact-integer distances ``dist`` (ties -> lowest ``vid``), reported
+    as one final double division ``round(dist / scale², 6) + 0.0`` —
+    the +0.0 keeps IEEE -0.0 out of the value hash. Returns (query_id,
+    id, ``name``, rank)."""
+    out_id = F.col(vid) if vid == id_col else F.col(vid).alias(id_col)
+    return _top_k(
+        scored, "_qid", [F.col(dist), F.col(vid)], k,
+        F.col("_qid").alias(query_id_col), out_id,
+        (F.round(F.col(dist).cast("double") / float(scale) / float(scale), 6)
+         + F.lit(0.0)).alias(name),
+        _rank())
+
+
+def _adc_topk(
+    rq: DataFrame, cent: DataFrame, codes: DataFrame, by: list, vid: str,
+    k: int, id_col: str, query_id_col: str, scale: int,
+) -> DataFrame:
+    """Asymmetric-distance (ADC) ranking, flat and IVF (Jégou et al.
+    2011): per (query, ``by``, subspace) the query components ``rq``
+    against the codebook ``cent`` give a code -> exact squared-L2 table
+    (model-sized, always broadcast); the corpus ``codes`` (``vid``,
+    ``by``, _j, _code) join it and one (query, vector) aggregate sums
+    the m lookups. Exact integers throughout, so ranking is
+    bit-identical on any engine/partitioning; ties -> lowest id."""
+    tables = (
+        rq.join(F.broadcast(cent), ["_j", "_pos"])
+        .groupBy("_qid", *by, "_j", "_code")
+        .agg(_sq_l2("_x", "_c").alias("_pd")))
+    scored = (
+        codes.join(F.broadcast(tables), [*by, "_j", "_code"])
+        .groupBy("_qid", vid)
+        .agg(F.sum("_pd").cast("decimal(38,0)").alias("_adc")))
+    return _dist_topk(scored, "_adc", vid, k, id_col, query_id_col, scale)
+
+
+def _pq_search(
+    queries: DataFrame, cb: DataFrame, codes: DataFrame, k: int, m: int,
+    id_col: str, vec_col: str, query_id_col: str, scale: int, clamp: float,
+) -> DataFrame:
+    """The flat-PQ search shared by the one-shot and persisted paths:
+    ADC of the queries against the stored-form codebook ``cb`` over the
+    corpus ``codes`` (id, subspace, code)."""
+    qcomp = _pq_components(
+        queries, m, query_id_col, vec_col, scale, clamp, "_qid")
+    codes = codes.select(F.col(id_col), F.col("subspace").alias("_j"),
+                         F.col("code").alias("_code"))
+    return _adc_topk(qcomp, _codebook(cb), codes, [], id_col, k, id_col,
+                     query_id_col, scale)
+
+
+def _read_meta(spark, path: str) -> "tuple[int, int, float]":
+    """(m, scale, clamp) a PQ or IVF-PQ index was built with, from its
+    one-row ``meta`` table — stored, never inferred: a caller-supplied
+    mismatch would silently misalign the query layout against the
+    stored codebook (r11 ADVICE). A missing or empty table raises
+    ValueError naming the path; an unreadable one raises Spark's own
+    error."""
+    try:
+        meta = spark.read.parquet(path + "/meta").first()
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        meta = None
+    if meta is None:
+        raise ValueError(f"index at {path!r} has no meta row: build it "
+                         "with pq_index_build / ivfpq_index_build")
+    return int(meta["m"]), int(meta["scale"]), meta["clamp"]
 
 
 def pq_topk(
@@ -1543,32 +1630,8 @@ def pq_topk(
         corpus, m, n_codes, n_iter, id_col, vec_col, scale, clamp,
         train_sample_n))
     codes = pq_encode(corpus, cb, m, id_col, vec_col, scale, clamp)
-    qcomp = _pq_components(
-        queries, m, query_id_col, vec_col, scale, clamp, "_qid")
-    cent = cb.select(
-        F.col("subspace").alias("_j"), F.col("code").alias("_code"),
-        F.col("pos").alias("_pos"), F.col("c").alias("_c"))
-    d = F.col("_x") - F.col("_c")
-    tables = (
-        qcomp.join(F.broadcast(cent), ["_j", "_pos"])
-        .groupBy("_qid", "_j", "_code")
-        .agg(F.sum(d.cast("decimal(38,0)") * d)
-             .cast("decimal(38,0)").alias("_pd")))
-    scored = (
-        codes.select(F.col(id_col), F.col("subspace").alias("_j"),
-                     F.col("code").alias("_code"))
-        .join(F.broadcast(tables), ["_j", "_code"])
-        .groupBy("_qid", id_col)
-        .agg(F.sum("_pd").cast("decimal(38,0)").alias("_adc")))
-    w = Window.partitionBy("_qid").orderBy(F.col("_adc"), F.col(id_col))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select(F.col("_qid").alias(query_id_col), id_col,
-                (F.round(F.col("_adc").cast("double")
-                         / float(scale) / float(scale), 6)
-                 + F.lit(0.0)).alias("adc_dist"),
-                F.col("_rk").cast("long").alias("rank")))
+    return _pq_search(queries, cb, codes, k, m, id_col, vec_col,
+                      query_id_col, scale, clamp)
 
 
 def pq_index_build(
@@ -1583,10 +1646,8 @@ def pq_index_build(
     embeddings are read exactly once here; every later search scans
     only the code table (m ints/vector vs dim floats — a ~dim/m * 8x
     I/O reduction at float32/8-bit codes) plus the model-sized
-    codebook parquet. ``m`` is persisted explicitly in a one-row
-    ``meta`` table — inferring it back from max(subspace)+1 is only
-    sound because `_pq_components` enforces dim % m == 0, and a stored
-    parameter survives even if that invariant ever changes (r11
+    codebook parquet. ``m``, ``scale`` and ``clamp`` are persisted in a
+    one-row ``meta`` table that every search reads back (r11
     ADVICE)."""
     cb = _plan_cache(pq_train(
         corpus, m, n_codes, n_iter, id_col, vec_col, scale, clamp,
@@ -1607,54 +1668,18 @@ def pq_index_topk(
     query_id_col: str = "query_id",
     scale: int = 1_000_000, clamp: float = 1_000_000.0,
 ) -> DataFrame:
-    """ADC top-k against a persisted PQ index: per-query distance
-    tables from the (model-sized) codebook parquet, one broadcast join
-    against the code table, never the raw vectors. Same exact-integer
-    arithmetic as ``pq_topk`` — results are bit-identical to a
-    one-shot run with the same codebooks. ``m``/``scale``/``clamp``
-    come from the index's persisted ``meta`` table (the parameters the
-    codes were actually built with — a caller-supplied mismatch would
-    silently misalign the query layout against the stored codebook,
-    r11 ADVICE); for a pre-meta index ``m`` falls back to
-    max(subspace)+1 (sound because `_pq_components` enforces
-    dim % m == 0) and scale/clamp to the arguments."""
-    cb = spark.read.parquet(path + "/codebooks")
-    try:
-        meta = spark.read.parquet(path + "/meta").first()
-        m, scale, clamp = int(meta["m"]), int(meta["scale"]), meta["clamp"]
-    except Exception:
-        mx = cb.agg(F.max("subspace")).first()[0]  # model-sized fetch
-        if mx is None:
-            raise ValueError(f"empty PQ index at {path!r}: codebook "
-                             "parquet has no rows")
-        m = int(mx) + 1
-    codes = spark.read.parquet(path + "/codes")
-    qcomp = _pq_components(
-        queries, int(m), query_id_col, vec_col, scale, clamp, "_qid")
-    cent = cb.select(
-        F.col("subspace").alias("_j"), F.col("code").alias("_code"),
-        F.col("pos").alias("_pos"), F.col("c").alias("_c"))
-    d = F.col("_x") - F.col("_c")
-    tables = (
-        qcomp.join(F.broadcast(cent), ["_j", "_pos"])
-        .groupBy("_qid", "_j", "_code")
-        .agg(F.sum(d.cast("decimal(38,0)") * d)
-             .cast("decimal(38,0)").alias("_pd")))
-    scored = (
-        codes.select(F.col(id_col), F.col("subspace").alias("_j"),
-                     F.col("code").alias("_code"))
-        .join(F.broadcast(tables), ["_j", "_code"])
-        .groupBy("_qid", id_col)
-        .agg(F.sum("_pd").cast("decimal(38,0)").alias("_adc")))
-    w = Window.partitionBy("_qid").orderBy(F.col("_adc"), F.col(id_col))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select(F.col("_qid").alias(query_id_col), id_col,
-                (F.round(F.col("_adc").cast("double")
-                         / float(scale) / float(scale), 6)
-                 + F.lit(0.0)).alias("adc_dist"),
-                F.col("_rk").cast("long").alias("rank")))
+    """ADC top-k against a persisted PQ index: ``pq_topk``'s search fed
+    from parquet — the (model-sized) codebook table and the code table,
+    never the raw vectors. Results are bit-identical to a one-shot run
+    with the same codebooks. ``m``/``scale``/``clamp`` come from the
+    index's ``meta`` table (the parameters the codes were actually
+    built with); the ``scale``/``clamp`` arguments are ignored. An
+    index without ``meta`` raises ValueError."""
+    m, scale, clamp = _read_meta(spark, path)
+    return _pq_search(
+        queries, spark.read.parquet(path + "/codebooks"),
+        spark.read.parquet(path + "/codes"), k, m, id_col, vec_col,
+        query_id_col, scale, clamp)
 
 
 def l2_topk(
@@ -1684,22 +1709,12 @@ def l2_topk(
         _pq_components(queries, 1, query_id_col, vec_col, scale, clamp,
                        "_qid")
         .select("_qid", "_pos", F.col("_x").alias("_qx")))
-    d = F.col("_x") - F.col("_qx")
     scored = (
         comp.join(F.broadcast(qcomp), "_pos")
         .groupBy("_qid", "_vid")
-        .agg(F.sum(d.cast("decimal(38,0)") * d)
-             .cast("decimal(38,0)").alias("_d")))
-    w = Window.partitionBy("_qid").orderBy(F.col("_d"), F.col("_vid"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select(F.col("_qid").alias(query_id_col),
-                F.col("_vid").alias(id_col),
-                (F.round(F.col("_d").cast("double")
-                         / float(scale) / float(scale), 6)
-                 + F.lit(0.0)).alias("l2_dist"),
-                F.col("_rk").cast("long").alias("rank")))
+        .agg(_sq_l2("_x", "_qx").alias("_d")))
+    return _dist_topk(scored, "_d", "_vid", k, id_col, query_id_col, scale,
+                      "l2_dist")
 
 
 def embedding_decontaminate(
@@ -1723,14 +1738,15 @@ def embedding_decontaminate(
     module's guarded round-6 cosine, so the flag set is
     engine-identical. Returns one row per FLAGGED training vector:
     (id, n_matches, max_sim DOUBLE)."""
-    from pyspark.sql.types import (
-        ByteType, DoubleType, IntegerType, LongType, ShortType,
-        StructField, StructType)
+    def matches(sims: DataFrame, key: str) -> DataFrame:
+        # sims: (key, _s) — one row per (train, eval) similarity
+        return (
+            sims.filter(F.col("_s") >= F.lit(threshold))
+            .groupBy(key)
+            .agg(F.count(F.lit(1)).cast("long").alias("n_matches"),
+                 (F.max("_s") + F.lit(0.0)).alias("max_sim")))
 
-    id_type = train.schema[id_col].dataType
-    fast = threshold > 0.0 and isinstance(
-        id_type, (ByteType, ShortType, IntegerType, LongType))
-    if fast:
+    if _kernel_ok(train, id_col, threshold):
         # GEMM fast path (r12 — the `_srp_verify_kernel` contract on
         # the corpus x bounded-eval shape; guide §4.2): the crossJoin
         # evaluated the interpreted zip_with cosine fold once per
@@ -1846,31 +1862,16 @@ def embedding_decontaminate(
             F.col(id_col).alias("_tid"),
             _dbl(F.col(vec_col)).alias("_tv")).mapInPandas(
                 kernel, out_schema)
-        return (
-            raw.select(
-                "_tid",
-                F.round(_cos_guarded(F.col("_dot"), F.col("_den")), 6)
-                .alias("_s"))
-            .filter(F.col("_s") >= F.lit(threshold))
-            .groupBy("_tid")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_matches"),
-                 (F.max("_s") + F.lit(0.0)).alias("max_sim"))
-            .select(F.col("_tid").cast(id_type).alias(id_col),
-                    "n_matches", "max_sim"))
-    t = train.select(F.col(id_col), _dbl(F.col(vec_col)).alias("_tv"))
-    t = t.select(id_col, "_tv", _norm_d(F.col("_tv")).alias("_tn"))
-    e = eval_df.select(_dbl(F.col(vec_col)).alias("_ev"))
-    e = e.select("_ev", _norm_d(F.col("_ev")).alias("_en"))
-    sim = F.round(_cos_guarded(
-        _dot_d(F.col("_tv"), F.col("_ev")),
-        F.col("_tn") * F.col("_en")), 6)
-    return (
-        t.crossJoin(F.broadcast(e))
-        .select(F.col(id_col), sim.alias("_s"))
-        .filter(F.col("_s") >= threshold)
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).cast("long").alias("n_matches"),
-             (F.max("_s") + F.lit(0.0)).alias("max_sim")))
+        sims = raw.select(
+            "_tid", _round_cos(F.col("_dot"), F.col("_den")).alias("_s"))
+        return matches(sims, "_tid").select(
+            F.col("_tid").cast(train.schema[id_col].dataType).alias(id_col),
+            "n_matches", "max_sim")
+    t = _staged(train, [id_col], vec_col, "_tv", "_tn")
+    e = _staged(eval_df, [], vec_col, "_ev", "_en")
+    sims = t.crossJoin(F.broadcast(e)).select(
+        F.col(id_col), _staged_cos("_tv", "_ev", "_tn", "_en").alias("_s"))
+    return matches(sims, id_col)
 
 
 def pq_subspace_variance(
@@ -1921,6 +1922,51 @@ def pq_subspace_variance(
                + F.lit(0.0)).alias("var_share"))
 
 
+def _centroid_comp(
+    centroids: DataFrame, m: int, vec_col: str, scale: int, clamp: float,
+) -> DataFrame:
+    """Scaled-integer centroid components (cell_id, _j, _pos, _cx): the
+    side a residual subtracts, through the same `_pq_components`
+    arithmetic as the vectors."""
+    return (
+        _pq_components(
+            centroids.select("cell_id", F.col("_cvec").alias(vec_col)),
+            m, "cell_id", vec_col, scale, clamp, "cell_id")
+        .select("cell_id", "_j", "_pos", F.col("_x").alias("_cx")))
+
+
+def _residuals(
+    comp: DataFrame, cells: DataFrame, ccomp: DataFrame, vid: str,
+) -> DataFrame:
+    """Residual components (vid, cell_id, _j, _pos, _x = x - cx): each
+    ``comp`` row minus its cell's centroid component — an EXACT BIGINT
+    subtraction, no float drift. ``cells`` maps ``vid`` to cell_id:
+    the corpus assignment, or a query's probed cells."""
+    return (
+        comp.join(cells, vid)
+        .join(F.broadcast(ccomp), ["cell_id", "_j", "_pos"])
+        .select(vid, "cell_id", "_j", "_pos",
+                (F.col("_x") - F.col("_cx")).alias("_x")))
+
+
+def _ivfpq_encode(
+    rcomp: DataFrame, cent: DataFrame, cells: DataFrame,
+) -> DataFrame:
+    """Residual codes (_vid, _j, _code, cell_id): nearest codeword per
+    (vector, subspace), ties -> lowest code."""
+    return (_pq_assign(rcomp, cent, "_vid").select("_vid", "_j", "_code")
+            .join(cells, "_vid"))
+
+
+def _write_codes(codes: DataFrame, path: str, id_col: str,
+                 mode: str) -> None:
+    # column types must match between build and append (parquet append)
+    codes.select("cell_id", F.col("_vid").alias(id_col),
+                 F.col("_j").alias("subspace"), F.col("_code").alias("code")
+                 ).write.mode(mode).partitionBy("cell_id").parquet(
+                     path + "/codes")
+
+
 def _ivfpq_parts(
     corpus: DataFrame, n_cells: int, m: int, n_codes: int, n_iter: int,
     id_col: str, vec_col: str, scale: int, clamp: float,
@@ -1937,8 +1983,7 @@ def _ivfpq_parts(
     - coarse cells: ``ivf_assign`` (centroids = the n_cells lowest-id
       vectors; cosine argmax, ties -> lowest cell);
     - residuals: EXACT integer differences of the scaled components
-      (vector and centroid both go through `_pq_components`, so the
-      residual is a BIGINT subtraction — no float subtraction drift);
+      (`_residuals`);
     - codebook: `_pq_kmeans` over residual components, seeded by the
       n_codes lowest-id NON-CENTROID vectors (the centroids' own
       residuals are all-zero — seeding from them would collapse every
@@ -1959,16 +2004,8 @@ def _ivfpq_parts(
     cells = _plan_cache(assigned.select(F.col(id_col).alias("_vid"),
                                         "cell_id"))
     comp = _pq_components(corpus, m, id_col, vec_col, scale, clamp, "_vid")
-    ccomp = (
-        _pq_components(
-            centroids.select("cell_id", F.col("_cvec").alias(vec_col)),
-            m, "cell_id", vec_col, scale, clamp, "cell_id")
-        .select("cell_id", "_j", "_pos", F.col("_x").alias("_cx")))
-    rcomp = _plan_cache(
-        comp.join(cells, "_vid")
-        .join(F.broadcast(ccomp), ["cell_id", "_j", "_pos"])
-        .select("_vid", "cell_id", "_j", "_pos",
-                (F.col("_x") - F.col("_cx")).alias("_x")))
+    ccomp = _centroid_comp(centroids, m, vec_col, scale, clamp)
+    rcomp = _plan_cache(_residuals(comp, cells, ccomp, "_vid"))
     rfit = rcomp
     if train_sample_n is None:
         seeds = (
@@ -1983,12 +2020,7 @@ def _ivfpq_parts(
         # doctrine): k-means over the sampled residuals only; seeds =
         # the lowest-id NON-centroid sample members (a centroid's own
         # residual is all-zero — pq seeding rule)
-        pick = (
-            corpus.select(F.col(id_col).alias("_vid"))
-            .orderBy(h32(F.concat(F.lit("pqs:"),
-                                  F.col(id_col).cast("string"))),
-                     F.col(id_col))
-            .limit(int(train_sample_n)))
+        pick = _id_hash_sample(corpus, id_col, "pqs:", train_sample_n, "_vid")
         rfit = rcomp.join(F.broadcast(pick), "_vid", "left_semi")
         seeds = (
             pick.join(centroids.select(F.col("cell_id").alias("_vid")),
@@ -1997,11 +2029,7 @@ def _ivfpq_parts(
             .select("_vid", (F.row_number().over(Window.orderBy("_vid"))
                              - 1).cast("int").alias("_code")))
     cent = _pq_kmeans(rfit, seeds, n_iter)
-    codes = (
-        _pq_assign(rcomp, cent, "_vid")
-        .select("_vid", "_j", "_code")
-        .join(cells, "_vid"))
-    return centroids, ccomp, cent, codes
+    return centroids, ccomp, cent, _ivfpq_encode(rcomp, cent, cells)
 
 
 def _ivfpq_search(
@@ -2009,56 +2037,13 @@ def _ivfpq_search(
     cent: DataFrame, codes: DataFrame, k: int,
     id_col: str, query_id_col: str, scale: int,
 ) -> DataFrame:
-    """The IVF-PQ ADC ranking shared by the one-shot and persisted
-    paths: per (query, probed cell) the query's RESIDUAL against that
-    cell's centroid feeds a (subspace, code) distance table
-    (model-sized: |Q| * n_probe * m * n_codes rows, always broadcast);
-    corpus CODES in the probed cells join it and one (query, vector)
-    aggregate sums the m lookups. Exact integers throughout — ranking
-    is bit-identical on any engine/partitioning; ties -> lowest id."""
-    rq = (
-        qcomp.join(F.broadcast(probes), "_qid")
-        .join(F.broadcast(ccomp), ["cell_id", "_j", "_pos"])
-        .select("_qid", "cell_id", "_j", "_pos",
-                (F.col("_x") - F.col("_cx")).alias("_x")))
-    d = F.col("_x") - F.col("_c")
-    tables = (
-        rq.join(F.broadcast(cent), ["_j", "_pos"])
-        .groupBy("_qid", "cell_id", "_j", "_code")
-        .agg(F.sum(d.cast("decimal(38,0)") * d)
-             .cast("decimal(38,0)").alias("_pd")))
-    scored = (
-        codes.join(F.broadcast(tables), ["cell_id", "_j", "_code"])
-        .groupBy("_qid", "_vid")
-        .agg(F.sum("_pd").cast("decimal(38,0)").alias("_adc")))
-    w = Window.partitionBy("_qid").orderBy(F.col("_adc"), F.col("_vid"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select(F.col("_qid").alias(query_id_col),
-                F.col("_vid").alias(id_col),
-                (F.round(F.col("_adc").cast("double")
-                         / float(scale) / float(scale), 6)
-                 + F.lit(0.0)).alias("adc_dist"),
-                F.col("_rk").cast("long").alias("rank")))
-
-
-def _ivfpq_probes(
-    queries: DataFrame, centroids: DataFrame, n_probe: int,
-    vec_col: str, query_id_col: str,
-) -> DataFrame:
-    """Per-query n_probe nearest cells (guarded cosine round 6, ties
-    -> lowest cell) — the same probe selection as ``ivf_topk``.
-    Returns (_qid, cell_id)."""
-    q = queries.select(
-        F.col(query_id_col).alias("_qid"), F.col(vec_col).alias("_qvec"))
-    q_cells = q.crossJoin(F.broadcast(centroids)).select(
-        "_qid", "cell_id",
-        F.round(cosine(F.col("_qvec"), F.col("_cvec")), 6).alias("_csim"))
-    w = Window.partitionBy("_qid").orderBy(
-        F.col("_csim").desc(), F.col("cell_id"))
-    return (q_cells.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= n_probe).select("_qid", "cell_id"))
+    """The IVF-PQ search shared by the one-shot and persisted paths:
+    per (query, probed cell) the query's RESIDUAL against that cell's
+    centroid feeds the ADC tables (|Q| * n_probe * m * n_codes rows),
+    and corpus CODES in the probed cells are ranked against them."""
+    rq = _residuals(qcomp, F.broadcast(probes), ccomp, "_qid")
+    return _adc_topk(rq, cent, codes, ["cell_id"], "_vid", k, id_col,
+                     query_id_col, scale)
 
 
 def ivfpq_topk(
@@ -2087,8 +2072,8 @@ def ivfpq_topk(
     centroids, ccomp, cent, codes = _ivfpq_parts(
         corpus, n_cells, m, n_codes, n_iter, id_col, vec_col, scale,
         clamp, train_sample_n)
-    probes = _ivfpq_probes(queries, centroids, n_probe,
-                           vec_col, query_id_col)
+    probes = _ivf_probes(queries, centroids, n_probe, vec_col,
+                         query_id_col, carry_vec=False)
     qcomp = _pq_components(
         queries, m, query_id_col, vec_col, scale, clamp, "_qid")
     return _ivfpq_search(probes, qcomp, ccomp, cent, codes, k,
@@ -2114,15 +2099,10 @@ def ivfpq_index_build(
     centroids, ccomp, cent, codes = _ivfpq_parts(
         corpus, n_cells, m, n_codes, n_iter, id_col, vec_col, scale,
         clamp, train_sample_n)
-    centroids.withColumnRenamed("_cvec", "centroid").write.mode(
-        "overwrite").parquet(path + "/centroids")
-    cent.select(F.col("_j").alias("subspace"), F.col("_code").alias("code"),
-                F.col("_pos").alias("pos"), F.col("_c").alias("c")
-                ).write.mode("overwrite").parquet(path + "/codebooks")
-    codes.select("cell_id", F.col("_vid").alias(id_col),
-                 F.col("_j").alias("subspace"), F.col("_code").alias("code")
-                 ).write.mode("overwrite").partitionBy("cell_id").parquet(
-                     path + "/codes")
+    _write_centroids(centroids, path)
+    _stored_codebook(cent).write.mode("overwrite").parquet(
+        path + "/codebooks")
+    _write_codes(codes, path, id_col, "overwrite")
     corpus.sparkSession.createDataFrame(
         [(int(n_cells), int(m), int(scale), float(clamp))],
         "n_cells INT, m INT, scale LONG, clamp DOUBLE",
@@ -2134,40 +2114,26 @@ def ivfpq_index_topk(
     id_col: str = "vec_id", vec_col: str = "embedding",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """ADC top-k against a persisted IVF-PQ index: probe cells from
-    the stored centroids, push the probed cell set down as a partition
-    filter on the code table (PartitionFilters — only the probed
-    directories are read), and rank by the same exact-integer ADC as
-    the one-shot path — results are bit-identical to ``ivfpq_topk``
-    with the same build parameters. The raw corpus embeddings never
-    enter the plan; m/scale/clamp come from the index's ``meta``."""
-    meta = spark.read.parquet(path + "/meta").first()
-    if meta is None:
-        raise ValueError(f"empty IVF-PQ index at {path!r}")
-    m, scale, clamp = int(meta["m"]), int(meta["scale"]), meta["clamp"]
-    centroids = spark.read.parquet(path + "/centroids").withColumnRenamed(
-        "centroid", "_cvec")
-    probes = _ivfpq_probes(queries, centroids, n_probe,
-                           vec_col, query_id_col)
-    probed_cells = sorted(
-        r["cell_id"] for r in probes.select("cell_id").distinct().collect())
-    codes = (
-        spark.read.parquet(path + "/codes")
-        .filter(F.col("cell_id").isin(probed_cells))  # -> PartitionFilters
-        .select("cell_id", F.col(id_col).alias("_vid"),
-                F.col("subspace").alias("_j"), F.col("code").alias("_code")))
-    cent = spark.read.parquet(path + "/codebooks").select(
-        F.col("subspace").alias("_j"), F.col("code").alias("_code"),
-        F.col("pos").alias("_pos"), F.col("c").alias("_c"))
-    ccomp = (
-        _pq_components(
-            centroids.select("cell_id", F.col("_cvec").alias(vec_col)),
-            m, "cell_id", vec_col, scale, clamp, "cell_id")
-        .select("cell_id", "_j", "_pos", F.col("_x").alias("_cx")))
+    """ADC top-k against a persisted IVF-PQ index: ``ivfpq_topk``'s
+    search fed from parquet. Probes come from the stored centroids,
+    the probed cell set prunes the code table to those cells'
+    directories (``_read_probed``), and the one IVF-PQ search ranks
+    them — results are bit-identical to ``ivfpq_topk`` with the same
+    build parameters. The raw corpus embeddings never enter the plan;
+    m/scale/clamp come from the index's ``meta``."""
+    m, scale, clamp = _read_meta(spark, path)
+    centroids = _read_centroids(spark, path)
+    probes = _ivf_probes(queries, centroids, n_probe, vec_col,
+                         query_id_col, carry_vec=False)
+    codes = _read_probed(spark, path + "/codes", probes).select(
+        "cell_id", F.col(id_col).alias("_vid"),
+        F.col("subspace").alias("_j"), F.col("code").alias("_code"))
     qcomp = _pq_components(
         queries, m, query_id_col, vec_col, scale, clamp, "_qid")
-    return _ivfpq_search(probes, qcomp, ccomp, cent, codes, k,
-                         id_col, query_id_col, scale)
+    return _ivfpq_search(
+        probes, qcomp, _centroid_comp(centroids, m, vec_col, scale, clamp),
+        _codebook(spark.read.parquet(path + "/codebooks")), codes, k,
+        id_col, query_id_col, scale)
 
 
 def ivfpq_index_append(
@@ -2193,38 +2159,17 @@ def ivfpq_index_append(
     O(delta): one broadcast centroid assignment + one broadcast
     codebook encode over the new batch only. Returns the number of
     vectors appended."""
-    meta = spark.read.parquet(path + "/meta").first()
-    if meta is None:
-        raise ValueError(f"empty IVF-PQ index at {path!r}")
-    m, scale, clamp = int(meta["m"]), int(meta["scale"]), meta["clamp"]
-    centroids = spark.read.parquet(path + "/centroids").withColumnRenamed(
-        "centroid", "_cvec")
+    m, scale, clamp = _read_meta(spark, path)
+    centroids = _read_centroids(spark, path)
     cells = (_assign_to(new_vectors, centroids, id_col, vec_col)
              .select(F.col(id_col).alias("_vid"), "cell_id"))
     comp = _pq_components(
         new_vectors, m, id_col, vec_col, scale, clamp, "_vid")
-    ccomp = (
-        _pq_components(
-            centroids.select("cell_id", F.col("_cvec").alias(vec_col)),
-            m, "cell_id", vec_col, scale, clamp, "cell_id")
-        .select("cell_id", "_j", "_pos", F.col("_x").alias("_cx")))
-    rcomp = (
-        comp.join(cells, "_vid")
-        .join(F.broadcast(ccomp), ["cell_id", "_j", "_pos"])
-        .select("_vid", "cell_id", "_j", "_pos",
-                (F.col("_x") - F.col("_cx")).alias("_x")))
-    cent = spark.read.parquet(path + "/codebooks").select(
-        F.col("subspace").alias("_j"), F.col("code").alias("_code"),
-        F.col("pos").alias("_pos"), F.col("c").alias("_c"))
-    codes = (
-        _pq_assign(rcomp, cent, "_vid")
-        .select("_vid", "_j", "_code")
-        .join(cells, "_vid"))
-    # column types must match the build exactly (parquet append)
-    codes.select("cell_id", F.col("_vid").alias(id_col),
-                 F.col("_j").alias("subspace"), F.col("_code").alias("code")
-                 ).write.mode("append").partitionBy("cell_id").parquet(
-                     path + "/codes")
+    rcomp = _residuals(
+        comp, cells, _centroid_comp(centroids, m, vec_col, scale, clamp),
+        "_vid")
+    cent = _codebook(spark.read.parquet(path + "/codebooks"))
+    _write_codes(_ivfpq_encode(rcomp, cent, cells), path, id_col, "append")
     return new_vectors.count()
 
 
@@ -2318,16 +2263,12 @@ def _pca_centered_matrix(
     driver fetch, and the centered matrix C'_ij = n s_ij - m_i m_j,
     renormalized to <= 1e17. Returns (C', dim); dim 0 on empty input."""
     arr = F.col(vec_col).cast("array<double>")
-    x = F.col("_x")
-    cx = (F.when(x > clamp, F.lit(clamp))
-           .when(x < -clamp, F.lit(-clamp)).otherwise(x))
+    cx = _clamp(F.col("_x"), clamp)
     e1 = corpus.select(
         F.col(id_col).alias("_vid"), arr.alias("_v"),
         F.posexplode(arr).alias("_i", "_x"),
     ).select("_vid", "_v", "_i", F.round(cx * scale).cast("long").alias("_a"))
-    xj = F.col("_xj")
-    cj = (F.when(xj > clamp, F.lit(clamp))
-           .when(xj < -clamp, F.lit(-clamp)).otherwise(xj))
+    cj = _clamp(F.col("_xj"), clamp)
     e2 = e1.select(
         "_i", "_a", F.posexplode("_v").alias("_j", "_xj"),
     ).select("_i", "_j", "_a",
@@ -2421,9 +2362,7 @@ def _pca_project_components(
     each component literal — ONE explode and ONE (id) aggregate emit
     all k columns (pc1..pck DOUBLE, rounded 6, -0.0-normalized)."""
     arr = F.col(vec_col).cast("array<double>")
-    x = F.col("_x")
-    cx = (F.when(x > clamp, F.lit(clamp))
-           .when(x < -clamp, F.lit(-clamp)).otherwise(x))
+    cx = _clamp(F.col("_x"), clamp)
     proj = corpus.select(
         F.col(id_col),
         F.posexplode(arr).alias("_i", "_x"),

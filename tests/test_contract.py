@@ -108,4 +108,5 @@ def test_forced_rechecks_lead_the_driver_window():
     correctness window. Session-free: only the ordering is checked."""
     forced = E._FORCE_RECHECK
     assert forced <= set(E._REGISTRY_KEYS)
+    assert len(forced) <= 50
     assert set(list(E.queries())[:len(forced)]) == forced

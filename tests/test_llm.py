@@ -1027,17 +1027,24 @@ def test_ivf_index_persisted_probe_prunes_files(spark, tmp_path):
     and a probe must physically read ONLY the probed cells — asserted on
     the plan's PartitionFilters AND on the executed scan's numFiles
     metric — while returning exactly what the in-flight ivf_topk
-    returns."""
+    returns, on both model-builder branches (seed centroids and
+    Lloyd-refined)."""
     from db_spark.sources import read_table
 
     emb = read_table(spark, "/root/testdata/sf0.001", "embeddings")
     queries = emb.limit(3).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    idx = str(tmp_path / "ivf")
-    similarity.ivf_index_build(emb, idx, n_cells=8)
-    got = similarity.ivf_index_topk(spark, idx, queries, k=5, n_probe=2)
-    expect = similarity.ivf_topk(emb, queries, k=5, n_cells=8, n_probe=2)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expect.collect()))
+    for refine_iters in (2, 0):
+        idx = str(tmp_path / f"ivf{refine_iters}")
+        similarity.ivf_index_build(emb, idx, n_cells=8,
+                                   refine_iters=refine_iters)
+        got = similarity.ivf_index_topk(spark, idx, queries, k=5, n_probe=2)
+        expect = similarity.ivf_topk(emb, queries, k=5, n_cells=8, n_probe=2,
+                                     refine_iters=refine_iters)
+        assert sorted(map(tuple, got.collect())) == \
+            sorted(map(tuple, expect.collect())), refine_iters
+    # the pruning proofs below run on the last pass: the seed-centroid
+    # index, whose 8 cells are all non-empty
     # plan proof: the probe's literal IN filter became a partition filter
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [cell_id" in plan.replace("#", " "), plan[:2000]
@@ -1067,7 +1074,7 @@ def test_ivf_index_persisted_probe_prunes_files(spark, tmp_path):
     n_files = max(sc.metrics().get("numFiles").get().value()
                   for sc in corpus_scans)
     n_cells_on_disk = sum(
-        1 for d in (tmp_path / "ivf" / "corpus").iterdir()
+        1 for d in (tmp_path / "ivf0" / "corpus").iterdir()
         if d.name.startswith("cell_id="))
     assert n_cells_on_disk == 8
     assert 0 < n_files <= 6 < n_cells_on_disk  # strictly pruned
@@ -2446,8 +2453,9 @@ def test_pq_rejects_m_not_dividing_dim(spark):
 def test_pq_index_meta_and_empty_index_errors(spark, tmp_path):
     """pq_index_build persists m/scale/clamp in a meta table (the
     index is self-describing by a stored parameter, not inference —
-    r11 ADVICE); an empty pre-meta codebook raises a clear ValueError
-    instead of TypeError on None + 1."""
+    r11 ADVICE); an index without a meta table (here: an empty
+    codebook and nothing else) or with an empty one raises a
+    ValueError naming the path instead of re-inferring m."""
     import numpy as np
     import pytest as _pytest
 
@@ -2468,12 +2476,18 @@ def test_pq_index_meta_and_empty_index_errors(spark, tmp_path):
     one = similarity.pq_topk(df, q, k=3, m=2, n_codes=4, n_iter=1)
     assert sorted(map(tuple, got.collect())) == \
         sorted(map(tuple, one.collect()))
-    # pre-meta index with an EMPTY codebook: clear error, not TypeError
+    # no meta table: clear error naming the path, no m inference
     bad = str(tmp_path / "pq_empty")
     spark.createDataFrame(
         [], "subspace long, code long, pos int, c long",
     ).write.parquet(bad + "/codebooks")
-    with _pytest.raises(ValueError, match="empty PQ index"):
+    with _pytest.raises(ValueError, match="pq_empty.*no meta row"):
+        similarity.pq_index_topk(spark, bad, q, k=3)
+    # an empty meta table is the same error
+    spark.createDataFrame(
+        [], "m INT, scale LONG, clamp DOUBLE",
+    ).write.parquet(bad + "/meta")
+    with _pytest.raises(ValueError, match="pq_empty.*no meta row"):
         similarity.pq_index_topk(spark, bad, q, k=3)
 
 
