@@ -16,33 +16,44 @@ from pyspark.sql import DataFrame
 
 def executed_plan(df: DataFrame) -> str:
     """The physical (executed) plan as text — what actually runs,
-    after AQE's initial planning; the string every counter below is
-    derived from."""
+    after AQE's initial planning."""
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _analyzed_has_node(df: DataFrame, words) -> bool:
-    """True when any node of the ANALYZED logical plan (subquery plans
-    included) has a ``nodeName()`` containing one of ``words``. Walks
-    the tree node by node, so unlike a substring search of the plan
-    text it cannot match a column name or a literal (a ``Sort_key``
-    column is not a Sort)."""
-    stack = [df._jdf.queryExecution().analyzed()]
+def _node_names(plan):
+    """The ``nodeName()`` of every node of a JVM plan tree, subquery
+    and cached plans (inner children) included. An ``AdaptiveSparkPlan``
+    contributes its current plan only — the final plan once it exists,
+    the initial plan before — and a query stage the plan it wraps, so
+    each node is seen once. Walking nodes, unlike a substring search of
+    the plan text, cannot match a column name or a literal (a
+    ``Sort_key`` column is not a Sort)."""
+    stack = [plan]
     while stack:
         node = stack.pop()
         name = node.nodeName()
-        if any(w in name for w in words):
-            return True
+        yield name
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(node.plan())
         for seq in (node.children(), node.innerChildren()):
             stack.extend(seq.apply(i) for i in range(seq.size()))
-    return False
+
+
+def _analyzed_has_node(df: DataFrame, words) -> bool:
+    """True when any node of the ANALYZED logical plan has a
+    ``nodeName()`` containing one of ``words``."""
+    return any(any(w in name for w in words) for name in
+               _node_names(df._jdf.queryExecution().analyzed()))
 
 
 def plan_shape(df: DataFrame) -> dict:
-    """Shape counters for a DataFrame's physical plan:
+    """Shape counters for a DataFrame's physical plan, counted over its
+    nodes (``_node_names``; after execution, the final adaptive plan):
 
     - ``exchanges``: Exchange operators (shuffles + broadcast
-      materializations) — the expensive moves;
+      materializations, reused ones included) — the expensive moves;
     - ``broadcast_hash_joins`` / ``sort_merge_joins`` /
       ``broadcast_nested_loop_joins``: join strategy mix (dims should
       broadcast; SMJ on a fact-dim join means a missed broadcast);
@@ -53,15 +64,17 @@ def plan_shape(df: DataFrame) -> dict:
     - ``sorts``: Sort operators (window/SMJ sorts included — compare
       against expectation, not zero).
     """
-    plan = executed_plan(df)
+    # "SortMergeJoin(skew=true)" counts as a SortMergeJoin
+    names = [n.split("(")[0] for n in
+             _node_names(df._jdf.queryExecution().executedPlan())]
     return {
-        "exchanges": plan.count("Exchange"),
-        "broadcast_hash_joins": plan.count("BroadcastHashJoin"),
-        "sort_merge_joins": plan.count("SortMergeJoin"),
-        "broadcast_nested_loop_joins": plan.count("BroadcastNestedLoopJoin"),
-        "cartesian_products": plan.count("CartesianProduct"),
-        "top_k": "TakeOrderedAndProject" in plan,
-        "sorts": plan.count("Sort "),
+        "exchanges": sum("Exchange" in n for n in names),
+        "broadcast_hash_joins": names.count("BroadcastHashJoin"),
+        "sort_merge_joins": names.count("SortMergeJoin"),
+        "broadcast_nested_loop_joins": names.count("BroadcastNestedLoopJoin"),
+        "cartesian_products": names.count("CartesianProduct"),
+        "top_k": "TakeOrderedAndProject" in names,
+        "sorts": names.count("Sort"),
     }
 
 

@@ -109,6 +109,20 @@ def run_stream_to_memory(stream_df: DataFrame, name: str, mode: str = "append"):
     return q
 
 
+def _drain(stream_df: DataFrame, sink, checkpoint: str):
+    """Run ``sink`` as the ``foreachBatch`` sink of ``stream_df`` over
+    all available input, checkpointed at ``checkpoint``, and stop
+    (availableNow); returns the finished query."""
+    q = (
+        stream_df.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
 def stream_stream_join(
     left: DataFrame, right: DataFrame, condition,
     left_ts: str, left_watermark: str,
@@ -279,71 +293,72 @@ def stream_into_collection(
             return
         collection.set_objects(txid, batch_df, id_col=id_col)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df, _sink, checkpoint)
 
 
 # ---------------------------------------------------------------------------
 # Streaming sketch maintenance (foreachBatch + mergeable sketch state)
 # ---------------------------------------------------------------------------
 
-def _stream_merge_sink(
+def _stream_sketch_sink(
     stream_df: DataFrame, state_dir: str, checkpoint: str,
     batch_sketch_fn, merge_fn,
 ):
-    """Generic epoch-versioned mergeable-state sink: sketch each
-    micro-batch (bounded rows), merge into the persisted state, swap
-    the meta pointer, keep one prior epoch for readers holding a lazy
-    DataFrame (same pattern as matview). Correct for any sketch whose
-    merge is idempotent over replayed input — checkpoint recovery may
-    re-deliver a batch, and an idempotent merge makes that a no-op."""
+    """Epoch-versioned sketch-state sink: sketch each micro-batch
+    (bounded rows), merge it into the persisted state, write the result
+    as ``epoch-{n+1}`` and swap the meta pointer. Exactly-once comes
+    from a batch-id watermark: the meta pointer records the last merged
+    ``batch_id`` (a pointer without one reads as -1), and a re-delivered
+    batch (checkpoint recovery replays at most the last uncommitted one,
+    with the same id) is skipped. That is required for counter sketches
+    (histogram, count-min), whose additive merge would double-count a
+    replay, and as correct as re-merging for the idempotent KMV/HLL
+    merges. The state write + meta swap ordering makes the failure
+    window safe: if the crash lands after the state write but before
+    the swap, the replay simply rewrites the same epoch directory and
+    then swaps. One prior epoch is kept for readers holding a lazy
+    DataFrame; every older one is reaped, including any a crash between
+    the swap and the reap left behind (same pattern as matview)."""
     import json
     import os
     import shutil
 
     meta_path = os.path.join(state_dir, "meta.json")
 
-    def _epoch() -> int:
+    def _meta():
         if not os.path.exists(meta_path):
-            return -1
+            return {"epoch": -1}
         with open(meta_path) as f:
-            return json.load(f)["epoch"]
+            return json.load(f)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
+        meta = _meta()
+        if batch_id <= meta.get("last_batch", -1):
+            return  # replayed batch: already in the state, skip
         spark = batch_df.sparkSession
         batch_sketch = batch_sketch_fn(batch_df)
-        cur = _epoch()
+        cur = meta["epoch"]
         if cur >= 0:
             state = spark.read.parquet(os.path.join(state_dir, f"epoch-{cur}"))
             merged = merge_fn(state, batch_sketch)
         else:
             merged = batch_sketch
+        new = cur + 1
         os.makedirs(state_dir, exist_ok=True)
         merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"epoch-{cur + 1}"))
+            os.path.join(state_dir, f"epoch-{new}"))
         tmp = meta_path + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"epoch": cur + 1}, f)
+            json.dump({"epoch": new, "last_batch": batch_id}, f)
         os.replace(tmp, meta_path)
-        stale = os.path.join(state_dir, f"epoch-{cur - 1}")
-        shutil.rmtree(stale, ignore_errors=True)
+        for d in os.listdir(state_dir):
+            if d.startswith("epoch-") and d[6:].isdigit() \
+                    and int(d[6:]) <= new - 2:
+                shutil.rmtree(os.path.join(state_dir, d), ignore_errors=True)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df, _sink, checkpoint)
 
 
 def stream_sketch_kmv(
@@ -355,20 +370,20 @@ def stream_sketch_kmv(
     ``kmv_merge``d into the persisted state. The merge law
     (merge(sketch(A), sketch(B)) == sketch(A ∪ B), property-tested in
     tests/test_sketch_properties.py) makes the maintained state exactly
-    the sketch of everything ever seen — and because KMV state is a
-    distinct min-k hash set, re-merging a replayed batch is a no-op, so
-    the sink is idempotent under checkpoint recovery without any
-    dedup bookkeeping.
+    the sketch of everything ever seen. A replayed batch is skipped by
+    the sink's batch-id watermark (re-merging it would be a no-op too:
+    KMV state is a distinct min-k hash set).
 
-    State is epoch-versioned parquet (same pattern as matview): write
-    ``epoch-{n+1}``, swap the meta pointer, keep one prior epoch for
-    readers holding a lazy DataFrame. Per-batch state I/O is <= k rows
-    per group — the stream's cardinality never touches the state path.
+    State is epoch-versioned parquet (``_stream_sketch_sink``, same
+    pattern as matview): write ``epoch-{n+1}``, swap the meta pointer,
+    keep one prior epoch for readers holding a lazy DataFrame. Per-batch
+    state I/O is <= k rows per group — the stream's cardinality never
+    touches the state path.
     """
     from db_spark.sketch import kmv_merge, kmv_sketch
 
     groups = group_cols or []
-    return _stream_merge_sink(
+    return _stream_sketch_sink(
         stream_df, state_dir, checkpoint,
         lambda b: kmv_sketch(b, F.col(column), k=k, group_cols=groups),
         lambda s, b: kmv_merge(s, b, k=k, group_cols=groups),
@@ -381,79 +396,19 @@ def stream_sketch_hll(
 ):
     """Maintain a HyperLogLog sketch over a stream: per-batch register
     tables (<= 2^p rows per group) merge into the persisted state by
-    register-wise MAX — idempotent under batch replay (MAX of a
-    re-delivered batch changes nothing), so checkpoint recovery needs
-    no dedup bookkeeping. Same epoch-versioned state layout and merge
-    law (tests/test_sketch_properties.py::test_hll_merge_law) as the
+    register-wise MAX (idempotent: MAX of a re-delivered batch changes
+    nothing). Same batch-id watermark, epoch-versioned state layout and
+    merge law (tests/test_sketch_properties.py::test_hll_merge_law) as the
     KMV sink; choose HLL when per-group state must stay a few hundred
     bytes at any cardinality."""
     from db_spark.sketch import hll_merge, hll_sketch
 
     groups = group_cols or []
-    return _stream_merge_sink(
+    return _stream_sketch_sink(
         stream_df, state_dir, checkpoint,
         lambda b: hll_sketch(b, F.col(column), p=p, group_cols=groups),
         lambda s, b: hll_merge(s, b, group_cols=groups),
     )
-
-
-def _stream_counter_sink(
-    stream_df: DataFrame, state_dir: str, checkpoint: str,
-    batch_sketch_fn, merge_fn,
-):
-    """Epoch-versioned sink for COUNTER sketches (histogram, count-min)
-    whose merge is additive, not idempotent — re-merging a replayed
-    batch would double-count. Exactly-once instead comes from the
-    batch-id watermark: the meta pointer records the last merged
-    ``batch_id``, and a re-delivered batch (checkpoint recovery replays
-    at most the last uncommitted one, with the same id) is skipped.
-    The state write + meta swap ordering makes the failure window safe:
-    if the crash lands after the state write but before the swap, the
-    replay simply rewrites the same epoch directory and then swaps."""
-    import json
-    import os
-    import shutil
-
-    meta_path = os.path.join(state_dir, "meta.json")
-
-    def _meta():
-        if not os.path.exists(meta_path):
-            return {"epoch": -1, "last_batch": -1}
-        with open(meta_path) as f:
-            return json.load(f)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        meta = _meta()
-        if batch_id <= meta["last_batch"]:
-            return  # replayed batch: already in the state, skip
-        spark = batch_df.sparkSession
-        batch_sketch = batch_sketch_fn(batch_df)
-        cur = meta["epoch"]
-        if cur >= 0:
-            state = spark.read.parquet(os.path.join(state_dir, f"epoch-{cur}"))
-            merged = merge_fn(state, batch_sketch)
-        else:
-            merged = batch_sketch
-        os.makedirs(state_dir, exist_ok=True)
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"epoch-{cur + 1}"))
-        tmp = meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"epoch": cur + 1, "last_batch": batch_id}, f)
-        os.replace(tmp, meta_path)
-        shutil.rmtree(os.path.join(state_dir, f"epoch-{cur - 1}"),
-                      ignore_errors=True)
-
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
 
 
 def stream_sketch_hist(
@@ -463,17 +418,17 @@ def stream_sketch_hist(
 ):
     """Maintain an equi-width histogram over a stream: each micro-batch
     reduces to <= ``buckets`` counter rows per group and adds into the
-    persisted state (``hist_merge``). Counters are additive, so replay
-    safety comes from the batch-id watermark (``_stream_counter_sink``)
-    rather than merge idempotency — the distinction between the KMV/HLL
-    sinks (min/max state, replay is algebraically a no-op) and counter
-    sketches (replay would double-count). Downstream: `hist_quantile`
+    persisted state (``hist_merge``). Counters are additive — a replay
+    would double-count — so replay safety rests on the batch-id
+    watermark of ``_stream_sketch_sink`` alone (for the KMV/HLL
+    min/max state a replay is also algebraically a no-op). Downstream:
+    `hist_quantile`
     for streaming quantiles, `analytics.psi_drift`-style comparisons
     against a reference histogram with no rescan."""
     from db_spark.sketch import hist_merge, hist_sketch
 
     groups = group_cols or []
-    return _stream_counter_sink(
+    return _stream_sketch_sink(
         stream_df, state_dir, checkpoint,
         lambda b: hist_sketch(b, F.col(column), lo, hi, buckets,
                               group_cols=groups),
@@ -494,7 +449,7 @@ def stream_sketch_cm(
     from db_spark.sketch import cm_merge, cm_sketch
 
     groups = group_cols or []
-    return _stream_counter_sink(
+    return _stream_sketch_sink(
         stream_df, state_dir, checkpoint,
         lambda b: cm_sketch(b, F.col(column), depth=depth, width=width,
                             group_cols=groups),
@@ -593,14 +548,7 @@ def stream_dq_reports(
             json.dump({"last_batch": batch_id}, fh)
         os.replace(tmp, meta_path)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df, _sink, checkpoint)
 
 
 CUSUM_OUT_SCHEMA = T.StructType([

@@ -3,10 +3,10 @@ before/after, or any label).
 
 Each file holds the key's .explain("formatted") text followed by its
 analyzed and optimized logical plans, all three normalized the same
-way: expression ids, plan ids, lambda-variable counters, UUIDs, temp
-paths and the data directory become placeholders. Dumps of the same
-keys from two trees therefore ``diff`` cleanly when their plans are
-the same:
+way: expression ids, plan ids, RDD ids, lambda-variable counters,
+UUIDs, temp paths and the data directory become placeholders. Dumps of
+the same keys from two trees therefore ``diff`` cleanly when their
+plans are the same:
 
     diff plans/<round>/<key>_before.txt plans/<round>/<key>_after.txt
 
@@ -25,6 +25,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E
+from db_spark.plans import plan_shape
 from db_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR")
@@ -35,6 +36,7 @@ def norm(text: str, root: str) -> str:
     text = text.replace(root, "<ROOT>")
     text = re.sub(r"#\d+L?", "#", text)                   # expression ids
     text = re.sub(r"plan_id=\d+", "plan_id=#", text)      # exchange ids
+    text = re.sub(r"RDD\[\d+\]", "RDD[#]", text)           # RDD ids
     text = re.sub(r"(lambda [A-Za-z]+)_\d+", r"\1_#", text)  # lambda vars
     text = re.sub(r"[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}",
                   "<UUID>", text)                        # txids, uuid7()
@@ -69,7 +71,7 @@ def main() -> None:
             fh.write("\n== Optimized Logical Plan (normalized) ==\n")
             fh.write(norm(qe.optimizedPlan().toString(), SF_DIR))
             fh.write("\n")
-        print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")
+        print(f"wrote {path} ({plan_shape(df)['exchanges']} exchanges)")
 
 
 if __name__ == "__main__":

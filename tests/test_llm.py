@@ -1,5 +1,7 @@
 """North-star ops: dedup / similarity / text analysis / multimodal."""
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -2209,6 +2211,7 @@ def test_semantic_dedup_kernel_matches_expression_on_dirty_vectors(spark):
         (5, [0.0, 0.0, 0.0, 0.0]),       # zero vector (guarded cos 0)
         (6, [1.0, 0.0]),                 # length mismatch
         (7, [0.0, 0.998, 0.05, 0.0]),    # near-dup of 3
+        (8, [1.0, None, 0.0, 0.0]),      # NULL element (NaN in pandas)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     fast = similarity.semantic_dedup(
@@ -2244,6 +2247,64 @@ def test_semantic_dedup_kernel_matches_expression_on_dirty_vectors(spark):
     out = {r["vec_id"]: r for r in fast.collect()}
     assert out[0]["kept"] and not out[1]["kept"]  # exact dup pruned
     assert out[4]["kept"] and out[5]["kept"]      # NULL/zero never match
+    assert out[8]["kept"]                         # nor a NULL element
+
+
+def test_embedding_near_dup_kernel_matches_expression_on_dirty(spark):
+    """The near-dup verify runs the shared GEMM kernel for integral
+    ids + positive thresholds. Pin exact output equality between the
+    kernel path (long ids) and the expression path's SRP-blocked
+    per-pair fold, inlined, on a dirty fixture — NULL vector, zero
+    vector, length-mismatched vector, NaN components, NULL elements
+    (which pandas hands the kernel as NaN), exact duplicates (the
+    kernel path's identical-vector grouping)."""
+    from db_spark.llm.similarity import (
+        _cos_guarded, _dbl, _dot_d, _norm_d, _seg_keys, srp_signature)
+
+    rows = [
+        (0, [1.0, 0.0, 0.0, 0.0]),
+        (1, [1.0, 0.0, 0.0, 0.0]),       # exact duplicate of 0
+        (2, [0.999, 0.01, 0.0, 0.0]),    # near-dup of 0
+        (3, [0.0, 1.0, 0.0, 0.0]),
+        (4, None),                       # NULL vector
+        (5, [0.0, 0.0, 0.0, 0.0]),       # zero vector (guarded cos 0)
+        (6, [1.0, 0.0]),                 # length mismatch
+        (7, [0.0, 0.998, 0.05, 0.0]),    # near-dup of 3
+        (8, [float("nan"), 1.0, 0.0, 0.0]),  # NaN component
+        (9, [float("nan"), 1.0, 0.0, 0.0]),  # exact duplicate of 8
+        (10, [0.0, 1.0, float("nan"), 0.0]),  # NaN elsewhere
+        (11, [1.0, None, 0.0, 0.0]),     # NULL element (NaN in pandas)
+        (12, [0.0, None, 1.0, 0.0]),     # NULL element, bucketed with 5
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    fast = similarity.embedding_near_dup_pairs(df, dim=4, threshold=0.95)
+
+    # the expression path, inlined on the same inputs (16 bits, 4 segments)
+    v = df.select("vec_id", _dbl(F.col("embedding")).alias("_v"),
+                  srp_signature(F.col("embedding"), 4, 16).alias("_sig"))
+    v = v.select("vec_id", "_v", _norm_d(F.col("_v")).alias("_n"),
+                 _seg_keys(F.col("_sig"), 4, 4)) \
+        .select("vec_id", "_v", "_n", "seg.seg_id", "seg.seg_key")
+    a = v.select(F.col("vec_id").alias("id_a"), F.col("_v").alias("_va"),
+                 F.col("_n").alias("_na"), "seg_id", "seg_key")
+    b = v.select(F.col("vec_id").alias("id_b"), F.col("_v").alias("_vb"),
+                 F.col("_n").alias("_nb"), "seg_id", "seg_key")
+    slow = (
+        a.join(b, ["seg_id", "seg_key"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", F.round(_cos_guarded(
+            _dot_d(F.col("_va"), F.col("_vb")),
+            F.col("_na") * F.col("_nb")), 6).alias("cos_sim"))
+        .filter(F.col("cos_sim") >= 0.95)
+        .distinct())
+
+    assert fast.exceptAll(slow).count() == 0
+    assert slow.exceptAll(fast).count() == 0
+    got = {(r["id_a"], r["id_b"]) for r in fast.collect()}
+    assert {(0, 1), (0, 2), (1, 2), (3, 7)} <= got
+    # NaN cosines pass (NaN-largest) on both paths
+    assert {(8, 9), (8, 10), (9, 10)} <= got
+    assert not {4, 5, 6, 11, 12} & {i for p in got for i in p}  # never match
 
 
 def test_pca_project_matches_numpy_eigendecomposition(spark):
@@ -2994,12 +3055,15 @@ def test_embedding_decontaminate_kernel_matches_expression_on_dirty(spark):
         (3, [0.0, 0.0, 0.0, 0.0]),
         (4, [1.0, 0.0]),                 # length mismatch vs 4-dim eval
         (5, [0.0, 1.0, 0.0, 0.0]),
+        (6, [float("nan"), 1.0, 0.0, 0.0]),  # NaN component
+        (7, [1.0, None, 0.0, 0.0]),      # NULL element (NaN in pandas)
     ]
     ev_rows = [
         (100, [1.0, 0.0, 0.0, 0.0]),
         (101, [1.0, 0.0, 0.0, 0.0]),     # duplicate eval row
         (102, None),
         (103, [1.0, 0.0]),               # matches train 4's length
+        (104, [1.0, None, 0.0, 0.0]),    # NULL element
     ]
     train = spark.createDataFrame(
         train_rows, "vec_id long, embedding array<double>")
@@ -3027,6 +3091,13 @@ def test_embedding_decontaminate_kernel_matches_expression_on_dirty(spark):
     assert out[0]["n_matches"] == 2          # duplicate eval counted twice
     assert out[4]["n_matches"] == 1          # 2-dim eval row matches
     assert 2 not in out and 3 not in out and 5 not in out
+    # a NaN cosine passes the threshold (Spark's NaN-largest ordering)
+    # on both paths: the kernel must hand its NaN dots to Catalyst as
+    # NaN, not as NULL
+    assert out[6]["n_matches"] == 2 and math.isnan(out[6]["max_sim"])
+    # a NULL element folds the dot to NULL (cosine 0.0): no match, on
+    # either side, although pandas hands it to the kernel as NaN
+    assert 7 not in out
 
 
 def test_l2_topk_matches_numpy_ground_truth(spark):

@@ -21,6 +21,17 @@ def test_plan_shape_counts_joins_and_exchanges(spark):
     assert shape["exchanges"] >= 1  # the groupBy shuffle
 
 
+def test_plan_shape_counts_nodes_before_and_after_execution(spark):
+    """One groupBy shuffle is one exchange: a column named like a node
+    (Exchange_rate) is not counted, and an executed adaptive plan is
+    walked once (its final plan), not final and initial plan both."""
+    df = spark.range(0, 100).groupBy(
+        (F.col("id") % 3).alias("Exchange_rate")).count()
+    assert plans.plan_shape(df)["exchanges"] == 1
+    df.collect()
+    assert plans.plan_shape(df)["exchanges"] == 1
+
+
 def test_assert_scale_safe_flags_cartesian(spark):
     a = spark.range(0, 5)
     b = spark.range(0, 5).select(F.col("id").alias("j"))

@@ -715,10 +715,13 @@ def test_stream_stream_left_outer_emits_unmatched(spark, tmp_path):
 
 def test_counter_sink_skips_replayed_batch_id(spark, tmp_path):
     """Checkpoint recovery re-delivers the last uncommitted batch with
-    the SAME batch_id; the counter sink's batch-id watermark must make
-    that a no-op instead of double-counting. Driven by invoking the
-    inner sink directly — a live stream cannot force a replay."""
-    from db_spark.sketch import hist_sketch
+    the SAME batch_id; the sketch sink's batch-id watermark must make
+    that a no-op instead of double-counting — for the additive
+    histogram and for KMV alike, which share the sink. Each write reaps
+    every epoch older than the one it keeps, crash stragglers included.
+    Driven by invoking the inner sink directly — a live stream cannot
+    force a replay."""
+    from db_spark.sketch import hist_sketch, kmv_sketch
 
     state = str(tmp_path / "state")
     captured = {}
@@ -752,11 +755,8 @@ def test_counter_sink_skips_replayed_batch_id(spark, tmp_path):
 
     df = spark.createDataFrame([(float(i % 5),) for i in range(50)],
                                "v double")
-    st._stream_counter_sink(
-        _FakeStream(df), state, str(tmp_path / "ckpt"),
-        lambda b: hist_sketch(b, F.col("v"), 0.0, 5.0, 8),
-        lambda s, b: __import__("db_spark.sketch", fromlist=["hist_merge"])
-        .hist_merge(s, b))
+    st.stream_sketch_hist(_FakeStream(df), "v", state,
+                          str(tmp_path / "ckpt"), 0.0, 5.0, 8)
     sink = captured["fn"]
 
     sink(df, 0)
@@ -769,6 +769,39 @@ def test_counter_sink_skips_replayed_batch_id(spark, tmp_path):
     doubled = {b: c for b, c in map(tuple, st.read_sketch_state(
         spark, state).collect())}
     assert doubled == {b: 2 * c for b, c in once}
+
+    # KMV: a replayed id is skipped even when its rows differ, a new id
+    # merges; the state stays the one-shot sketch of the merged batches
+    kstate = str(tmp_path / "kmv")
+    st.stream_sketch_kmv(_FakeStream(df), "v", kstate,
+                         str(tmp_path / "kckpt"), k=64)
+    sink = captured["fn"]
+    more = spark.createDataFrame([(float(i),) for i in range(5, 9)],
+                                 "v double")
+
+    def kmv_hashes(*frames):
+        rows = [r for f in frames for r in f.collect()]
+        return sorted(r["_h"] for r in kmv_sketch(
+            spark.createDataFrame(rows, "v double"), F.col("v"),
+            k=64).collect())
+
+    def state_hashes():
+        return sorted(r["_h"] for r in
+                      st.read_sketch_state(spark, kstate).collect())
+
+    sink(df, 0)
+    sink(more, 0)  # replayed batch id: skipped, not merged
+    assert state_hashes() == kmv_hashes(df)
+    sink(more, 1)
+    assert state_hashes() == kmv_hashes(df, more)
+    sink(more, 2)
+    # a straggler epoch (a crash between pointer swap and reap) is
+    # reaped by the next write along with the regular epoch-(new-2)
+    os.makedirs(os.path.join(kstate, "epoch-0"))
+    sink(more, 3)
+    assert sorted(d for d in os.listdir(kstate)
+                  if d.startswith("epoch-")) == ["epoch-2", "epoch-3"]
+    assert state_hashes() == kmv_hashes(df, more)
 
 
 def test_stream_changes_cdc_source(spark, tmp_path):
