@@ -484,19 +484,6 @@ def srp_signature(vec: Column, dim: int, n_bits: int = 16) -> Column:
 # Python workers (module-level, so cloudpickle ships them by reference)
 # ---------------------------------------------------------------------------
 
-def _blas_guard():
-    """numpy, after pinning BLAS to one thread: many Python workers run
-    concurrently, and a multi-threaded GEMM in each oversubscribes the
-    cores (a no-op if numpy is already loaded)."""
-    import os
-
-    for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
-        os.environ.setdefault(var, "1")
-    import numpy as np
-
-    return np
-
-
 def _by_len(vecs) -> dict:
     """{length: (positions, float64 matrix)} over a sequence of vectors,
     NULLs (``_kernel_vec``) skipped. Only equal-length vectors are ever
@@ -597,7 +584,7 @@ def _srp_verify_kernel(id_col: str, threshold: float):
     group with id_a < id_b that ``_block_verify`` keeps, as
     (id_a, id_b, _dot, _den)."""
     def verify(pdf):
-        np = _blas_guard()
+        import numpy as np
         ids_all = pdf[id_col].to_numpy()
         out = [(ids_all[:0], ids_all[:0], np.zeros(0), np.zeros(0))]
         for idxs, X in _by_len(pdf["_vd"]).values():
@@ -1805,7 +1792,7 @@ def embedding_decontaminate(
         thr = float(threshold)
 
         def kernel(batches):
-            np = _blas_guard()
+            import numpy as np
             evg = bc.value
             for pdf in batches:
                 ids_all = pdf["_tid"].to_numpy()
@@ -2142,60 +2129,9 @@ def pca_project(
     vec_col: str = "embedding", scale: int = 1_000_000,
     comp_scale: int = 1_000_000_000, clamp: float = 1_000_000.0,
 ) -> DataFrame:
-    """Project every embedding onto the corpus's DOMINANT PRINCIPAL
-    COMPONENT — the dimensionality-reduction / drift-axis primitive an
-    embedding pipeline runs before coarse bucketing or monitoring.
-    Fully deterministic (and therefore SQL-oracle-expressible): the
-    covariance fold and the power iteration both run in EXACT integer
-    arithmetic, so the component — and every projection — is
-    bit-identical on any engine and any partitioning.
-
-    Three stages:
-
-    1. **Moment fold (distributed)** — components are CASE-clamped to
-       ``±clamp`` (totality on adversarial magnitudes; a CASE, not
-       least/greatest, which swallow NULLs) and scaled to integers
-       (``round(x * scale)``); a double posexplode forms the per-vector
-       outer product map-only (no self-join — Generate→Generate), and
-       ONE exchange at (i, j) cardinality (dim², corpus-independent)
-       folds ``s_ij = Σ x_i x_j``, ``m_i = Σ x_i``, ``n``.
-    2. **Power iteration (driver, model-sized)** — the dim² moment
-       table (64-dim → 4096 ints) is a MODEL, not data: fetching it is
-       the same bounded driver-fetch class as the k-center frontier.
-       The centered (scale-free) matrix ``C'_ij = n s_ij − m_i m_j``
-       feeds ``n_iter`` exact python-bigint iterations from the
-       all-ones vector, renormalized each step by truncating division
-       toward zero (matches BIGINT/HUGEINT ``//`` — python ``//``
-       floors, so negatives go through the |y| path) to
-       ``comp_scale``. Sign pin: the largest-|coordinate| (ties →
-       lowest index) is made positive.
-    3. **Projection (distributed, map-only)** — the integer component
-       ships back as a literal; each vector's projection is an exact
-       int64 dot fold presented as DOUBLE (one divide, + 0.0 to
-       normalize IEEE −0.0), rounded 6.
-
-    Overflow bounds (int_sum_overflow doctrine): |x_i| ≤ clamp·scale =
-    1e12 ⇒ s_ij terms ≤ 1e24 — folded as DECIMAL(38,0) on the Spark
-    side and HUGEINT on DuckDB, exact to 1e38 ≫ any corpus. The
-    engine's C' and iteration run in python bigint (unbounded); the
-    binding bound is the ORACLE's HUGEINT (~1.7e38) replay of the
-    pre-renormalization ``c0_ij = n·s_ij − m_i·m_j``: |c0| ≤
-    2·n²·(clamp·scale)² = 2·n²·1e24, which stays in HUGEINT range up
-    to n ≈ 1e7 rows at the ADVERSARIAL clamp (every component pinned
-    at ±clamp) and up to n ≈ 1e13 rows for real unit-normalized
-    embeddings (|x| ≤ 1, terms ≤ scale² = 1e12). Past that the oracle
-    fails LOUDLY (DuckDB HUGEINT overflow error), never silently; the
-    engine itself is exact at any n. The final projection dot is ≤
-    dim·scale·clamp·comp_scale ≈ 1e23 — DECIMAL(38,0) again. Returns
-    (id, pc1 DOUBLE): the projection in the original vector units.
-    """
-    c, d = _pca_centered_matrix(corpus, id_col, vec_col, scale, clamp)
-    if d == 0:
-        return corpus.sparkSession.createDataFrame(
-            [], f"{id_col} long, pc1 double")
-    w = _pca_power_iterate(c, d, n_iter, comp_scale)
-    return _pca_project_components(
-        corpus, [w], id_col, vec_col, scale, comp_scale, clamp)
+    """:func:`pca_topk` with k=1: (id, pc1), the dominant component."""
+    return pca_topk(corpus, 1, n_iter, id_col, vec_col, scale, comp_scale,
+                    clamp)
 
 
 def _pca_trunc_div(a: int, b: int) -> int:
@@ -2359,27 +2295,64 @@ def pca_topk(
     clamp: float = 1_000_000.0,
 ) -> DataFrame:
     """Project every embedding onto the corpus's TOP-K principal
-    components — the full dimensionality-reduction primitive
-    (whitening inputs, drift axes, coarse bucketing) extending
-    :func:`pca_project` beyond the dominant direction. Same three-stage
-    design and the same determinism contract: the moment fold, the
-    power iteration, AND the between-component DEFLATION all run in
-    exact pinned integer arithmetic, so every component and every
-    projection is bit-identical on any engine and partitioning, and a
-    SQL oracle can replay the whole chain in HUGEINT.
+    components — the dimensionality-reduction / drift-axis primitive an
+    embedding pipeline runs before whitening, coarse bucketing or
+    monitoring (:func:`pca_project` is k=1). Fully deterministic (and
+    therefore SQL-oracle-expressible): the covariance fold, the power
+    iteration AND the between-component deflation all run in EXACT
+    integer arithmetic, so every component — and every projection — is
+    bit-identical on any engine and any partitioning, and a SQL oracle
+    can replay the whole chain in HUGEINT.
 
-    After each converged component, :func:`_pca_deflate` subtracts the
-    integer rank-1 estimate (C - trunc(y y^T / w^T y) with y = C w)
-    and the next power iteration runs on the deflated matrix —
-    orthogonal eigendirections are untouched, so components emerge in
-    descending-eigenvalue order. The DISTRIBUTED cost is unchanged
-    from pca_project: ONE dim^2-cardinality exchange for the moments
-    (corpus-independent) and one map-only projection pass emitting all
-    k columns; deflation is driver-side python-bigint on the
-    model-sized matrix (k * dim^2 multiplies — microseconds at any
-    corpus size). Components beyond the matrix rank come out as the
-    frozen iteration vector (documented garbage — pass k <= rank).
-    Returns (id, pc1..pck DOUBLE) in original vector units.
+    Three stages:
+
+    1. **Moment fold (distributed)** — components are CASE-clamped to
+       ``±clamp`` (totality on adversarial magnitudes; a CASE, not
+       least/greatest, which swallow NULLs) and scaled to integers
+       (``round(x * scale)``); a double posexplode forms the per-vector
+       outer product map-only (no self-join — Generate→Generate), and
+       ONE exchange at (i, j) cardinality (dim², corpus-independent)
+       folds ``s_ij = Σ x_i x_j``, ``m_i = Σ x_i``, ``n``.
+    2. **Power iteration (driver, model-sized)** — the dim² moment
+       table (64-dim → 4096 ints) is a MODEL, not data: fetching it is
+       the same bounded driver-fetch class as the k-center frontier.
+       The centered (scale-free) matrix ``C'_ij = n s_ij − m_i m_j``
+       feeds ``n_iter`` exact python-bigint iterations from the
+       all-ones vector, renormalized each step by truncating division
+       toward zero (matches BIGINT/HUGEINT ``//`` — python ``//``
+       floors, so negatives go through the |y| path) to
+       ``comp_scale``. Sign pin: the largest-|coordinate| (ties →
+       lowest index) is made positive. After each converged component,
+       :func:`_pca_deflate` subtracts the integer rank-1 estimate
+       (C - trunc(y y^T / w^T y) with y = C w) and the next power
+       iteration runs on the deflated matrix — orthogonal
+       eigendirections are untouched, so components emerge in
+       descending-eigenvalue order. Deflation is driver-side
+       python-bigint on the model-sized matrix (k * dim^2 multiplies —
+       microseconds at any corpus size). Components beyond the matrix
+       rank come out as the frozen iteration vector (documented
+       garbage — pass k <= rank).
+    3. **Projection (distributed, map-only)** — the integer components
+       ship back as literals; each vector's projection is an exact
+       int64 dot fold presented as DOUBLE (one divide, + 0.0 to
+       normalize IEEE −0.0), rounded 6; one explode and one (id)
+       aggregate emit all k columns.
+
+    Overflow bounds (int_sum_overflow doctrine): |x_i| ≤ clamp·scale =
+    1e12 ⇒ s_ij terms ≤ 1e24 — folded as DECIMAL(38,0) on the Spark
+    side and HUGEINT on DuckDB, exact to 1e38 ≫ any corpus. The
+    engine's C' and iteration run in python bigint (unbounded); the
+    binding bound is the ORACLE's HUGEINT (~1.7e38) replay of the
+    pre-renormalization ``c0_ij = n·s_ij − m_i·m_j``: |c0| ≤
+    2·n²·(clamp·scale)² = 2·n²·1e24, which stays in HUGEINT range up
+    to n ≈ 1e7 rows at the ADVERSARIAL clamp (every component pinned
+    at ±clamp) and up to n ≈ 1e13 rows for real unit-normalized
+    embeddings (|x| ≤ 1, terms ≤ scale² = 1e12). Past that the oracle
+    fails LOUDLY (DuckDB HUGEINT overflow error), never silently; the
+    engine itself is exact at any n. The final projection dot is ≤
+    dim·scale·clamp·comp_scale ≈ 1e23 — DECIMAL(38,0) again. Returns
+    (id, pc1..pck DOUBLE): the projections in the original vector
+    units.
     """
     if k < 1:
         raise ValueError("k must be >= 1")
