@@ -56,7 +56,7 @@ _PLAN_CACHE_CAP = 16
 def _plan_cache(df: DataFrame) -> DataFrame:
     """Persist a derived intermediate that several consumers re-read
     AND truncate its logical plan to an RDD scan
-    (``localCheckpoint(eager=False)``, r13).
+    (``localCheckpoint(eager=True)``).
 
     This was ``df.cache()`` through r12. The InMemoryRelation EMBEDS
     the child plan, so under AQE every query stage that referenced a
@@ -79,8 +79,19 @@ def _plan_cache(df: DataFrame) -> DataFrame:
       from, so explicitly unpersisting one would turn any later reuse
       into a missing-block failure — reference-dropping keeps the old
       registry's "never a correctness risk" property.
+
+    The checkpoint is EAGER. A lazy one (``eager=False``, r13) is
+    marked checkpointed at the end of whichever job first computes it,
+    and consumers of the returned plan run concurrent AQE jobs: a
+    broadcast job marking the RDD (Spark's global checkpoint lock, then
+    the RDD's state lock) can race the DAG scheduler submitting a stage
+    that reads it (state lock, then the global lock) and deadlock the
+    session. Seen as a hung test run: the jstack showed exactly these
+    two threads under ``dedup_clusters``. Under AQE a lazy checkpoint
+    already ran every shuffle stage of ``df`` at this call, so eager
+    adds one result-stage job and never computes ``df`` twice.
     """
-    out = df.localCheckpoint(eager=False)
+    out = df.localCheckpoint(eager=True)
     _PLAN_CACHES.append(out)
     while len(_PLAN_CACHES) > _PLAN_CACHE_CAP:
         _PLAN_CACHES.pop(0)

@@ -566,6 +566,27 @@ def test_unpersist_plan_caches(spark):
     assert dedup.unpersist_plan_caches() == 0
 
 
+def test_plan_caches_are_checkpointed_before_the_builder_returns(spark):
+    """A plan cache is a checkpointed RDD by the time its builder
+    returns. A lazy checkpoint is marked by whichever consumer job
+    computes it first, and that can deadlock against the DAG scheduler
+    submitting a concurrent AQE stage that reads the same RDD."""
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog")] * 3
+        + [(2, "a completely different document about spark plans")],
+        "doc_id long, text string")
+    dedup.unpersist_plan_caches()
+    out = dedup.jaccard_similarity_join(df, 0.5)
+    caches = list(dedup._PLAN_CACHES)
+    assert caches
+    for cached in caches:
+        leaf = cached._jdf.queryExecution().analyzed()
+        assert leaf.nodeName() == "LogicalRDD"
+        assert leaf.rdd().isCheckpointed()
+    out.collect()
+    dedup.unpersist_plan_caches()
+
+
 def test_select_representatives_quality_argmax(spark):
     clusters = spark.createDataFrame(
         [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)],
