@@ -171,6 +171,96 @@ def h32(c: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
+# Identical-group core (shared by every near-dup pair generator)
+# ---------------------------------------------------------------------------
+
+def _identical_groups(keyed: DataFrame, id_col: str, key: str,
+                      *carry: str) -> DataFrame:
+    """Plan-cached member table ``(_mid, _rep, *carry)`` of ``keyed``:
+    ``_rep`` is the min id over the rows with an equal ``key``, so
+    ``_mid == _rep`` selects one representative per group.
+
+    Lossless whenever every decision of a pair search (blocking
+    buckets, score, threshold) is a function of ``key`` alone — each
+    caller's docstring says why its score is. Members then share their
+    representative's buckets and scores exactly: a rep pair expands to
+    every member pair with the rep pair's score (``_cross_pairs``), and
+    two members of one group pair exactly as two equal keys do
+    (``_within_pairs``, scored and gated by the caller). Real corpora
+    are duplicate-saturated, and g copies of a key would pay the search
+    g times and its pair joins g^2 times; on the representatives the
+    search follows the DISTINCT key count, and only the output grows
+    with duplication. Scale caps that count documents (shingle df, LSH
+    bucket size, fingerprint df) stay exact by summing group sizes over
+    the representatives."""
+    return _plan_cache(keyed.select(
+        F.col(id_col).alias("_mid"),
+        F.min(id_col).over(Window.partitionBy(key)).alias("_rep"),
+        *carry))
+
+
+def _rep_rows(members: DataFrame, *cols) -> DataFrame:
+    """``cols`` of the one representative row per group."""
+    return members.filter(F.col("_mid") == F.col("_rep")).select(*cols)
+
+
+def _cross_pairs(rep_pairs: DataFrame, members: DataFrame,
+                 *cols: str) -> DataFrame:
+    """Expand each representative pair ``(id_a, id_b, *cols)`` to every
+    member pair of the two groups, id_a < id_b, ``cols`` passed through."""
+    ra = members.select(F.col("_rep").alias("id_a"),
+                        F.col("_mid").alias("_xa"))
+    rb = members.select(F.col("_rep").alias("id_b"),
+                        F.col("_mid").alias("_xb"))
+    return (
+        rep_pairs.join(ra, "id_a").join(rb, "id_b")
+        .select(F.least("_xa", "_xb").alias("id_a"),
+                F.greatest("_xa", "_xb").alias("id_b"), *cols))
+
+
+def _within_pairs(members: DataFrame) -> DataFrame:
+    """Every member pair inside one group, id_a < id_b:
+    ``(_rep, id_a, *carry, id_b)`` with side a's carry columns, for the
+    caller to score and gate."""
+    carry = [c for c in members.columns if c not in ("_mid", "_rep")]
+    a = members.select("_rep", F.col("_mid").alias("id_a"), *carry)
+    b = members.select("_rep", F.col("_mid").alias("id_b"))
+    return a.join(b, "_rep").filter(F.col("id_a") < F.col("id_b"))
+
+
+def _grouped_pairs(rep_pairs: DataFrame, members: DataFrame,
+                   *self_cols: Column) -> DataFrame:
+    """The ``output="grouped"`` form (the 100 TB consumption form —
+    opt in; ``"pairs"`` stays the default because it is the oracle
+    contract): one row per representative pair, (rep_a, rep_b,
+    *scores, count_a, count_b), plus a self row (rep, rep, *self_cols,
+    g, g) per group of g >= 2 members. Lossless: expanding each rep
+    pair to count_a x count_b cross pairs and each self row to
+    g*(g-1)/2 within pairs gives the pair form, and members are
+    recoverable by joining the reps back to the member key. Output
+    volume follows DISTINCT keys, not duplication density."""
+    counts = members.groupBy("_rep").agg(
+        F.count(F.lit(1)).cast("long").alias("_cnt"))
+    selfrows = (
+        counts.filter(F.col("_cnt") >= 2)
+        .select(F.col("_rep").alias("rep_a"), F.col("_rep").alias("rep_b"),
+                *self_cols,
+                F.col("_cnt").alias("count_a"), F.col("_cnt").alias("count_b"))
+    )
+    ca = counts.select(F.col("_rep").alias("id_a"),
+                       F.col("_cnt").alias("count_a"))
+    cb = counts.select(F.col("_rep").alias("id_b"),
+                       F.col("_cnt").alias("count_b"))
+    scores = [c for c in rep_pairs.columns if c not in ("id_a", "id_b")]
+    grouped = (
+        rep_pairs.join(ca, "id_a").join(cb, "id_b")
+        .select(F.col("id_a").alias("rep_a"), F.col("id_b").alias("rep_b"),
+                *scores, "count_a", "count_b")
+    )
+    return selfrows.unionByName(grouped)
+
+
+# ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
 
@@ -233,6 +323,16 @@ def shingle_table(
     return sh
 
 
+def _shingle_set_groups(sh: DataFrame) -> DataFrame:
+    """Identical-set groups of a (``_sid``, ``shingle``) table, keyed by
+    a sha2 of each doc's sorted set. Docs with no shingle in ``sh``
+    have no set, so they never group or pair."""
+    fp = sh.groupBy("_sid").agg(
+        F.sha2(F.concat_ws("\x1f", F.array_sort(F.collect_list("shingle"))),
+               256).alias("_fp"))
+    return _identical_groups(fp, "_sid", "_fp")
+
+
 def ngram_jaccard_pairs(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3,
     threshold: float = 0.5, max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
@@ -246,22 +346,17 @@ def ngram_jaccard_pairs(
     shingle sets (``max_shingle_df`` is on by default — one ubiquitous
     shingle would otherwise make the candidate set quadratic).
 
-    Identical-set grouping (lossless, same argument as
-    ``jaccard_similarity_join``): docs are grouped by a fingerprint of
-    their sorted guarded shingle set; the inverted-index join runs on ONE
-    representative per distinct set, and rep pairs expand to group
-    members with the representative pair's jaccard (identical sets ⇒
-    identical intersections with everything, bit-for-bit the same double
-    divide). Within-group pairs are emitted directly with jaccard 1.0 —
-    exactly what the direct formula yields for equal sets (s/(s+s−s)).
-    Candidate volume follows DISTINCT-set count, so a 10×-duplicated
-    corpus no longer pays a ~100× inverted-index join blowup.
+    Identical-set grouping (``_identical_groups``): docs are grouped
+    by a fingerprint of their sorted guarded shingle set, and the
+    inverted-index join runs on one representative per distinct set.
+    Identical sets have identical intersections with everything, so a
+    cross pair's jaccard is the representative pair's, bit-for-bit the
+    same double divide; a within-group pair is 1.0, exactly what the
+    direct formula yields for equal sets (s/(s+s−s)).
 
-    ``output="grouped"`` (the 100 TB consumption form; ``"pairs"`` is
-    the default and the oracle contract): one row per DISTINCT-set pair
-    (rep_a, rep_b, jaccard, count_a, count_b) plus a (rep, rep, 1.0,
-    g, g) self row per identical-set group with g >= 2 — output volume
-    follows distinct sets, not duplication density.
+    ``output="grouped"`` (see ``_grouped_pairs``): (rep_a, rep_b,
+    jaccard, count_a, count_b) plus a (rep, rep, 1.0, g, g) self row per
+    identical-set group with g >= 2.
 
     ``group_identical=False`` disables the grouping and runs the direct
     inverted-index join over every document — the unfiltered brute
@@ -277,66 +372,20 @@ def ngram_jaccard_pairs(
         return _inverted_index_jaccard(sh, threshold)
     sh = _plan_cache(shingle_table(df, id_col, text_col, n, max_shingle_df))
 
-    # ---- identical-set grouping (guarded-set space; docs with zero
-    # guarded shingles never enter sh, so they can't pair — unchanged)
-    fp = sh.groupBy("_sid").agg(
-        F.sha2(F.concat_ws("\x1f", F.array_sort(F.collect_list("shingle"))),
-               256).alias("_fp"))
-    reps = fp.groupBy("_fp").agg(F.min("_sid").alias("_rep"))
-    members = _plan_cache(fp.join(reps, "_fp").select("_fp", "_sid", "_rep"))
-
+    members = _shingle_set_groups(sh)
     # plan-cache the representative shingle table: its consumers
-    # (sizes, both join sides) each re-ran the fingerprint aggregate +
-    # semi-join subtree uncached (guide §2.4 shared-exchange rule)
-    sh_rep = _plan_cache(
-        sh.join(reps.select(F.col("_rep").alias("_sid")), "_sid", "semi"))
+    # (sizes, both join sides) each re-ran the semi-join subtree
+    # uncached (guide §2.4 shared-exchange rule)
+    reps = _rep_rows(members, F.col("_mid").alias("_sid"))
+    sh_rep = _plan_cache(sh.join(reps, "_sid", "semi"))
     rep_pairs = _inverted_index_jaccard(sh_rep, threshold)
-
+    if threshold > 1.0:  # no pair passes, identical sets included
+        members = members.filter(F.lit(False))
     if output == "grouped":
-        counts = members.groupBy("_rep").agg(
-            F.count(F.lit(1)).cast("long").alias("_cnt"))
-        selfrows = (
-            counts.filter(F.col("_cnt") >= 2)
-            .select(F.col("_rep").alias("rep_a"),
-                    F.col("_rep").alias("rep_b"),
-                    F.lit(1.0).alias("jaccard"),
-                    F.col("_cnt").alias("count_a"),
-                    F.col("_cnt").alias("count_b"))
-        )
-        if threshold > 1.0:  # even identical sets fail the filter
-            selfrows = selfrows.filter(F.lit(False))
-        ca = counts.select(F.col("_rep").alias("id_a"),
-                           F.col("_cnt").alias("count_a"))
-        cb = counts.select(F.col("_rep").alias("id_b"),
-                           F.col("_cnt").alias("count_b"))
-        grouped = (
-            rep_pairs.join(ca, "id_a").join(cb, "id_b")
-            .select(F.col("id_a").alias("rep_a"),
-                    F.col("id_b").alias("rep_b"),
-                    "jaccard", "count_a", "count_b")
-        )
-        return selfrows.unionByName(grouped)
-
-    ma = members.select("_fp", F.col("_sid").alias("id_a"))
-    mb = members.select("_fp", F.col("_sid").alias("id_b"))
-    within = (
-        ma.join(mb, "_fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.lit(1.0).alias("jaccard"))
-    )
-    if threshold > 1.0:  # even identical sets fail the filter
-        within = within.filter(F.lit(False))
-
-    ra = members.select(F.col("_rep").alias("id_a"),
-                        F.col("_sid").alias("_xa"))
-    rb = members.select(F.col("_rep").alias("id_b"),
-                        F.col("_sid").alias("_xb"))
-    cross = (
-        rep_pairs.join(ra, "id_a").join(rb, "id_b")
-        .select(F.least("_xa", "_xb").alias("id_a"),
-                F.greatest("_xa", "_xb").alias("id_b"), "jaccard")
-    )
-    return within.unionByName(cross)
+        return _grouped_pairs(rep_pairs, members, F.lit(1.0).alias("jaccard"))
+    within = _within_pairs(members).select(
+        "id_a", "id_b", F.lit(1.0).alias("jaccard"))
+    return within.unionByName(_cross_pairs(rep_pairs, members, "jaccard"))
 
 
 def _inverted_index_jaccard(sh: DataFrame, threshold: float) -> DataFrame:
@@ -433,29 +482,23 @@ def minhash_dedup_pairs(
     """LSH candidates + signature-estimated Jaccard filter. Returns
     (id_a, id_b, est_jaccard = fraction of equal signature components).
 
-    Identical-set grouping (r12 — lossless, the module's established
-    discipline): the signature, the band keys, and therefore every
-    bucket decision are pure functions of the guarded shingle SET, so
-    g docs with identical sets paid the signature aggregate g times
-    and the bucket self-join g^2 times. Group docs by a sha2 of their
-    sorted set, sign and bucket ONE min-id representative per
-    distinct set, and expand at the end: cross pairs inherit the rep
-    pair's est_jaccard (identical signatures), within-group pairs are
-    est 1.0 (k equal components) gated on the group retaining at
-    least one bucket. The ``max_bucket_size`` cap stays EXACT: a
-    bucket's size is the member count — the sum of group sizes over
-    the distinct sets holding that band key — not the rep count, so
-    precisely the same buckets are skipped as before."""
+    Identical-set grouping (``_identical_groups``): the signature, the
+    band keys, and therefore every bucket decision are pure functions
+    of the guarded shingle SET, so docs are grouped by a sha2 of their
+    sorted set and one representative per distinct set is signed and
+    bucketed. Cross pairs inherit the rep pair's est_jaccard (identical
+    signatures); within-group pairs are est 1.0 (k equal components),
+    gated on the group retaining at least one bucket. The
+    ``max_bucket_size`` cap stays EXACT: a bucket's size is the member
+    count — the sum of group sizes over the distinct sets holding that
+    band key — not the rep count, so precisely the same buckets are
+    skipped as without the grouping."""
     sh = _plan_cache(shingle_table(df, id_col, text_col, n,
                                    max_shingle_df))
-    fp = sh.groupBy("_sid").agg(
-        F.sha2(F.concat_ws("\x1f", F.array_sort(F.collect_list("shingle"))),
-               256).alias("_fp"))
-    reps = fp.groupBy("_fp").agg(F.min("_sid").alias("_rep"))
-    members = _plan_cache(fp.join(reps, "_fp").select("_sid", "_rep"))
+    members = _shingle_set_groups(sh)
     gsz = members.groupBy("_rep").agg(F.count(F.lit(1)).alias("_gsz"))
-    sh_rep = sh.join(reps.select(F.col("_rep").alias("_sid")), "_sid",
-                     "semi")
+    reps = _rep_rows(members, F.col("_mid").alias("_sid"))
+    sh_rep = sh.join(reps, "_sid", "semi")
     sig = _plan_cache(_signature_from_shingles(sh_rep, id_col, k))
 
     exploded = _banded_rows(sig, id_col, k, bands)
@@ -489,28 +532,16 @@ def minhash_dedup_pairs(
         .filter(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
-    ra = members.select(F.col("_rep").alias("id_a"),
-                        F.col("_sid").alias("_xa"))
-    rb = members.select(F.col("_rep").alias("id_b"),
-                        F.col("_sid").alias("_xb"))
-    cross = (
-        rep_pairs.join(ra, "id_a").join(rb, "id_b")
-        .select(F.least("_xa", "_xb").alias("id_a"),
-                F.greatest("_xa", "_xb").alias("id_b"), "est_jaccard"))
+    if threshold > 1.0:  # no pair passes, identical signatures included
+        members = members.filter(F.lit(False))
     # within-group pairs: identical signatures agree on every band, so
     # the pair is a candidate iff ANY of the group's buckets survived
-    # the cap; est is exactly k/k = 1.0
+    # the cap
     wdocs = exploded.select(F.col("_bid").alias("_rep")).distinct()
-    wa = members.select("_rep", F.col("_sid").alias("id_a"))
-    wb = members.select("_rep", F.col("_sid").alias("id_b"))
     within = (
-        wa.join(wb, "_rep")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .join(wdocs, "_rep", "semi")
+        _within_pairs(members).join(wdocs, "_rep", "semi")
         .select("id_a", "id_b", F.lit(1.0).alias("est_jaccard")))
-    if threshold > 1.0:  # even identical signatures fail the filter
-        within = within.filter(F.lit(False))
-    return cross.unionByName(within)
+    return _cross_pairs(rep_pairs, members, "est_jaccard").unionByName(within)
 
 
 # ---------------------------------------------------------------------------
@@ -564,17 +595,13 @@ def simhash_pairs(
     (max_hamming+1) segments; any pair within distance must share at
     least one exact segment — join per segment bucket, never cartesian.
 
-    Identical-signature grouping (lossless, mirrors
-    jaccard_similarity_join's identical-set grouping): duplicate-
-    saturated corpora put every copy of a signature in every one of its
-    segment buckets, paying candidate cost per copy-pair. Docs sharing
-    a signature pair at Hamming 0 directly; the segment join runs on
-    one representative per DISTINCT signature and its pairs expand to
-    group members — Hamming distance depends only on the signatures,
-    so every expanded pair's distance is the representatives', exactly.
-    Measured on the 10x-replicated sf1 dir (count-shaped, isolating
-    the join from driver transfer of the 8.5M-pair result): 15.9 s ->
-    1.1 s, identical 8,532,800-pair output.
+    Identical-signature grouping (``_identical_groups``): Hamming
+    distance depends only on the signatures, so the segment join runs
+    on one representative per DISTINCT signature, every expanded pair's
+    distance is the representatives', and docs sharing a signature pair
+    at Hamming 0. Measured on the 10x-replicated sf1 dir (count-shaped,
+    isolating the join from driver transfer of the 8.5M-pair result):
+    15.9 s -> 1.1 s, identical 8,532,800-pair output.
 
     ``output`` selects the result shape:
 
@@ -583,15 +610,9 @@ def simhash_pairs(
       corpus this expands each rep-pair to count_a x count_b member
       pairs — O(g^2) OUTPUT rows that exist only to be re-grouped by
       any consumer.
-    - ``"grouped"`` (the 100 TB consumption form — opt in; pairs stays
-      the signature default because it is the oracle contract): one
-      row per DISTINCT-signature pair — (rep_a, rep_b, hamming, count_a, count_b) —
-      plus a self row (rep, rep, 0, g, g) per group with g >= 2
-      members. Lossless: the pair form is exactly the expansion
-      (count_a x count_b cross pairs per rep pair; g*(g-1)/2 within
-      pairs per self row; member ids recoverable by joining the rep
-      back to the signature table). Output volume follows DISTINCT
-      signatures, not duplication density.
+    - ``"grouped"`` (see ``_grouped_pairs``): (rep_a, rep_b, hamming,
+      count_a, count_b) plus a self row (rep, rep, 0, g, g) per group
+      with g >= 2 members.
     """
     if output not in ("pairs", "grouped"):
         raise ValueError(f"output must be 'pairs' or 'grouped', got {output!r}")
@@ -604,13 +625,10 @@ def simhash_pairs(
         F.col(id_col).alias("_hid"),
         simhash(F.col(text_col), bits).alias("sh")) \
         .filter(F.col("sh").isNotNull())
+    members = _identical_groups(sh, "_hid", "sh", "sh")
 
-    reps = sh.groupBy("sh").agg(F.min("_hid").alias("_rep"))
-    members = _plan_cache(sh.join(reps, "sh"))
-
-    rep_sh = members.filter(F.col("_hid") == F.col("_rep"))
-    segs = rep_sh.select(
-        "_hid", "sh",
+    segs = _rep_rows(
+        members, "_mid", "sh",
         F.explode(F.array(*[
             F.struct(
                 F.lit(s).alias("seg_id"),
@@ -619,9 +637,9 @@ def simhash_pairs(
             )
             for s in range(seg_n)
         ])).alias("seg"),
-    ).select("_hid", "sh", "seg.seg_id", "seg.seg_key")
-    a = segs.select(F.col("_hid").alias("id_a"), F.col("sh").alias("sh_a"), "seg_id", "seg_key")
-    b = segs.select(F.col("_hid").alias("id_b"), F.col("sh").alias("sh_b"), "seg_id", "seg_key")
+    ).select("_mid", "sh", "seg.seg_id", "seg.seg_key")
+    a = segs.select(F.col("_mid").alias("id_a"), F.col("sh").alias("sh_a"), "seg_id", "seg_key")
+    b = segs.select(F.col("_mid").alias("id_b"), F.col("sh").alias("sh_b"), "seg_id", "seg_key")
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     rep_pairs = (
         a.join(b, ["seg_id", "seg_key"])
@@ -633,48 +651,11 @@ def simhash_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
-
+    zero = F.lit(0).cast("integer").alias("hamming")
     if output == "grouped":
-        counts = members.groupBy("_rep").agg(
-            F.count(F.lit(1)).cast("long").alias("_cnt"))
-        selfrows = (
-            counts.filter(F.col("_cnt") >= 2)
-            .select(F.col("_rep").alias("rep_a"),
-                    F.col("_rep").alias("rep_b"),
-                    F.lit(0).cast("integer").alias("hamming"),
-                    F.col("_cnt").alias("count_a"),
-                    F.col("_cnt").alias("count_b"))
-        )
-        ca = counts.select(F.col("_rep").alias("id_a"),
-                           F.col("_cnt").alias("count_a"))
-        cb = counts.select(F.col("_rep").alias("id_b"),
-                           F.col("_cnt").alias("count_b"))
-        grouped = (
-            rep_pairs.join(ca, "id_a").join(cb, "id_b")
-            .select(F.col("id_a").alias("rep_a"),
-                    F.col("id_b").alias("rep_b"),
-                    "hamming", "count_a", "count_b")
-        )
-        return selfrows.unionByName(grouped)
-
-    ma = members.select("sh", F.col("_hid").alias("id_a"))
-    mb = members.select("sh", F.col("_hid").alias("id_b"))
-    within = (
-        ma.join(mb, "sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b",
-                F.lit(0).cast("integer").alias("hamming"))
-    )
-    ra = members.select(F.col("_rep").alias("id_a"),
-                        F.col("_hid").alias("_xa"))
-    rb = members.select(F.col("_rep").alias("id_b"),
-                        F.col("_hid").alias("_xb"))
-    cross = (
-        rep_pairs.join(ra, "id_a").join(rb, "id_b")
-        .select(F.least("_xa", "_xb").alias("id_a"),
-                F.greatest("_xa", "_xb").alias("id_b"), "hamming")
-    )
-    return within.unionByName(cross)
+        return _grouped_pairs(rep_pairs, members, zero)
+    within = _within_pairs(members).select("id_a", "id_b", zero)
+    return within.unionByName(_cross_pairs(rep_pairs, members, "hamming"))
 
 
 # ---------------------------------------------------------------------------
@@ -1100,32 +1081,19 @@ def jaccard_similarity_join(
     intersection count. No all-pairs stage anywhere. Returns
     ``(id_a, id_b, jaccard)``, ``id_a < id_b``, jaccard rounded to 6dp.
 
-    Identical-set grouping (lossless): real corpora are duplicate-
-    saturated — exactly the case an exact join exists to audit — and a
-    group of g byte-identical shingle sets would send every copy
-    through the prefix join, paying candidate cost g× and verify cost
-    g²×. Instead, docs are first grouped by a fingerprint of their
-    sorted shingle set; within a group every pair is emitted directly
-    with jaccard 1.0 (identical sets), and the prefix join runs on
-    ONE representative per distinct set, its pairs then expanded to
-    the group members (members share their representative's set, so
-    every expanded pair's jaccard is the representative pair's,
-    exactly). Candidate volume now follows DISTINCT-set count, immune
-    to duplicate density; the output itself is the only thing that
-    grows with duplication. Measured at the replicated sf1 dir (10
-    copies per doc, collect-shaped like the bench): 161 s → 4.4 s,
-    identical 250,600-row output.
+    Identical-set grouping (``_identical_groups``): an exact join exists
+    to audit duplicate-saturated corpora, so docs are grouped by a
+    fingerprint of their sorted shingle set and the prefix join runs on
+    one representative per distinct set. Members share their
+    representative's set, so every expanded pair's jaccard is the
+    representative pair's, exactly, and within-group pairs are 1.0.
+    Measured at the replicated sf1 dir (10 copies per doc,
+    collect-shaped like the bench): 161 s → 4.4 s, identical
+    250,600-row output.
 
-    ``output="grouped"`` (the 100 TB consumption form — opt in;
-    ``"pairs"`` is the signature default because it is the oracle
-    contract): instead of expanding rep pairs
-    to the O(g^2) member-pair form, return one row per DISTINCT-set
-    pair — (rep_a, rep_b, jaccard, count_a, count_b) — plus a self
-    row (rep, rep, 1.0, g, g) per identical-set group with g >= 2.
-    Lossless: cross pairs = count_a x count_b per rep pair, within
-    pairs = g*(g-1)/2 per self row; members recoverable by joining
-    reps back to the fingerprint table. Output volume follows
-    DISTINCT sets, not duplication density.
+    ``output="grouped"`` (see ``_grouped_pairs``): (rep_a, rep_b,
+    jaccard, count_a, count_b) plus a self row (rep, rep, 1.0, g, g)
+    per identical-set group with g >= 2.
     """
     if output not in ("pairs", "grouped"):
         raise ValueError(f"output must be 'pairs' or 'grouped', got {output!r}")
@@ -1142,65 +1110,21 @@ def jaccard_similarity_join(
     # fingerprint is bit-identical: sha2 over the sorted array equals
     # sha2 over array_sort(collect_list(exploded elements)).
     arrs = _plan_cache(_shingle_sets(df, id_col, text_col, n))
-
-    # ---- identical-set grouping --------------------------------------
-    # (docs with zero shingles never enter arrs, so they can't group)
-    reps = arrs.groupBy("_fp").agg(F.min("_jid").alias("_rep"))
-    members = _plan_cache(
-        arrs.select("_fp", "_jid").join(reps, "_fp")
-        .select("_fp", "_jid", "_rep"))
+    # docs with zero shingles never enter arrs, so they can't group
+    members = _identical_groups(arrs, "_jid", "_fp")
 
     # plan-cache the representative set table: _ppjoin_pairs reads it
     # three ways (freq explode, ranked prefix, verify arrays)
-    arr_rep = _plan_cache(
-        arrs.join(reps.select(F.col("_rep").alias("_jid")), "_jid", "semi"))
+    reps = _rep_rows(members, F.col("_mid").alias("_jid"))
+    arr_rep = _plan_cache(arrs.join(reps, "_jid", "semi"))
     rep_pairs = _ppjoin_pairs(arr_rep, threshold, t_ppm)
-
+    if t_ppm > 1_000_000:  # no pair passes, identical sets included
+        members = members.filter(F.lit(False))
     if output == "grouped":
-        counts = members.groupBy("_rep").agg(
-            F.count(F.lit(1)).cast("long").alias("_cnt"))
-        selfrows = (
-            counts.filter(F.col("_cnt") >= 2)
-            .select(F.col("_rep").alias("rep_a"),
-                    F.col("_rep").alias("rep_b"),
-                    F.lit(1.0).alias("jaccard"),
-                    F.col("_cnt").alias("count_a"),
-                    F.col("_cnt").alias("count_b"))
-        )
-        if t_ppm > 1_000_000:  # threshold > 1: even identical sets fail
-            selfrows = selfrows.filter(F.lit(False))
-        ca = counts.select(F.col("_rep").alias("id_a"),
-                           F.col("_cnt").alias("count_a"))
-        cb = counts.select(F.col("_rep").alias("id_b"),
-                           F.col("_cnt").alias("count_b"))
-        grouped = (
-            rep_pairs.join(ca, "id_a").join(cb, "id_b")
-            .select(F.col("id_a").alias("rep_a"),
-                    F.col("id_b").alias("rep_b"),
-                    "jaccard", "count_a", "count_b")
-        )
-        return selfrows.unionByName(grouped)
-
-    ma = members.select("_fp", F.col("_jid").alias("id_a"))
-    mb = members.select("_fp", F.col("_jid").alias("id_b"))
-    within = (
-        ma.join(mb, "_fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.lit(1.0).alias("jaccard"))
-    )
-    if t_ppm > 1_000_000:  # threshold > 1: nothing qualifies, even equals
-        within = within.filter(F.lit(False))
-
-    ra = members.select(F.col("_rep").alias("id_a"),
-                        F.col("_jid").alias("_xa"))
-    rb = members.select(F.col("_rep").alias("id_b"),
-                        F.col("_jid").alias("_xb"))
-    cross = (
-        rep_pairs.join(ra, "id_a").join(rb, "id_b")
-        .select(F.least("_xa", "_xb").alias("id_a"),
-                F.greatest("_xa", "_xb").alias("id_b"), "jaccard")
-    )
-    return within.unionByName(cross)
+        return _grouped_pairs(rep_pairs, members, F.lit(1.0).alias("jaccard"))
+    within = _within_pairs(members).select(
+        "id_a", "id_b", F.lit(1.0).alias("jaccard"))
+    return within.unionByName(_cross_pairs(rep_pairs, members, "jaccard"))
 
 
 def _shingle_sets(
@@ -1787,34 +1711,22 @@ def winnow_overlap(
     if output not in ("stats", "spans"):
         raise ValueError(
             f"output must be 'stats' or 'spans', got {output!r}")
-    # Identical-TEXT grouping (r12 — the jaccard identical-set / SRP
-    # identical-vector discipline applied to winnowing): every
-    # downstream decision (fingerprint values, positions, anchors,
-    # spans, char offsets) is a pure function of the text, so g docs
-    # with byte-identical texts would pay the token-window pass g
-    # times and the fingerprint/anchor self-joins g^2 times. Group
-    # docs by sha2(text) (the jaccard_similarity_join precedent), run
-    # the whole pipeline on ONE min-id representative per distinct
-    # text, then expand rep pairs to member pairs at the end. Cross
-    # pairs inherit the rep pair's row verbatim (identical texts =>
-    # identical stats and spans), with an orientation swap in spans
-    # mode when member ids order opposite to their reps'; pairs
-    # WITHIN a group (identical texts) share their whole fingerprint
-    # set (containment 1.0) and, in spans mode, the rep's
-    # self-anchor spans — both computed once per group from the rep
-    # alone. The df-cap stays exact: a fingerprint's document
-    # frequency is the SUM OF GROUP SIZES over the distinct texts
-    # holding it, not the rep count.
-    mem = _plan_cache(
-        df.select(F.col(id_col).alias("_mid"),
-                  F.sha2(F.col(text_col), 256).alias("_tk"))
-        .select("_mid",
-                F.min("_mid").over(Window.partitionBy("_tk"))
-                .alias("_mrep")))
-    gs = mem.groupBy("_mrep").agg(F.count(F.lit(1)).alias("_gsz"))
-    reps = df.join(
-        mem.filter(F.col("_mid") == F.col("_mrep"))
-        .select(F.col("_mid").alias(id_col)), id_col, "semi")
+    # Identical-TEXT grouping (_identical_groups, keyed by sha2(text)):
+    # every downstream decision (fingerprint values, positions,
+    # anchors, spans, char offsets) is a pure function of the text.
+    # Cross pairs inherit the rep pair's row verbatim, with an
+    # orientation swap in spans mode when member ids order opposite to
+    # their reps'; pairs WITHIN a group share their whole fingerprint
+    # set (containment 1.0) and, in spans mode, the rep's self-anchor
+    # spans — both computed once per group from the rep alone. The
+    # df-cap stays exact: a fingerprint's document frequency is the
+    # SUM OF GROUP SIZES over the distinct texts holding it.
+    mem = _identical_groups(
+        df.select(id_col, F.sha2(F.col(text_col), 256).alias("_tk")),
+        id_col, "_tk")
+    gs = mem.groupBy("_rep").agg(F.count(F.lit(1)).alias("_gsz"))
+    reps = df.join(_rep_rows(mem, F.col("_mid").alias(id_col)), id_col,
+                   "semi")
     # The fingerprint table feeds FOUR consumers (df-cap, per-doc
     # counts, both self-join sides); uncached, each re-derives the
     # full gram-hash pass from the scan — cache it once (the module's
@@ -1840,7 +1752,7 @@ def winnow_overlap(
             .select(F.col(id_col).alias("_fid"), "fingerprint"))
     if max_fp_df is not None:
         hot = (
-            fp.join(gs, fp["_fid"] == gs["_mrep"])
+            fp.join(gs, fp["_fid"] == gs["_rep"])
             .groupBy("fingerprint")
             .agg(F.sum("_gsz").alias("_df"))
             .filter(F.col("_df") > max_fp_df).select("fingerprint"))
@@ -1851,10 +1763,6 @@ def winnow_overlap(
     # denominators (stats) and the min_shared gate on within-group
     # self pairs (both modes)
     nf = fp.groupBy("_fid").agg(F.count(F.lit(1)).alias("_nfp"))
-    ga = mem.select(F.col("_mrep").alias("id_a"),
-                    F.col("_mid").alias("_xa"))
-    gb = mem.select(F.col("_mrep").alias("id_b"),
-                    F.col("_mid").alias("_xb"))
     if output == "spans":
         gap = (k + w - 1) if merge_gap is None else merge_gap
         ha = hits.select(F.col("_fid").alias("id_a"), "fingerprint",
@@ -1900,7 +1808,7 @@ def winnow_overlap(
         selfdocs = (
             nf.filter(F.col("_nfp") >= min_shared).select("_fid")
             .join(gs.filter(F.col("_gsz") >= 2)
-                  .select(F.col("_mrep").alias("_fid")), "_fid", "semi"))
+                  .select(F.col("_rep").alias("_fid")), "_fid", "semi"))
         sh = hits.join(selfdocs, "_fid", "semi")
         self_anchors = (
             sh.select("_fid", "fingerprint", F.col("pos").alias("_pa"),
@@ -1961,6 +1869,10 @@ def winnow_overlap(
         # the a/b column groups when the member ids order opposite to
         # their reps' (the span columns are side-specific; identical
         # texts make the swapped row exactly the member pair's)
+        ga = mem.select(F.col("_rep").alias("id_a"),
+                        F.col("_mid").alias("_xa"))
+        gb = mem.select(F.col("_rep").alias("id_b"),
+                        F.col("_mid").alias("_xb"))
         ex = (
             rep_spans.join(ga, "id_a").join(gb, "id_b")
             .filter((F.col("id_a") != F.col("id_b"))
@@ -1995,30 +1907,20 @@ def winnow_overlap(
                 F.col("_sh").cast("long").alias("shared_fps"),
                 F.round(F.col("_sh").cast("double")
                         / F.least("_na", "_nb"), 6).alias("containment")))
-    # cross pairs: every member combination inherits the rep pair's
-    # row (identical texts => identical fingerprint sets); stats
-    # columns are symmetric, so only the id order needs normalizing
-    cross = (
-        rep_stats.join(ga, "id_a").join(gb, "id_b")
-        .select(F.least("_xa", "_xb").alias("id_a"),
-                F.greatest("_xa", "_xb").alias("id_b"),
-                "shared_fps", "containment"))
-    # within-group pairs share their WHOLE post-cap fingerprint set:
-    # shared = |set| (gated by min_shared), containment = 1.0 exactly
-    # (round(n/n, 6)); groups whose rep has no fingerprints have no nf
-    # row and correctly emit nothing
+    # cross pairs: stats columns are symmetric, so only the id order
+    # needs normalizing. Within-group pairs share their WHOLE post-cap
+    # fingerprint set: shared = |set| (gated by min_shared),
+    # containment = 1.0 exactly (round(n/n, 6)); groups whose rep has
+    # no fingerprints have no nf row and correctly emit nothing
     q = nf.filter(F.col("_nfp") >= min_shared).select(
-        F.col("_fid").alias("_g"), "_nfp")
-    wa = mem.select(F.col("_mrep").alias("_g"), F.col("_mid").alias("id_a"))
-    wb = mem.select(F.col("_mrep").alias("_g"), F.col("_mid").alias("id_b"))
+        F.col("_fid").alias("_rep"), "_nfp")
     within = (
-        wa.join(wb, "_g")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .join(q, "_g")
+        _within_pairs(mem).join(q, "_rep")
         .select("id_a", "id_b",
                 F.col("_nfp").cast("long").alias("shared_fps"),
                 F.lit(1.0).alias("containment")))
-    return cross.unionByName(within)
+    return _cross_pairs(rep_stats, mem, "shared_fps",
+                        "containment").unionByName(within)
 
 
 # ---------------------------------------------------------------------------

@@ -19,7 +19,9 @@ from pyspark.sql.types import (
     ByteType, DoubleType, IntegerType, LongType, ShortType, StructField,
     StructType)
 
-from db_spark.llm.dedup import _plan_cache, h32
+from db_spark.llm.dedup import (
+    _cross_pairs, _identical_groups, _plan_cache, _rep_rows, _within_pairs,
+    h32)
 
 #: semantic_dedup only routes a cell through the per-cell GEMM verify
 #: kernel when its EXPECTED size (n / n_cells) is at or under this cap
@@ -674,37 +676,29 @@ def embedding_near_dup_pairs(
     seg_n = max_hamming + 1
     seg_bits = max(1, n_bits // seg_n)
     if _kernel_ok(corpus, id_col, threshold):
-        # Identical-vector grouping (r12 — the jaccard identical-SET
-        # grouping discipline applied to embeddings): real corpora are
-        # duplicate-saturated, and g byte-identical vectors would send
-        # every copy through the signature fold AND blow the per-bucket
-        # verify up by g^2 (the GEMM is sum-of-squared-bucket-sizes; at
-        # the 10x-replicated sf1 dir one hot bucket held ~all copies —
-        # a single-task straggler, guide §2.5). Group by the vector
-        # VALUE, run blocking + verify on ONE representative (min id)
-        # per distinct vector, then expand rep pairs to members.
-        # Exact because every decision is a function of the vector
-        # bytes alone: members have their rep's signature (same
-        # buckets), and a member pair's dim-sequential dot/norms are
-        # bit-identical to the rep pair's. Spark's group/window key
-        # normalization (NaN==NaN, -0.0==0.0) can merge sign-of-zero
-        # variants; their dots differ only in +/-0.0 intermediates, so
-        # every merged pair still rounds to the same cos_sim, and a
-        # +/-0.0 cos_sim is unreachable here (threshold > 0 gates this
-        # path). Within-group pairs (identical vectors) get the SAME
-        # guarded/rounded formula on the shared vector value — 1.0 for
-        # normal vectors, excluded for zero/NULL vectors (zero den ->
-        # 0.0, NULL never passes a positive threshold) and NaN for NaN
-        # vectors, which passes (NaN-largest) exactly like a kernel
-        # pair.
-        mem = _plan_cache(
-            corpus.select(F.col(id_col), _kernel_vec(F.col(vec_col)).alias("_vd"))
-            .select(
-                id_col, "_vd",
-                F.min(id_col).over(Window.partitionBy("_vd")).alias("_rep")))
-        reps = mem.filter(F.col(id_col) == F.col("_rep"))
-        sig = reps.select(
-            F.col(id_col), "_vd",
+        # Identical-vector grouping (dedup._identical_groups, keyed by
+        # the vector VALUE): at the 10x-replicated sf1 dir one hot
+        # bucket held ~all copies of a vector — a single-task GEMM
+        # straggler (guide §2.5). Exact because every decision is a
+        # function of the vector bytes alone: members have their rep's
+        # signature (same buckets), and a member pair's dim-sequential
+        # dot/norms are bit-identical to the rep pair's. Spark's
+        # group/window key normalization (NaN==NaN, -0.0==0.0) can
+        # merge sign-of-zero variants; their dots differ only in +/-0.0
+        # intermediates, so every merged pair still rounds to the same
+        # cos_sim, and a +/-0.0 cos_sim is unreachable here (threshold
+        # > 0 gates this path). Within-group pairs (identical vectors)
+        # get the SAME guarded/rounded formula on the shared vector
+        # value — 1.0 for normal vectors, excluded for zero/NULL
+        # vectors (zero den -> 0.0, NULL never passes a positive
+        # threshold) and NaN for NaN vectors, which passes
+        # (NaN-largest) exactly like a kernel pair.
+        mem = _identical_groups(
+            corpus.select(F.col(id_col),
+                          _kernel_vec(F.col(vec_col)).alias("_vd")),
+            id_col, "_vd", "_vd")
+        sig = _rep_rows(
+            mem, F.col("_mid").alias(id_col), "_vd",
             srp_signature(F.col("_vd"), dim, n_bits).alias("_sig"),
         )
         segs = sig.select(
@@ -719,27 +713,15 @@ def embedding_near_dup_pairs(
             .filter(F.col("cos_sim") >= threshold)
             .distinct()
         )
-        xa = mem.select(F.col("_rep").alias("id_a"),
-                        F.col(id_col).alias("_xa"))
-        xb = mem.select(F.col("_rep").alias("id_b"),
-                        F.col(id_col).alias("_xb"))
-        cross = (
-            rep_pairs.join(xa, "id_a").join(xb, "id_b")
-            .select(F.least("_xa", "_xb").alias("id_a"),
-                    F.greatest("_xa", "_xb").alias("id_b"), "cos_sim"))
         selfcos = _round_cos(
             _dot_d(F.col("_vd"), F.col("_vd")),
             _norm_d(F.col("_vd")) * _norm_d(F.col("_vd")))
-        w1 = mem.select(F.col("_rep").alias("_g"),
-                        F.col(id_col).alias("id_a"), "_vd")
-        w2 = mem.select(F.col("_rep").alias("_g"),
-                        F.col(id_col).alias("id_b"))
         within = (
-            w1.join(w2, "_g")
-            .filter(F.col("id_a") < F.col("id_b"))
+            _within_pairs(mem)
             .select("id_a", "id_b", selfcos.alias("cos_sim"))
             .filter(F.col("cos_sim") >= threshold))
-        return cross.unionByName(within).distinct()
+        return (_cross_pairs(rep_pairs, mem, "cos_sim")
+                .unionByName(within).distinct())
     # expression path: non-integral id types or non-positive thresholds
     # (where the kernel's NULL/zero-vector shortcuts would not be
     # output-equivalent) keep the original per-pair fold

@@ -3,7 +3,7 @@ story argues from (docs/SCALE.md, docs/PLAN_AUDIT.md), available to
 users designing their own pipelines: "how many shuffles does this plan
 pay, did my dimension broadcast, is there a cartesian hiding in here?"
 
-The same counters drive `scripts/audit_plans.py` (the whole-registry
+The same counters drive `scripts/measure.py audit` (the whole-registry
 audit artifact) and the `tests/test_plan_shapes.py` regression guards;
 exposing them keeps user pipelines auditable with the engine's own
 vocabulary instead of eyeballing `explain()` output.

@@ -95,6 +95,40 @@ def test_minhash_bucket_cap_counts_members_not_distinct_sets(spark):
     assert all(r["est_jaccard"] == 1.0 for r in rows)
 
 
+def test_minhash_cross_pairs_expand_losslessly(spark):
+    """Grouped minhash equals the ungrouped public pieces (signature,
+    LSH candidates, component-equality fraction) on a corpus with two
+    identical-set groups that are near-dups of each other: 3 copies of
+    A, 2 of B. A and B share two of their four bands, so those buckets
+    hold 5 members but only 2 representatives; cap 4 must skip them
+    (no cross pairs) while the A-only and B-only buckets survive. Member
+    ids order opposite to their reps' (4 > 2), so expansion must swap."""
+    base = ("alpha bravo charlie delta echo foxtrot golf hotel india "
+            "juliet kilo lima mike november oscar papa quebec romeo "
+            "sierra tango")
+    a_txt, b_txt = base, base + " uniform victor whiskey"
+    df = spark.createDataFrame(
+        [(1, a_txt), (2, b_txt), (3, b_txt), (4, a_txt), (5, a_txt)],
+        "doc_id long, text string")
+    sig = dedup.minhash_signature(df, max_shingle_df=None)
+    comps = {r.doc_id: [r[f"m{i}"] for i in range(16)]
+             for r in sig.collect()}
+
+    def est(x, y):
+        return sum(p == q for p, q in zip(comps[x], comps[y])) / 16
+
+    for cap, n_cross in ((None, 6), (4, 0)):
+        cand = dedup.lsh_candidate_pairs(sig, max_bucket_size=cap).collect()
+        want = {(r.id_a, r.id_b): est(r.id_a, r.id_b) for r in cand}
+        got = {(r.id_a, r.id_b): r.est_jaccard
+               for r in dedup.minhash_dedup_pairs(
+                   df, threshold=0.5, max_shingle_df=None,
+                   max_bucket_size=cap).collect()}
+        assert got == {p: e for p, e in want.items() if e >= 0.5}, cap
+        cross = {p for p in got if (p[0] in (1, 4, 5)) != (p[1] in (1, 4, 5))}
+        assert len(cross) == n_cross and len(got) == n_cross + 4, cap
+
+
 def test_minhash_estimates_jaccard(docs):
     pairs = {(r["id_a"], r["id_b"]): r["est_jaccard"]
              for r in dedup.minhash_dedup_pairs(docs, threshold=0.0, bands=16, k=16).collect()}
@@ -1964,6 +1998,36 @@ def test_winnow_overlap_exact_dup_containment(spark):
            dedup.winnow_overlap(df, k=4, w=4, min_shared=2).collect()}
     assert set(got) == {(1, 2)}
     assert got[(1, 2)]["containment"] == 1.0
+
+
+def test_winnow_stats_expand_duplicate_groups(spark):
+    """Stats mode on a duplicate-saturated corpus equals a Python
+    reference over the per-document fingerprint sets: 3 copies of A and
+    2 of B, which share a run. Member ids order opposite to their
+    reps' (A = {1, 5, 6}, B = {2, 3}), so cross pairs must re-order."""
+    shared = ("alpha bravo charlie delta echo foxtrot golf hotel india "
+              "juliet kilo lima")
+    a_txt = "zebra yak xray wombat " + shared + " vole urchin"
+    b_txt = shared + " tiger snake raven quail parrot otter"
+    df = spark.createDataFrame(
+        [(1, a_txt), (2, b_txt), (3, b_txt), (5, a_txt), (6, a_txt)],
+        "doc_id long, text string")
+    fps = {}
+    for r in dedup.winnow_fingerprints(df, k=4, w=4, output="fps").collect():
+        fps.setdefault(r.doc_id, set()).add(r.fingerprint)
+    want = {}
+    for x in fps:
+        for y in fps:
+            shared_fps = len(fps[x] & fps[y])
+            if x < y and shared_fps >= 2:
+                want[(x, y)] = (shared_fps, round(
+                    shared_fps / min(len(fps[x]), len(fps[y])), 6))
+    got = {(r.id_a, r.id_b): (r.shared_fps, r.containment)
+           for r in dedup.winnow_overlap(
+               df, k=4, w=4, min_shared=2, max_fp_df=None).collect()}
+    assert got == want
+    assert len(got) == 10  # 3 + 1 within pairs, 6 cross pairs
+    assert got[(1, 5)][1] == 1.0 and got[(2, 5)][1] < 1.0
 
 
 def test_winnow_hot_fingerprint_cap(spark):
